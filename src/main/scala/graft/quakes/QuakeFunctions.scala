@@ -75,9 +75,10 @@ object QuakeFunctions {
       lit(" ("), timeAgo(ts, nowMs), lit(")"))
 
   /** Dictionary lookup with default (task.ts:218,225): a map literal +
-    * `element_at` + `coalesce`. Constant-folded by Catalyst; for the
-    * broadcast-join formulation of the same lookup see
-    * [[QuakePipeline.iconLookup]].
+    * `element_at` + `coalesce`. Constant-folded by Catalyst, so the
+    * lookup costs a hash probe inside the projection — no join, no
+    * broadcast. [[QuakePipeline.transform]] uses it for both the icon
+    * and the intensity dictionary.
     */
   def lookupWithDefault(key: Column, dict: Map[Int, String],
       default: String): Column =

@@ -1,6 +1,9 @@
 package graft.quakes
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.io.IOException
+
+import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.quakes.QuakeModel._
@@ -8,49 +11,98 @@ import graft.quakes.QuakeFunctions._
 
 /** The GeoNet → CoT pipeline (reference task.ts:160-261), Spark-first.
   *
-  * Logical plan: Filter(age) ∘ Filter(quality) ∘ BroadcastJoin(icon dim) ∘
-  * Project(P1-P11). Catalyst reorders filters below the join/projection
-  * (PushDownPredicates) and folds every constant subexpression — the three
-  * manual optimizations the reference hand-codes (SURVEY.md §4) fall out
-  * automatically.
+  * Physical shape of one run: a driver-side streaming pass cuts the
+  * response body into one JSON text per feature; Spark parses those
+  * texts in `defaultParallelism` partitions, filters (age, quality) and
+  * projects (P1-P11) each row inside its partition, and the snapshot
+  * collects one pre-rendered JSON string per feature. That is ONE
+  * map-only job — no Exchange, no broadcast — on every core.
+  *
+  * Both dictionary lookups (icon P4, intensity P5) are map literals +
+  * `element_at` + default, which Catalyst constant-folds into the
+  * projection; Catalyst also pushes the two filters below it and folds
+  * every constant subexpression — the three manual optimizations the
+  * reference hand-codes (SURVEY.md §4) fall out automatically.
   *
   * `now` is captured ONCE per run and injected as a literal — matching the
   * reference's single `Date.now()` at task.ts:184 (we deliberately collapse
   * its second clock read at task.ts:221 into the same instant for
   * determinism; divergence is timing-only).
   *
-  * At scale: the input is one API snapshot today, but the plan is scale-free
-  * — the icon/intensity dictionaries are broadcast (11 rows), there is no
-  * shuffle anywhere (filter+project+broadcast-join only), so the same code
-  * runs unchanged over a 100 TB backfill of historical feature archives
-  * partitioned by event date.
+  * At scale: `transform` is a per-row filter+project over any feature
+  * frame, so the same code runs unchanged over a backfill of historical
+  * feature archives partitioned by event date; only the snapshot
+  * assembly is driver-bound, and it is one API response by definition.
   */
 object QuakePipeline {
 
+  private val Json = new JsonFactory()
+
+  private def parseError(why: String): Nothing =
+    throw new RuntimeException(s"Failed to parse data: $why")
+
+  /** Cut a GeoNet response body into the JSON text of each `features[]`
+    * element, in one streaming pass that materializes no tree. `null`
+    * elements are skipped. Anything the reference's `res.json()` /
+    * `for…of body.features` (task.ts:183,187) would throw on — a body
+    * that is not one JSON object, or whose `features` is not an array —
+    * fails with `Failed to parse data: …`, so a malformed feed can never
+    * turn into an empty snapshot that expires every live quake.
+    */
+  private[quakes] def featureTexts(body: String): Vector[String] = {
+    val p = Json.createParser(body)
+    def offset: Int = p.currentTokenLocation().getCharOffset.toInt
+    // Jackson throws on end of input anywhere below the root object, so
+    // these loops cannot spin on a truncated body
+    def features(): Vector[String] = {
+      val out = Vector.newBuilder[String]
+      var t = p.nextToken()
+      while (t != JsonToken.END_ARRAY) {
+        t match {
+          case JsonToken.VALUE_NULL =>
+          case JsonToken.START_OBJECT =>
+            val start = offset
+            p.skipChildren()
+            out += body.substring(start, offset + 1)
+          case other => parseError(s"feature is $other, not an object")
+        }
+        t = p.nextToken()
+      }
+      out.result()
+    }
+    try {
+      if (p.nextToken() != JsonToken.START_OBJECT)
+        parseError("body is not a JSON object")
+      var fs: Option[Vector[String]] = None
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val name = p.currentName()
+        val t = p.nextToken()
+        if (name != "features") p.skipChildren()
+        else if (t == JsonToken.START_ARRAY) fs = Some(features())
+        else parseError(s"features is $t, not an array")
+      }
+      if (p.nextToken() != null) parseError("trailing content after the body")
+      fs.getOrElse(parseError("body has no features array"))
+    } catch {
+      case e: IOException => parseError(e.getMessage)
+    } finally p.close()
+  }
+
   /** Parse a GeoNet API response body (a FeatureCollection JSON string)
-    * into one row per feature (reference task.ts:183 + loop at 187).
+    * into one row per feature (reference task.ts:183 + loop at 187), in
+    * `min(features, defaultParallelism)` partitions.
+    *
+    * The feature texts are parallelized as an RDD rather than a local
+    * Seq: a `LocalRelation` would let the optimizer evaluate the whole
+    * parse and projection on the driver, in one thread.
     */
   def parseFeatureCollection(spark: SparkSession, json: String): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(Seq(json)).toDF("body")
-      .select(from_json(col("body"), FeatureCollectionSchema).as("fc"))
-      .select(explode(col("fc.features")).as("feature"))
-      .select(col("feature.*"))
-  }
-
-  /** The MMI→icon dictionary as an 11-row broadcastable dimension — the
-    * idiomatic, SQL-expressible form of the reference's `Record<number,
-    * string>` lookup (task.ts:6-18; J1 in SURVEY.md §2.6).
-    */
-  def iconDim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    MmiIcons.toSeq.toDF("mmi_key", "icon_value")
-  }
-
-  /** Intensity dictionary as a 10-row dimension (task.ts:21-32). */
-  def intensityDim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    MmiIntensity.toSeq.toDF("mmi_key", "intensity_value")
+    val texts = featureTexts(json)
+    val sc = spark.sparkContext
+    val rdd = sc.parallelize(texts,
+      math.max(1, math.min(texts.size, sc.defaultParallelism)))
+    spark.read.schema(GeoNetFeatureSchema)
+      .json(spark.createDataset(rdd)(Encoders.STRING))
   }
 
   /** F1 — the reference pushes `MMI >= mmi` into the source URL
@@ -76,13 +128,8 @@ object QuakePipeline {
       // F3 (task.ts:195-204): GeoNet reclassified events are excluded
       .filter(p("quality") =!= "deleted")
 
-    // J1/P4: icon lookup as a broadcast left join + default on miss
-    val spark = features.sparkSession
-    val withIcon = filtered
-      .join(broadcast(iconDim(spark)), p("mmi") === col("mmi_key"), "left")
-      .withColumn("icon", coalesce(col("icon_value"), lit(DefaultIcon)))
-
-    // P5: intensity lookup via the constant-folded map-literal form
+    // P4/P5: icon and intensity lookups, map literal + default on miss
+    val icon = lookupWithDefault(p("mmi"), MmiIcons, DefaultIcon)
     val intensity =
       lookupWithDefault(p("mmi"), MmiIntensity, DefaultIntensity)
 
@@ -100,7 +147,7 @@ object QuakePipeline {
       format_string("Depth: %.1f km", p("depth")),
       concat(lit("Information Quality: "), p("quality")))
 
-    withIcon.select(
+    filtered.select(
       // P1 (task.ts:213)
       concat(lit("earthquake-"), p("publicID")).as("id"),
       lit("Feature").as("type"),
@@ -109,7 +156,7 @@ object QuakePipeline {
         // shortest-decimal half-boundaries (SURVEY.md §7.4 risk 1)
         format_string("M%.1f %s", p("magnitude"), p("locality")).as("callsign"),
         lit(CotType).as("type"),
-        col("icon"),
+        icon.as("icon"),
         p("time").as("time"),
         p("time").as("start"),
         staleIso.as("stale"),
@@ -141,8 +188,8 @@ object QuakePipeline {
   }
 
   /** K1 (task.ts:251-256): assemble the run's snapshot FeatureCollection as
-    * a single JSON payload. Driver-side single row — the POST itself is an
-    * external side effect outside the engine.
+    * a single JSON payload. The POST itself is an external side effect
+    * outside the engine.
     */
   def toFeatureCollectionJson(cot: DataFrame): String = snapshot(cot)._1
 
@@ -158,16 +205,20 @@ object QuakePipeline {
     * streaming expiry sink needs the id set, and a `foreachBatch` frame
     * is recomputed per action — a separate ids collect would run the
     * whole micro-batch twice.
+    *
+    * Each partition renders its own features with `to_json`, and the
+    * driver only concatenates them in partition order: the payload is
+    * byte-for-byte what `to_json` of the whole collection would print,
+    * without a shuffle of every feature to one partition.
     */
   def snapshotWithIds(cot: DataFrame): (String, Long, Seq[String]) = {
-    val row = cot.agg(collect_list(struct(col("id"), col("type"),
-      col("properties"), col("geometry"))).as("features"))
-      .select(
-        to_json(struct(lit("FeatureCollection").as("type"), col("features"))),
-        size(col("features")).cast("long"),
-        expr("transform(features, f -> f.id)"))
-      .head()
-    (row.getString(0), row.getLong(1), row.getSeq[String](2))
+    val rows = cot.select(
+      to_json(struct(col("id"), col("type"), col("properties"),
+        col("geometry"))),
+      col("id")).collect()
+    val json = rows.iterator.map(_.getString(0)).mkString(
+      """{"type":"FeatureCollection","features":[""", ",", "]}")
+    (json, rows.length.toLong, rows.toSeq.map(_.getString(1)))
   }
 
   /** J2 (task.ts:195-203 comment): the snapshot sink's expiry semantics —

@@ -11,8 +11,10 @@ import graft.sources.{GeoNetHttp, HttpTransport}
   * Network and clock are injected so the whole run is testable with a
   * fake transport and a pinned `now`; the Spark work in the middle is
   * [[QuakePipeline]] unchanged. Config errors throw before any fetch,
-  * fetch/submit non-2xx throw with the reference's messages — the caller
-  * decides whether to log-and-rethrow as task.ts:257-260 does.
+  * fetch/submit non-2xx throw with the reference's messages, and a body
+  * that is not a FeatureCollection throws `Failed to parse data: …`
+  * before anything is submitted — the caller decides whether to
+  * log-and-rethrow as task.ts:257-260 does.
   */
 object QuakeRunner {
 

@@ -82,7 +82,7 @@ object QuakeQueries {
   private def sqlStr(s: String): String = "'" + s.replace("'", "''") + "'"
 
   /** `CASE mmi WHEN k THEN 'v' ... ELSE 'default' END` from a dictionary —
-    * the oracle form of the broadcast-join (P4) / map-literal (P5) lookups.
+    * the oracle form of the map-literal icon (P4) / intensity (P5) lookups.
     */
   private def caseSql(dict: Map[Int, String], default: String): String =
     dict.toSeq.sortBy(_._1)
