@@ -1,13 +1,18 @@
 #!/usr/bin/env bash
-# DuckDB oracle check of the GeoNet pipeline's two registered queries:
-# q50_quake_pipeline (parse → filter → lookups → project on the fixture
-# feed) and q51_geonet_source (the same transform fed by the `geonet`
-# DataSource V2 connector with the MMI predicate pushed into the scan).
+# Checks of the GeoNet pipeline, in two steps:
+#  1. DuckDB oracle check of its two registered queries (the DataFrame
+#     path): q50_quake_pipeline (parse → filter → lookups → project on the
+#     fixture feed) and q51_geonet_source (the same transform fed by the
+#     `geonet` DataSource V2 connector with the MMI predicate pushed into
+#     the scan).
+#  2. The graft.quakes specs, which hold the prepared snapshot that
+#     QuakeRunner uses byte-identical to the DataFrame path.
 #
 # Usage: dev/verify_quakes.sh [out-dir] [sf-dir]
 #   out-dir  dump directory, emptied first (default /tmp/verify_quakes_out)
 #   sf-dir   test tables (default $HOME/testdata/sf0.001)
-# Exits non-zero if Verify fails, a query fails, or any compare is not PASS.
+# Exits non-zero if Verify fails, a query fails, any compare is not PASS,
+# or a graft.quakes spec fails.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -36,3 +41,6 @@ echo "[quakes] comparing against DuckDB..."
 REPORT="$(python3 dev/compare.py "$SF" "$OUT" "${QUERIES[@]}")"
 echo "$REPORT"
 grep -q "^${#QUERIES[@]} pass, 0 close, 0 fail" <<< "$REPORT"
+
+echo "[quakes] running the graft.quakes specs..."
+sbt -batch "testOnly graft.quakes.*"

@@ -48,7 +48,29 @@ object QuakeFunctions {
     * NZ wall clock; the shift (+12h NZST / +13h NZDT) is the offset.
     */
   private def nzOffsetMillis(ts: Column): Column =
-    unix_millis(from_utc_timestamp(ts, NzTz)) - unix_millis(ts)
+    nzWallMillis(ts) - unix_millis(ts)
+
+  /** Pacific/Auckland wall clock of `ts` as epoch millis of the same UTC
+    * wall clock. `from_utc_timestamp` shifts by the zone's offset at the
+    * instant, independent of the session time zone.
+    */
+  private def nzWallMillis(ts: Column): Column =
+    unix_millis(from_utc_timestamp(ts, NzTz))
+
+  private val DayMs = 24L * 3600 * 1000
+
+  /** UTC calendar date of epoch millis `ms`. */
+  private def utcDate(ms: Column): Column =
+    date_from_unix_date(floor(ms / lit(DayMs)).cast("int"))
+
+  /** Whole `unitMs` units of the UTC wall clock of `ms`, modulo `mod`:
+    * (3600000, 24) is the hour, (60000, 60) the minute, and so on.
+    */
+  private def clock(ms: Column, unitMs: Long, mod: Long): Column =
+    pmod(floor(ms / lit(unitMs)), lit(mod))
+
+  private def zeroPad(n: Column, width: Int): Column =
+    lpad(n.cast("string"), width, "0")
 
   /** task.ts:93-105 — 'NZDT' | 'NZST', fallback 'NZT'. Implemented from the
     * UTC offset instead of locale data (Intl `timeZoneName:'short'` in the
@@ -61,13 +83,23 @@ object QuakeFunctions {
       .when(nzOffsetMillis(ts) === lit(12L * 3600 * 1000), lit("NZST"))
       .otherwise(lit("NZT"))
 
-  /** task.ts:81-86,134 — en-NZ `dd/MM/yyyy` in Pacific/Auckland. */
-  def nzDate(ts: Column): Column =
-    date_format(from_utc_timestamp(ts, NzTz), "dd/MM/yyyy")
+  /** task.ts:81-86,134 — en-NZ `dd/MM/yyyy` in Pacific/Auckland. Like
+    * every rendering here it is built from date parts and clock
+    * arithmetic, not `date_format`, which would print in the session
+    * time zone.
+    */
+  def nzDate(ts: Column): Column = {
+    val d = utcDate(nzWallMillis(ts))
+    concat(zeroPad(dayofmonth(d), 2), lit("/"), zeroPad(month(d), 2),
+      lit("/"), zeroPad(year(d), 4))
+  }
 
   /** task.ts:87-92,135 — 24h `HH:mm` in Pacific/Auckland. */
-  def nzTime(ts: Column): Column =
-    date_format(from_utc_timestamp(ts, NzTz), "HH:mm")
+  def nzTime(ts: Column): Column = {
+    val ms = nzWallMillis(ts)
+    concat(zeroPad(clock(ms, 3600000L, 24), 2), lit(":"),
+      zeroPad(clock(ms, 60000L, 60), 2))
+  }
 
   /** task.ts:132-138 — `"dd/MM/yyyy, HH:mm NZST|NZDT (N units ago)"`. */
   def nzLocal(ts: Column, nowMs: Column): Column =
@@ -84,7 +116,16 @@ object QuakeFunctions {
       default: String): Column =
     coalesce(element_at(typedlit(dict), key), lit(default))
 
-  /** JS `Date.prototype.toISOString` shape: `yyyy-MM-ddTHH:mm:ss.SSSZ`. */
-  def toIso(ts: Column): Column =
-    date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
+  /** JS `Date.prototype.toISOString`: `yyyy-MM-ddTHH:mm:ss.SSSZ`, always
+    * in UTC whatever the session time zone.
+    */
+  def toIso(ts: Column): Column = {
+    val ms = unix_millis(ts)
+    val d = utcDate(ms)
+    concat(zeroPad(year(d), 4), lit("-"), zeroPad(month(d), 2), lit("-"),
+      zeroPad(dayofmonth(d), 2), lit("T"), zeroPad(clock(ms, 3600000L, 24), 2),
+      lit(":"), zeroPad(clock(ms, 60000L, 60), 2), lit(":"),
+      zeroPad(clock(ms, 1000L, 60), 2), lit("."), zeroPad(clock(ms, 1L, 1000), 3),
+      lit("Z"))
+  }
 }

@@ -3,20 +3,29 @@ package graft.quakes
 import java.io.IOException
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 import graft.quakes.QuakeModel._
 import graft.quakes.QuakeFunctions._
 
 /** The GeoNet → CoT pipeline (reference task.ts:160-261), Spark-first.
   *
-  * Physical shape of one run: a driver-side streaming pass cuts the
-  * response body into one JSON text per feature; Spark parses those
-  * texts in `defaultParallelism` partitions, filters (age, quality) and
-  * projects (P1-P11) each row inside its partition, and the snapshot
-  * collects one pre-rendered JSON string per feature. That is ONE
-  * map-only job — no Exchange, no broadcast — on every core.
+  * `transform` is the one definition of the semantics. DataFrame users
+  * (the streaming sinks, the registered queries) run it as a query; the
+  * batch runner runs it through a [[PreparedSnapshot]]: the filter /
+  * project / `to_json` of the snapshot analysed, optimised and bound
+  * once per session and config ([[prepare]]), with `now` an input
+  * column instead of a literal, so a new run clock reuses the same
+  * compiled code.
+  *
+  * Physical shape of one prepared run: a driver-side streaming pass cuts
+  * the response body into one JSON text per feature; ONE map-only job
+  * over `min(features, defaultParallelism)` partitions parses each text,
+  * filters (age, quality) and projects (P1-P11) it with the prepared
+  * evaluators and renders its JSON; the driver joins the partitions'
+  * JSON in partition order. No Exchange, no broadcast join, no planning.
   *
   * Both dictionary lookups (icon P4, intensity P5) are map literals +
   * `element_at` + default, which Catalyst constant-folds into the
@@ -24,7 +33,8 @@ import graft.quakes.QuakeFunctions._
   * every constant subexpression — the three manual optimizations the
   * reference hand-codes (SURVEY.md §4) fall out automatically.
   *
-  * `now` is captured ONCE per run and injected as a literal — matching the
+  * `now` is captured ONCE per run — a literal in a DataFrame run, a
+  * column of every input row in a prepared one — matching the
   * reference's single `Date.now()` at task.ts:184 (we deliberately collapse
   * its second clock read at task.ts:221 into the same instant for
   * determinism; divergence is timing-only).
@@ -117,8 +127,13 @@ object QuakePipeline {
     * @param cfg      validated env config (task.ts:162-172)
     * @param nowMs    run timestamp, epoch millis (task.ts:184)
     */
-  def transform(features: DataFrame, cfg: QuakeConfig, nowMs: Long): DataFrame = {
-    val now = lit(nowMs)
+  def transform(features: DataFrame, cfg: QuakeConfig, nowMs: Long): DataFrame =
+    transform(features, cfg, lit(nowMs))
+
+  /** [[transform]] with the run timestamp as any LONG epoch-millis
+    * column: a literal, or a column of `features` as in [[prepare]].
+    */
+  def transform(features: DataFrame, cfg: QuakeConfig, now: Column): DataFrame = {
     val p = col("properties")
     val eventTs = to_timestamp(p("time"))
 
@@ -212,13 +227,53 @@ object QuakePipeline {
     * without a shuffle of every feature to one partition.
     */
   def snapshotWithIds(cot: DataFrame): (String, Long, Seq[String]) = {
-    val rows = cot.select(
+    val rows = snapshotRows(cot).collect()
+    (featureCollection(rows.iterator.map(_.getString(0))), rows.length.toLong,
+      rows.toSeq.map(_.getString(1)))
+  }
+
+  /** One row per CoT feature: its JSON, then its id. */
+  private def snapshotRows(cot: DataFrame): DataFrame =
+    cot.select(
       to_json(struct(col("id"), col("type"), col("properties"),
         col("geometry"))),
-      col("id")).collect()
-    val json = rows.iterator.map(_.getString(0)).mkString(
-      """{"type":"FeatureCollection","features":[""", ",", "]}")
-    (json, rows.length.toLong, rows.toSeq.map(_.getString(1)))
+      col("id"))
+
+  /** The K1 payload around already-rendered feature JSON. */
+  private[quakes] def featureCollection(features: Iterator[String]): String =
+    features.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
+
+  /** Weak keys: a stopped session's prepared snapshots go with it. */
+  private val prepared =
+    new java.util.WeakHashMap[SparkSession, java.util.Map[QuakeConfig, PreparedSnapshot]]()
+
+  /** The session's [[PreparedSnapshot]] for `cfg`: planned on first use
+    * and again only if the session's configuration changed since, as
+    * the time zone and SQL flags are fixed in the plan.
+    */
+  def prepare(spark: SparkSession, cfg: QuakeConfig): PreparedSnapshot = {
+    val conf = spark.conf.getAll
+    prepared.synchronized {
+      val bySession = prepared.computeIfAbsent(spark, _ => new java.util.HashMap())
+      Option(bySession.get(cfg)).filter(_.conf == conf).getOrElse {
+        val p = plan(spark, cfg, conf)
+        bySession.put(cfg, p)
+        p
+      }
+    }
+  }
+
+  /** [[transform]] and [[snapshotRows]] over an empty frame of feed rows
+    * plus a `now` column, optimised but not executed.
+    */
+  private def plan(spark: SparkSession, cfg: QuakeConfig,
+      conf: Map[String, String]): PreparedSnapshot = {
+    // the feed schema as the JSON reader gives it, nullability included
+    val schema = parseFeatureCollection(spark, """{"features":[]}""").schema
+    val rows = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      schema.add(StructField("now", LongType, nullable = false)))
+    val query = snapshotRows(transform(rows, cfg, col("now")))
+    PreparedSnapshot(spark, schema, query.queryExecution.optimizedPlan, conf)
   }
 
   /** J2 (task.ts:195-203 comment): the snapshot sink's expiry semantics —

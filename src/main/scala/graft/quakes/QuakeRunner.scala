@@ -10,7 +10,8 @@ import graft.sources.{GeoNetHttp, HttpTransport}
   *
   * Network and clock are injected so the whole run is testable with a
   * fake transport and a pinned `now`; the Spark work in the middle is
-  * [[QuakePipeline]] unchanged. Config errors throw before any fetch,
+  * the session's [[PreparedSnapshot]] for the config, one map-only job
+  * per run with no query planning. Config errors throw before any fetch,
   * fetch/submit non-2xx throw with the reference's messages, and a body
   * that is not a FeatureCollection throws `Failed to parse data: …`
   * before anything is submitted — the caller decides whether to
@@ -41,9 +42,8 @@ object QuakeRunner {
     log(s"ok - Fetching earthquakes with MMI >= ${cfg.mmi} " +
       s"from the last ${jsNum(cfg.maxAgeMinutes)} minutes")
     val body = GeoNetHttp.fetchBody(transport, cfg.mmi)
-    val features = QuakePipeline.parseFeatureCollection(spark, body)
-    val cot = QuakePipeline.transform(features, cfg, nowMs)
-    val (fcJson, n) = QuakePipeline.snapshot(cot)
+    val (fcJson, n, _) =
+      QuakePipeline.prepare(spark, cfg).snapshotWithIds(spark, body, nowMs)
     // task.ts:255
     log(s"ok - fetched $n earthquakes")
     GeoNetHttp.submit(transport, submitUrl, fcJson)

@@ -1,13 +1,11 @@
 package graft.quakes
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import scala.jdk.CollectionConverters._
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.grafttest.ListenerBusBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -17,7 +15,8 @@ import graft.sources.{FakeTransport, HttpResponse}
 /** The runner's feed-validation contract and the physical shape of one
   * run: a malformed feed fails before any POST (an empty snapshot would
   * expire every live quake at the sink, task.ts:195-203), and a valid
-  * one runs as a single map-only Spark job over several partitions.
+  * one runs as a single map-only Spark job over several partitions,
+  * through a prepared snapshot that later runs reuse without compiling.
   */
 class QuakeRunnerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -26,9 +25,38 @@ class QuakeRunnerSpec extends AnyFunSuite {
   private def serving(body: String) =
     new FakeTransport(_ => HttpResponse(200, "OK", body))
 
-  private def runOn(t: FakeTransport): Long =
+  private def runOn(t: FakeTransport, nowMs: Long = FixtureNowMs): Long =
     QuakeRunner.run(spark, Map("Max Age Minutes" -> "525600"), SinkUrl,
-      transport = t, nowMs = FixtureNowMs, log = _ => ())
+      transport = t, nowMs = nowMs, log = _ => ())
+
+  /** Jobs, stages, tasks and shuffle-write bytes of the Spark work `body`
+    * starts.
+    */
+  private def counted(body: => Unit): (Int, Int, Int, Long) = {
+    val sc = spark.sparkContext
+    val jobs, stages, tasks = new AtomicInteger(0)
+    val shuffleWrite = new AtomicLong(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        tasks.addAndGet(e.stageInfo.numTasks)
+        shuffleWrite.addAndGet(
+          e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        ()
+      }
+    }
+    // deliver earlier suites' events before counting
+    ListenerBusBridge.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      ListenerBusBridge.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    (jobs.get(), stages.get(), tasks.get(), shuffleWrite.get())
+  }
 
   Seq(
     "a truncated body" -> FixtureJson.take(FixtureJson.length / 2),
@@ -82,37 +110,23 @@ class QuakeRunnerSpec extends AnyFunSuite {
 
   test("one run is exactly one Spark job, with no Exchange or " +
     "BroadcastExchange in its executed plan") {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
-    val plans =
-      java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-    val jobListener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    val planListener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    // deliver earlier suites' events before counting
-    ListenerBusBridge.waitUntilEmpty(sc)
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(planListener)
-    try {
-      val t = serving(FixtureJson)
-      assert(runOn(t) == 5)
-      ListenerBusBridge.waitUntilEmpty(sc)
-      assert(jobs.get() == 1)
-      // the snapshot collect, plus the job-less scan that converts the
-      // feature texts for the JSON reader
-      assert(plans.size() > 0)
-      plans.asScala.foreach(plan => assert(!plan.contains("Exchange"), plan))
-    } finally {
-      spark.listenerManager.unregister(planListener)
-      sc.removeSparkListener(jobListener)
-    }
+    // a prepared run executes no SQL plan: one stage and no shuffle write
+    // is the same guarantee at stage level
+    val (jobs, stages, _, shuffleWrite) =
+      counted(assert(runOn(serving(FixtureJson)) == 5))
+    assert(jobs == 1)
+    assert(stages == 1)
+    assert(shuffleWrite == 0L)
+  }
+
+  test("a second run with a new nowMs reuses the prepared snapshot and " +
+    "compiles no code") {
+    val oneJob = (1, 1, math.min(6, spark.sparkContext.defaultParallelism), 0L)
+    val compilations = CodegenMetrics.METRIC_COMPILATION_TIME
+    assert(counted(assert(runOn(serving(FixtureJson)) == 5)) == oneJob)
+    val before = compilations.getCount
+    assert(counted(assert(
+      runOn(serving(FixtureJson), FixtureNowMs + 3600 * 1000L) == 5)) == oneJob)
+    assert(compilations.getCount == before)
   }
 }
