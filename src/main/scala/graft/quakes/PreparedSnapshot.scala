@@ -33,7 +33,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * session's time zone and corrupt-record column), appends `now` to each
   * row, runs the chain and renders its features' JSON, joined with `,`;
   * the driver joins the partitions in order. The output is byte for
-  * byte [[QuakePipeline.snapshotWithIds]] of the same feed.
+  * byte one `to_json` of the `collect_list` of [[QuakePipeline.transform]]'s
+  * rows for the same feed (the oracle of QuakeSnapshotSpec).
   *
   * The task-side state — parser, compiled predicates and projections,
   * and the expressions themselves, some of which hold a stateful
@@ -69,6 +70,13 @@ final class PreparedSnapshot private (
     val json = parts.iterator.map(_._1).filter(_.nonEmpty).map(new String(_, UTF_8))
     (QuakePipeline.featureCollection(json), ids.size.toLong, ids)
   }
+
+  /** Once a re-plan has replaced this snapshot: drop the executors'
+    * copies of its plan. `unpersist`, not `destroy`, so a run still in
+    * flight keeps working: the driver keeps its copy for tasks to fetch
+    * again, until the context cleaner removes it with this snapshot.
+    */
+  private[quakes] def release(): Unit = plan.unpersist()
 }
 
 object PreparedSnapshot {

@@ -34,12 +34,6 @@ object QuakeModel {
     )))
   ))
 
-  /** A GeoNet API response body: `{features: [...]}` (task.ts:183). */
-  val FeatureCollectionSchema: StructType = StructType(Seq(
-    StructField("type", StringType),
-    StructField("features", ArrayType(GeoNetFeatureSchema))
-  ))
-
   /** Output `metadata` struct — the published layer contract
     * (GeoNetQuakeMetadata, task.ts:49-59), field order as constructed at
     * task.ts:222-232.

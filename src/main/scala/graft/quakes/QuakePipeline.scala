@@ -12,13 +12,13 @@ import graft.quakes.QuakeFunctions._
 
 /** The GeoNet → CoT pipeline (reference task.ts:160-261), Spark-first.
   *
-  * `transform` is the one definition of the semantics. DataFrame users
-  * (the streaming sinks, the registered queries) run it as a query; the
-  * batch runner runs it through a [[PreparedSnapshot]]: the filter /
-  * project / `to_json` of the snapshot analysed, optimised and bound
-  * once per session and config ([[prepare]]), with `now` an input
-  * column instead of a literal, so a new run clock reuses the same
-  * compiled code.
+  * `transform` is the one definition of the semantics. The registered
+  * queries (q50/q51) run it as a DataFrame query; every snapshot — the
+  * batch runner's and each streaming sink batch's — is built by a
+  * [[PreparedSnapshot]]: the filter / project / `to_json` of the
+  * snapshot analysed, optimised and bound once per session and config
+  * ([[prepare]]), with `now` an input column instead of a literal, so a
+  * new run clock reuses the same compiled code.
   *
   * Physical shape of one prepared run: a driver-side streaming pass cuts
   * the response body into one JSON text per feature; ONE map-only job
@@ -33,8 +33,8 @@ import graft.quakes.QuakeFunctions._
   * every constant subexpression — the three manual optimizations the
   * reference hand-codes (SURVEY.md §4) fall out automatically.
   *
-  * `now` is captured ONCE per run — a literal in a DataFrame run, a
-  * column of every input row in a prepared one — matching the
+  * `now` is captured ONCE per run — a literal in a DataFrame query, a
+  * column of every input row in a prepared snapshot — matching the
   * reference's single `Date.now()` at task.ts:184 (we deliberately collapse
   * its second clock read at task.ts:221 into the same instant for
   * determinism; divergence is timing-only).
@@ -202,43 +202,6 @@ object QuakePipeline {
     )
   }
 
-  /** K1 (task.ts:251-256): assemble the run's snapshot FeatureCollection as
-    * a single JSON payload. The POST itself is an external side effect
-    * outside the engine.
-    */
-  def toFeatureCollectionJson(cot: DataFrame): String = snapshot(cot)._1
-
-  /** K1 payload + feature count in one action (the count feeds the
-    * reference's `ok - fetched N earthquakes` log line, task.ts:255).
-    */
-  def snapshot(cot: DataFrame): (String, Long) = {
-    val (json, n, _) = snapshotWithIds(cot)
-    (json, n)
-  }
-
-  /** [[snapshot]] plus the snapshot's feature ids, still ONE action: the
-    * streaming expiry sink needs the id set, and a `foreachBatch` frame
-    * is recomputed per action — a separate ids collect would run the
-    * whole micro-batch twice.
-    *
-    * Each partition renders its own features with `to_json`, and the
-    * driver only concatenates them in partition order: the payload is
-    * byte-for-byte what `to_json` of the whole collection would print,
-    * without a shuffle of every feature to one partition.
-    */
-  def snapshotWithIds(cot: DataFrame): (String, Long, Seq[String]) = {
-    val rows = snapshotRows(cot).collect()
-    (featureCollection(rows.iterator.map(_.getString(0))), rows.length.toLong,
-      rows.toSeq.map(_.getString(1)))
-  }
-
-  /** One row per CoT feature: its JSON, then its id. */
-  private def snapshotRows(cot: DataFrame): DataFrame =
-    cot.select(
-      to_json(struct(col("id"), col("type"), col("properties"),
-        col("geometry"))),
-      col("id"))
-
   /** The K1 payload around already-rendered feature JSON. */
   private[quakes] def featureCollection(features: Iterator[String]): String =
     features.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
@@ -249,7 +212,9 @@ object QuakePipeline {
 
   /** The session's [[PreparedSnapshot]] for `cfg`: planned on first use
     * and again only if the session's configuration changed since, as
-    * the time zone and SQL flags are fixed in the plan.
+    * the time zone and SQL flags are fixed in the plan. One snapshot is
+    * kept per session and config; the one a re-plan replaces is
+    * released.
     */
   def prepare(spark: SparkSession, cfg: QuakeConfig): PreparedSnapshot = {
     val conf = spark.conf.getAll
@@ -257,13 +222,14 @@ object QuakePipeline {
       val bySession = prepared.computeIfAbsent(spark, _ => new java.util.HashMap())
       Option(bySession.get(cfg)).filter(_.conf == conf).getOrElse {
         val p = plan(spark, cfg, conf)
-        bySession.put(cfg, p)
+        Option(bySession.put(cfg, p)).foreach(_.release())
         p
       }
     }
   }
 
-  /** [[transform]] and [[snapshotRows]] over an empty frame of feed rows
+  /** [[transform]] and the snapshot's K1 rows (task.ts:251-256) — each
+    * CoT feature's JSON, then its id — over an empty frame of feed rows
     * plus a `now` column, optimised but not executed.
     */
   private def plan(spark: SparkSession, cfg: QuakeConfig,
@@ -272,7 +238,9 @@ object QuakePipeline {
     val schema = parseFeatureCollection(spark, """{"features":[]}""").schema
     val rows = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       schema.add(StructField("now", LongType, nullable = false)))
-    val query = snapshotRows(transform(rows, cfg, col("now")))
+    val query = transform(rows, cfg, col("now")).select(
+      to_json(struct(col("id"), col("type"), col("properties"), col("geometry"))),
+      col("id"))
     PreparedSnapshot(spark, schema, query.queryExecution.optimizedPlan, conf)
   }
 

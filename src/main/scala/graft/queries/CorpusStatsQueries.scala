@@ -678,7 +678,7 @@ object CorpusStatsQueries {
     */
   val q127BpeMerges: Q = (s, d) => {
     import s.implicits._
-    val merges = bpeTrain(s, documents(s, d))._1
+    val merges = bpeTrain(s, documents(s, d))
     bpeMemo.put(d, merges)
     merges.toDF("it", "pair", "n_pair").orderBy("it")
   }
@@ -688,7 +688,7 @@ object CorpusStatsQueries {
       docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    bpeTrain(s, docs)._1.toDF("it", "pair", "n_pair").orderBy("it")
+    bpeTrain(s, docs).toDF("it", "pair", "n_pair").orderBy("it")
   }
 
   /** Once-per-JVM-per-source-dir merge table (the trained-artifact memo
@@ -702,15 +702,13 @@ object CorpusStatsQueries {
 
   private[graft] def trainedMerges(s: org.apache.spark.sql.SparkSession,
       d: String): Seq[(Int, String, Long)] =
-    bpeMemo.computeIfAbsent(d, _ => bpeTrain(s, documents(s, d))._1)
+    bpeMemo.computeIfAbsent(d, _ => bpeTrain(s, documents(s, d)))
 
-  /** The shared training loop: returns the learned merges AND the
-    * fully-merged (encoded) corpus — q127 reports the former, q128
-    * counts symbols over the latter.
+  /** The shared training loop: the learned merges `(it, pair, n_pair)`,
+    * which q127 reports and q128 encodes with ([[trainedMerges]]).
     */
   private def bpeTrain(s: org.apache.spark.sql.SparkSession,
-      docs: org.apache.spark.sql.DataFrame)
-      : (Seq[(Int, String, Long)], org.apache.spark.sql.DataFrame) = {
+      docs: org.apache.spark.sql.DataFrame): Seq[(Int, String, Long)] = {
     // r21 (guide §2.3 "aggregate before you shuffle" — the Sennrich
     // trainer's own word-dictionary form): pairs never span whitespace,
     // so the corpus-grain per-position explode (one generator row per
@@ -766,14 +764,7 @@ object CorpusStatsQueries {
         it += 1
       }
     }
-    // The fully-merged corpus at doc grain — ONE chained-replace pass
-    // (the q128 encode shape) instead of the former 8 persisted
-    // corpus generations; lazily defined, consumers pay only if used.
-    val mergedTexts = docs.select(col("doc_id"),
-      merges.foldLeft(col("text")) { case (c, (i, pair, _)) =>
-        org.apache.spark.sql.functions.replace(c, lit(pair), lit(mergeSym(i)))
-      }.as("text"))
-    (merges.toSeq, mergedTexts)
+    merges.toSeq
   }
 
   /** The unrolled training rounds as chained CTE stages (`t0` →

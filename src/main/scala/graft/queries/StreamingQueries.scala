@@ -324,7 +324,7 @@ object StreamingQueries {
       .filter(_ > 0).getOrElse(4)
 
   /** Spool files per micro-batch for the NON-AUDIT streaming queries
-    * (env-overridable, SPARK_GRAFT_SPOOL_FPT, default 2).
+    * (env-overridable, SPARK_GRAFT_SPOOL_FPT, default 2, at most 2).
     *
     * r21 measurement (guide §2, §5): per-trigger wall-clock in this
     * tier is a FIXED floor — ~0.15 s incremental planning, ~0.12 s
@@ -346,7 +346,9 @@ object StreamingQueries {
     * past every real row with sentinel 2's batch still to come, so
     * watermark-gated emission (outer-join nulls, append-mode windows)
     * keeps a real batch to emit into — the same two-sentinel protocol
-    * as FPT=1. The AUDIT queries (q208/q226/q229/q231/q236/q243/q244)
+    * as FPT=1. At FPT>=3 the batches are [d,d,d], [s1,s2]: no batch is
+    * left to emit into, so final windows and outer-join rows would be
+    * lost silently, and the setting is refused. The AUDIT queries (q208/q226/q229/q231/q236/q243/q244)
     * pin per-BATCH state/metrics lifecycles and keep their explicit
     * maxFilesPerTrigger=1; q103's store lifecycle folds per batch
     * likewise. The driver-visible multi-batch queries whose specs pin
@@ -357,9 +359,18 @@ object StreamingQueries {
     * the equivalent knob is trigger sizing (files/bytes per trigger)
     * against latency SLO — a deployment decision, hence the env knob.
     */
-  private[graft] val SpoolFilesPerTrigger: Int =
-    sys.env.get("SPARK_GRAFT_SPOOL_FPT").flatMap(_.toIntOption)
-      .filter(_ > 0).getOrElse(2)
+  // lazy: a refused setting fails the spool queries that read it, not the
+  // initialisation of every query in this object
+  private[graft] lazy val SpoolFilesPerTrigger: Int =
+    spoolFilesPerTrigger(sys.env.get("SPARK_GRAFT_SPOOL_FPT"))
+
+  /** The SPARK_GRAFT_SPOOL_FPT setting: unset means 2; 1 and 2 are the
+    * only values the two-sentinel argument above covers.
+    */
+  private[graft] def spoolFilesPerTrigger(setting: Option[String]): Int =
+    setting.fold(2)(v => v.trim.toIntOption.filter(n => n == 1 || n == 2)
+      .getOrElse(throw new IllegalArgumentException(s"SPARK_GRAFT_SPOOL_FPT " +
+        s"must be 1 or 2, not '$v': at 3 or more the final windows can be lost")))
 
   private def withFewShufflePartitions[T](s: SparkSession)(body: => T): T =
     withShufflePartitions(s, StreamShufflePartitions)(body)

@@ -43,35 +43,43 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Rows come out FLAT (publicID, time, depth, magnitude, mmi, locality,
   * quality, lon, lat) — the relational view of the feed; [[GeoNetSource.nest]]
-  * rebuilds the GeoJSON nesting for [[graft.quakes.QuakePipeline]].
+  * rebuilds the GeoJSON nesting for [[graft.quakes.QuakePipeline]]. Read
+  * with `.schema(GeoNetSource.BodySchema)`, the source gives the body
+  * view instead: one row per response, its whole text in `value` — what
+  * the prepared snapshot of [[graft.streaming.QuakeStream]] consumes.
   */
 class GeoNetTableProvider extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
   override def shortName(): String = "geonet"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     GeoNetSource.FlatSchema
+  // a read schema selects the view: FlatSchema or BodySchema
+  override def supportsExternalMetadata(): Boolean = true
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new GeoNetTable(new CaseInsensitiveStringMap(properties))
+      properties: util.Map[String, String]): Table = {
+    require(schema == GeoNetSource.FlatSchema || schema == GeoNetSource.BodySchema,
+      s"geonet reads GeoNetSource.FlatSchema or GeoNetSource.BodySchema, not $schema")
+    new GeoNetTable(new CaseInsensitiveStringMap(properties), schema)
+  }
 }
 
-final class GeoNetTable(options: CaseInsensitiveStringMap) extends Table
-    with SupportsRead {
+final class GeoNetTable(options: CaseInsensitiveStringMap,
+    view: StructType) extends Table with SupportsRead {
   override def name(): String = "geonet"
-  override def schema(): StructType = GeoNetSource.FlatSchema
+  override def schema(): StructType = view
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new GeoNetScanBuilder(options)
+    new GeoNetScanBuilder(options, view)
 }
 
-final class GeoNetScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownFilters
+final class GeoNetScanBuilder(options: CaseInsensitiveStringMap,
+    schema: StructType) extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
   private var mmiMin: Option[Int] = None
   private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = GeoNetSource.FlatSchema
+  private var required: StructType = schema
 
   /** Absorb `mmi >= v` (and `mmi > v`, as `>= v+1` — mmi is integral) into
     * the source request, exactly like the reference's URL parameter. All
@@ -96,8 +104,10 @@ final class GeoNetScanBuilder(options: CaseInsensitiveStringMap)
 
   override def pushedFilters(): Array[Filter] = pushed
 
+  // the body view keeps its one column: a pruned-away `value` would
+  // leave the reader unable to tell it from an empty flat row
   override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+    if (schema == GeoNetSource.FlatSchema) required = requiredSchema
 
   override def build(): Scan =
     // lower-case the keys: DSv2 options are case-insensitive by contract,
@@ -237,26 +247,29 @@ final class GeoNetPartitionReaderFactory(mmiMin: Option[Int],
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val body = p.asInstanceOf[GeoNetInputPartition].body
+    val rows =
+      if (required == GeoNetSource.BodySchema)
+        Iterator.single(new GenericInternalRow(Array[Any](UTF8String.fromString(body))))
+      else featureRows(body)
     new PartitionReader[InternalRow] {
-      private val features = {
-        val root = new ObjectMapper().readTree(body)
-        val fs = root.path("features")
-        // the pushed filter applies before any row reaches Spark —
-        // the moral equivalent of the server-side ?MMI= parameter
-        (0 until fs.size).iterator.map(fs.get)
-          .filter(f => mmiMin.forall(m =>
-            f.path("properties").path("mmi").asInt(Int.MinValue) >= m))
-      }
+      private var current: InternalRow = _
+      override def next(): Boolean = rows.hasNext && { current = rows.next(); true }
+      override def get(): InternalRow = current
+      override def close(): Unit = ()
+    }
+  }
 
-      private var current: com.fasterxml.jackson.databind.JsonNode = _
-
-      override def next(): Boolean = {
-        if (features.hasNext) { current = features.next(); true } else false
-      }
-
-      override def get(): InternalRow = {
-        val props = current.path("properties")
-        val coords = current.path("geometry").path("coordinates")
+  /** The flat view: one row of `required` per feature. */
+  private def featureRows(body: String): Iterator[InternalRow] = {
+    val fs = new ObjectMapper().readTree(body).path("features")
+    // the pushed filter applies before any row reaches Spark —
+    // the moral equivalent of the server-side ?MMI= parameter
+    (0 until fs.size).iterator.map(fs.get)
+      .filter(f => mmiMin.forall(m =>
+        f.path("properties").path("mmi").asInt(Int.MinValue) >= m))
+      .map { feature =>
+        val props = feature.path("properties")
+        val coords = feature.path("geometry").path("coordinates")
         def str(n: String) = UTF8String.fromString(props.path(n).asText)
         val values = required.fields.map { f =>
           (f.name, f.dataType) match {
@@ -275,9 +288,6 @@ final class GeoNetPartitionReaderFactory(mmiMin: Option[Int],
         }
         new GenericInternalRow(values.asInstanceOf[Array[Any]])
       }
-
-      override def close(): Unit = ()
-    }
   }
 }
 
@@ -311,6 +321,13 @@ object GeoNetSource {
     StructField("lon", DoubleType),
     StructField("lat", DoubleType)
   ))
+
+  /** The body view: one row per response body, its text in `value` (the
+    * column name of Spark's text source, so landed files and fetches
+    * share one shape).
+    */
+  val BodySchema: StructType =
+    StructType(Seq(StructField("value", StringType, nullable = false)))
 
   /** Rebuild the GeoJSON nesting expected by QuakePipeline.transform. */
   def nest(flat: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {

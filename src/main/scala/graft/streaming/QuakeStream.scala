@@ -1,17 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.quakes.QuakeModel.{FeatureCollectionSchema, QuakeConfig}
+import graft.quakes.QuakeModel.QuakeConfig
 import graft.quakes.QuakePipeline
+import graft.sources.{GeoNetHttp, GeoNetSource, HttpTransport}
 
 /** Structured-Streaming wrapper for the quake pipeline (SURVEY.md §2.8).
   *
   * The reference runs as a platform-scheduled batch (task.ts:143); the
-  * streaming equivalent treats each fetched FeatureCollection file landing
-  * in a directory as one micro-batch snapshot: `readStream` file source →
-  * the exact same `QuakePipeline.transform` → per-batch snapshot handling
+  * streaming equivalent treats each GeoNet response body — a
+  * FeatureCollection file landing in a directory, or one fetch of the
+  * `geonet` source — as one micro-batch snapshot, and [[submitSnapshots]]
+  * runs the same prepared snapshot as [[graft.quakes.QuakeRunner]] on it
   * in `foreachBatch` (where the sink's update/expire contract lives).
   * `Trigger.AvailableNow` gives the scheduled-backfill behavior: process
   * everything that has landed, then stop — re-invocation is the schedule.
@@ -22,31 +24,21 @@ import graft.quakes.QuakePipeline
   */
 object QuakeStream {
 
-  /** One row per GeoNet feature from every FeatureCollection file that
-    * lands in `dir` (each file = one API response snapshot).
+  /** One row per FeatureCollection file that lands in `dir` (each file =
+    * one API response snapshot): its whole text, in column `value`.
     *
-    * `maxFilesPerTrigger = 1` is load-bearing for the snapshot sinks:
+    * `maxFilesPerTrigger = 1` is load-bearing for the snapshot sink:
     * one landed file IS one snapshot, and the expiry contract compares
     * consecutive snapshots. Without it, `Trigger.AvailableNow` after
-    * downtime would merge every pending file into ONE micro-batch whose
-    * id set is the union of several snapshots — ids dropped between the
-    * merged snapshots would be treated as still live (and resubmitted).
+    * downtime would merge every pending file into ONE micro-batch.
     * AvailableNow honors the cap by draining the backlog one file per
     * batch.
     */
-  def featureStream(spark: SparkSession, dir: String): DataFrame =
+  def landedBodies(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
-      .schema(FeatureCollectionSchema)
-      .option("multiLine", "true")
+      .option("wholetext", "true")
       .option("maxFilesPerTrigger", "1")
-      .json(dir)
-      .select(explode(col("features")).as("feature"))
-      .select(col("feature.*"))
-
-  /** The full streaming pipeline: landed snapshots → CoT features. */
-  def cotStream(spark: SparkSession, dir: String, cfg: QuakeConfig,
-      nowMs: Long): DataFrame =
-    QuakePipeline.transform(featureStream(spark, dir), cfg, nowMs)
+      .text(dir)
 
   /** One row per GeoNet feature per fetched snapshot, via the `geonet`
     * source's micro-batch stream: every trigger performs one feed fetch
@@ -58,68 +50,78 @@ object QuakeStream {
     spark.readStream.format("graft.sources.GeoNetTableProvider")
       .options(options).load()
 
-  /** Streaming K1 (task.ts:251-256, continuous form): each micro-batch
-    * snapshot is assembled into one FeatureCollection and POSTed through
-    * the transport seam. `Trigger.AvailableNow` = one snapshot per
-    * invocation (the reference's semantics); a processing-time trigger
-    * polls the feed continuously. Checkpointed, so a restart resumes the
-    * snapshot counter instead of double-submitting batch 0.
+  /** [[geonetStream]]'s fetches as bodies: one row per trigger, the
+    * response text in column `value`, the shape of [[landedBodies]].
     */
-  def submitEachSnapshot(cot: DataFrame, url: String,
-      transport: graft.sources.HttpTransport, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    cot.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val (fcJson, _) = QuakePipeline.snapshot(batch.toDF())
-        graft.sources.GeoNetHttp.submit(transport, url, fcJson)
-      }
-      .trigger(trigger)
-      .start()
+  def geonetBodies(spark: SparkSession,
+      options: Map[String, String]): DataFrame =
+    spark.readStream.format("graft.sources.GeoNetTableProvider")
+      .schema(GeoNetSource.BodySchema).options(options).load()
 
-  /** [[submitEachSnapshot]] plus the sink's CUMULATIVE expiry contract
-    * (J2, task.ts:195-203 comment): a long-running CloudTAK consumer
-    * holds the set of currently-live feature ids across every snapshot it
-    * has seen; when a snapshot arrives, ids live-but-absent are expired —
-    * once, in exactly the batch where they first go missing. The batch
-    * API ([[QuakePipeline.expiredIds]]) compares two frames the caller
-    * holds; a streaming query must carry that "previous snapshot" itself,
-    * ACROSS micro-batches and across restarts — an in-memory `var` would
-    * silently forget the live set on every restart and never expire ids
-    * dropped while the query was down.
+  /** Streaming K1 (task.ts:251-256, continuous form) with the sink's
+    * CUMULATIVE expiry contract (J2, task.ts:195-203 comment). Each
+    * micro-batch of `bodies` holds one response body; the sink builds its
+    * snapshot with the session's [[QuakePipeline.prepare]]d snapshot for
+    * `cfg`, as `QuakeRunner.run` does, and POSTs it through the transport
+    * seam. A body that is not a FeatureCollection fails the query with
+    * `Failed to parse data` before anything is POSTed or expired.
+    * `Trigger.AvailableNow` = one snapshot per pending body (the
+    * reference's semantics); a processing-time trigger polls the feed
+    * continuously. Checkpointed, so a restart resumes the snapshot
+    * counter instead of double-submitting batch 0.
     *
-    * State: the live-id set is written under
-    * `checkpointDir/expiry-state/<batchId>.ids` after each batch; a batch
-    * reads the newest state OLDER than itself, so a replayed batch (crash
-    * after state write, before checkpoint commit) recomputes the same
-    * expired set against the same baseline and overwrites its own state —
-    * idempotent. Set size is snapshot-sized (one API response, ~100
-    * features — task.ts:176), so driver-side text files are the honest
-    * scale match; an unbounded id universe would move this to the
+    * The clock is read once per batch, once its body is in hand: that
+    * snapshot's `now` for the age filter, `stale` and `timeAgo`, as the
+    * reference's one `Date.now()` per run (task.ts:184). It defaults to
+    * wall time, so a long-running query stamps each batch with its own
+    * instant, not the query's start. A replayed batch reads it again, as
+    * a rerun of the reference's task would; a fixed or scripted clock
+    * replays an archive deterministically.
+    *
+    * Expiry: a CloudTAK consumer holds the live feature ids across every
+    * snapshot it has seen; ids live-but-absent from a snapshot expire —
+    * once, in exactly the batch where they first go missing. The query
+    * carries that live set ACROSS micro-batches and restarts (an
+    * in-memory `var` would forget it on every restart and never expire
+    * ids dropped while the query was down): it is written under
+    * `checkpointDir/expiry-state/<batchId>.ids` after each batch, and a
+    * batch reads the newest state OLDER than itself, so a replayed batch
+    * recomputes against the same baseline and overwrites its own state —
+    * idempotent. The set is snapshot-sized (one API response, ~100
+    * features — task.ts:176), so driver-side text files match the scale;
+    * an unbounded id universe would move this to the
     * `flatMapGroupsWithState` machinery in [[EventStreaming.expireStale]].
     *
+    * @param bodies    one string column, one response body per
+    *                  micro-batch: [[landedBodies]] or [[geonetBodies]]
+    * @param clock     epoch millis, read once per batch
     * @param onExpired invoked once per batch with the ids this snapshot
     *                  expired (empty on batch 0 and on no-change batches)
     */
-  def submitWithExpiry(cot: DataFrame, url: String,
-      transport: graft.sources.HttpTransport, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+  def submitSnapshots(bodies: DataFrame, cfg: QuakeConfig, url: String,
+      transport: HttpTransport, checkpointDir: String,
+      trigger: Trigger = Trigger.AvailableNow(),
+      clock: () => Long = () => System.currentTimeMillis(),
       onExpired: (Long, Seq[String]) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
+    // the caller's session, not the query's per-run clone: the prepared
+    // snapshot is cached per session, so every invocation reuses one plan
+    val spark = bodies.sparkSession
     val stateDir = new java.io.File(checkpointDir, "expiry-state")
-    cot.writeStream
+    bodies.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // one action: a foreachBatch frame is recomputed per action, so
-        // collecting ids separately would run the whole batch twice
-        val (fcJson, _, ids) = QuakePipeline.snapshotWithIds(batch.toDF())
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val body = batch.collect() match {
+          case Array(row) => row.getString(0)
+          case rows => throw new IllegalStateException(
+            s"snapshot batch $batchId holds ${rows.length} response bodies, not 1")
+        }
+        val (fcJson, _, ids) =
+          QuakePipeline.prepare(spark, cfg).snapshotWithIds(spark, body, clock())
         val current = ids.toSet
         val live = readLiveIds(stateDir, batchId)
         val expired = (live -- current).toSeq.sorted
-        graft.sources.GeoNetHttp.submit(transport, url, fcJson)
+        GeoNetHttp.submit(transport, url, fcJson)
         onExpired(batchId, expired)
         writeLiveIds(stateDir, batchId, current)
       }

@@ -125,7 +125,8 @@ class QuakePipelineSpec extends AnyFunSuite {
   }
 
   test("FeatureCollection JSON assembly (K1, task.ts:251-254)") {
-    val json = QuakePipeline.toFeatureCollectionJson(run())
+    val (json, _, _) = QuakePipeline.prepare(spark, QuakeConfig())
+      .snapshotWithIds(spark, FixtureJson, FixtureNowMs)
     assert(json.startsWith("""{"type":"FeatureCollection","features":["""))
     assert(json.contains(""""id":"earthquake-2026p000001""""))
   }

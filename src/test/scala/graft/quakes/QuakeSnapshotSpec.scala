@@ -8,11 +8,10 @@ import graft.TestSpark
 import graft.queries.QuakeQueries.{FixtureJson, FixtureNowMs}
 import graft.quakes.QuakeModel._
 
-/** The per-partition `to_json` snapshot and the prepared snapshot against
-  * the whole-collection formulation: one `to_json` over `collect_list` of
-  * every feature behind a single-partition shuffle. All three must agree
-  * byte for byte, ids in the same order, on every feed shape and in every
-  * session time zone.
+/** The prepared snapshot against the whole-collection formulation: one
+  * `to_json` over `collect_list` of every feature behind a
+  * single-partition shuffle. Both must agree byte for byte, ids in the
+  * same order, on every feed shape and in every session time zone.
   */
 class QuakeSnapshotSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -30,24 +29,20 @@ class QuakeSnapshotSpec extends AnyFunSuite {
     (row.getString(0), row.getSeq[String](1))
   }
 
-  /** Checks the DataFrame and the prepared snapshot against the oracle
-    * and returns the snapshot JSON and feature count.
+  /** Checks the prepared snapshot against the oracle and returns the
+    * snapshot JSON and feature count.
     */
   private def assertSameSnapshot(body: String, cfg: QuakeConfig,
       nowMs: Long = FixtureNowMs, s: SparkSession = spark): (String, Long) = {
     val cot = QuakePipeline.transform(
       QuakePipeline.parseFeatureCollection(s, body), cfg, nowMs)
-    val (json, n, ids) = QuakePipeline.snapshotWithIds(cot)
     val (oracleJson, oracleIds) = collectListSnapshot(cot)
-    assert(json == oracleJson)
-    assert(ids == oracleIds)
-    assert(n == ids.size)
     val (preparedJson, preparedN, preparedIds) =
       QuakePipeline.prepare(s, cfg).snapshotWithIds(s, body, nowMs)
     assert(preparedJson == oracleJson)
     assert(preparedIds == oracleIds)
-    assert(preparedN == n)
-    (json, n)
+    assert(preparedN == preparedIds.size)
+    (preparedJson, preparedN)
   }
 
   private def count(body: String, cfg: QuakeConfig,
@@ -116,9 +111,7 @@ class QuakeSnapshotSpec extends AnyFunSuite {
   test("empty snapshot") {
     assert(count("""{"features":[]}""", QuakeConfig()) == 0)
     assert(count(FixtureJson, QuakeConfig(maxAgeMinutes = 0.0)) == 0)
-    assert(QuakePipeline.toFeatureCollectionJson(QuakePipeline.transform(
-      QuakePipeline.parseFeatureCollection(spark, """{"features":[]}"""),
-      QuakeConfig(), FixtureNowMs)) ==
+    assert(assertSameSnapshot("""{"features":[]}""", QuakeConfig())._1 ==
       """{"type":"FeatureCollection","features":[]}""")
   }
 
@@ -130,10 +123,17 @@ class QuakeSnapshotSpec extends AnyFunSuite {
     assert(!(QuakePipeline.prepare(spark, QuakeConfig(mmi = 4)) eq p))
     val other = spark.newSession()
     assert(!(QuakePipeline.prepare(other, cfg) eq p))
-    // a changed session setting is planned again
+    // a changed session setting is planned again, and the replaced
+    // snapshot is released (its plan unpersisted) without breaking a run
+    // that still holds it
     val before = QuakePipeline.prepare(other, cfg)
+    val (beforeJson, _, _) = before.snapshotWithIds(other, FixtureJson, FixtureNowMs)
     other.conf.set("spark.sql.session.timeZone", "Pacific/Auckland")
-    assert(!(QuakePipeline.prepare(other, cfg) eq before))
+    val after = QuakePipeline.prepare(other, cfg)
+    assert(!(after eq before))
+    assert(QuakePipeline.prepare(other, cfg) eq after)
+    assert(before.snapshotWithIds(other, FixtureJson, FixtureNowMs)._1 == beforeJson)
+    assert(after.snapshotWithIds(other, FixtureJson, FixtureNowMs)._1 == beforeJson)
     val schema = QuakePipeline.parseFeatureCollection(spark, """{"features":[]}""").schema
     val e = intercept[IllegalStateException](PreparedSnapshot(spark, schema,
       spark.range(1).queryExecution.optimizedPlan, Map.empty))

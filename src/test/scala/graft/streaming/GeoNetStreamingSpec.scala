@@ -8,12 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.queries.QuakeQueries.{FixtureJson, FixtureNowMs}
 import graft.quakes.QuakeModel.QuakeConfig
-import graft.quakes.QuakePipeline
 import graft.sources.{FakeTransport, GeoNetHttp, GeoNetSource, HttpResponse}
 
 /** The reference's cron loop as a continuous query: geonet micro-batch
-  * source (one fetch per trigger) → the SAME QuakePipeline.transform →
-  * per-snapshot FeatureCollection submit (streaming K1).
+  * source (one fetch per trigger) → the SAME prepared snapshot as
+  * QuakeRunner → per-snapshot FeatureCollection submit (streaming K1).
   */
 class GeoNetStreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -26,11 +25,10 @@ class GeoNetStreamingSpec extends AnyFunSuite {
     val saved = GeoNetHttp.defaultTransport
     GeoNetHttp.defaultTransport = t
     try {
-      val flat = QuakeStream.geonetStream(spark, Map.empty)
-      val cot = QuakePipeline.transform(GeoNetSource.nest(flat),
-        QuakeConfig(), FixtureNowMs)
-      val q = QuakeStream.submitEachSnapshot(cot, "https://sink.example/fc",
-        t, newCheckpoint())
+      val bodies = QuakeStream.geonetBodies(spark, Map.empty)
+      val q = QuakeStream.submitSnapshots(bodies, QuakeConfig(),
+        "https://sink.example/fc", t, newCheckpoint(),
+        clock = () => FixtureNowMs)
       q.awaitTermination()
       assert(t.gets.toSeq === Seq("https://api.geonet.org.nz/quake?MMI=5"))
       assert(t.posts.size === 1)
@@ -50,11 +48,10 @@ class GeoNetStreamingSpec extends AnyFunSuite {
     try {
       val ckpt = newCheckpoint()
       def runOnce(): Unit = {
-        val flat = QuakeStream.geonetStream(spark, Map.empty)
-        val cot = QuakePipeline.transform(GeoNetSource.nest(flat),
-          QuakeConfig(), FixtureNowMs)
-        QuakeStream.submitEachSnapshot(cot, "https://sink.example/fc",
-          t, ckpt).awaitTermination()
+        val bodies = QuakeStream.geonetBodies(spark, Map.empty)
+        QuakeStream.submitSnapshots(bodies, QuakeConfig(),
+          "https://sink.example/fc", t, ckpt,
+          clock = () => FixtureNowMs).awaitTermination()
       }
       runOnce()
       runOnce()
@@ -98,5 +95,22 @@ class GeoNetStreamingSpec extends AnyFunSuite {
     val ids = spark.table("geonet_mem").select("publicID")
       .collect().map(_.getString(0)).sorted.toSeq
     assert(ids === Seq("2026p000001", "2026p000003", "2026p000005"))
+  }
+
+  test("the read schema selects the body view: one row per fetch, the " +
+    "response text itself; any other schema is refused") {
+    val bodies = QuakeStream.geonetBodies(spark, Map("body" -> FixtureJson))
+    assert(bodies.isStreaming)
+    assert(bodies.schema === GeoNetSource.BodySchema)
+    val q = bodies.writeStream.format("memory").queryName("geonet_bodies")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", newCheckpoint())
+      .start()
+    q.awaitTermination()
+    assert(spark.table("geonet_bodies").collect().map(_.getString(0)).toSeq ===
+      Seq(FixtureJson))
+    val e = intercept[IllegalArgumentException](
+      spark.read.format("geonet").schema("publicID STRING").load())
+    assert(e.getMessage.contains("BodySchema"), e.getMessage)
   }
 }

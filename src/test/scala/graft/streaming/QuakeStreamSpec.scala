@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -12,12 +12,18 @@ import graft.queries.QuakeQueries.{FixtureJson, FixtureNowMs}
 import graft.quakes.QuakeModel.QuakeConfig
 
 /** File-source streaming wrapper: landed FeatureCollection snapshots are
-  * micro-batches through the same pipeline (scheduled-batch semantics via
-  * Trigger.AvailableNow + foreachBatch snapshot sink, which supports
-  * checkpoint recovery across restarts).
+  * micro-batches through the same prepared snapshot as QuakeRunner
+  * (scheduled-batch semantics via Trigger.AvailableNow + foreachBatch
+  * snapshot sink, which supports checkpoint recovery across restarts).
   */
 class QuakeStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  private val fixtureClock = () => FixtureNowMs
+
+  private def idsOf(payload: String): Seq[String] =
+    """"id":"(earthquake-[^"]+)"""".r.findAllMatchIn(payload)
+      .map(_.group(1)).toSeq.sorted
 
   test("landed snapshot files stream through the pipeline exactly once") {
     val dir = Files.createTempDirectory("quakes").toFile
@@ -25,19 +31,15 @@ class QuakeStreamSpec extends AnyFunSuite {
     val seen = mutable.ListBuffer.empty[Seq[String]]
 
     def runOnce(): Unit = {
-      val out = QuakeStream.cotStream(spark, dir.getAbsolutePath,
-        QuakeConfig(), FixtureNowMs)
-      assert(out.isStreaming)
-      val q = out.select("id")
-        .writeStream
-        .option("checkpointLocation", checkpoint.getAbsolutePath)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val ids = batch.collect().map(_.getString(0)).sorted.toSeq
-          seen.synchronized { seen += ids }
-          () // K1 semantics: here the snapshot would POST / replace the layer
-        }
-        .trigger(Trigger.AvailableNow()).start()
+      val bodies = QuakeStream.landedBodies(spark, dir.getAbsolutePath)
+      assert(bodies.isStreaming)
+      val transport = new graft.sources.FakeTransport(
+        _ => graft.sources.HttpResponse(200, "OK", ""))
+      val q = QuakeStream.submitSnapshots(bodies, QuakeConfig(),
+        "https://sink.example/cot", transport, checkpoint.getAbsolutePath,
+        clock = fixtureClock)
       q.awaitTermination(60000)
+      seen ++= transport.posts.map(p => idsOf(p._2))
     }
 
     // run 1: one landed file -> one snapshot batch, filters applied
@@ -68,10 +70,10 @@ class QuakeStreamSpec extends AnyFunSuite {
     // schedule — so any in-memory "previous snapshot" is lost between
     // snapshots and only the persisted expiry state can carry the live set
     def runOnce(): Unit = {
-      val out = QuakeStream.cotStream(spark, dir.getAbsolutePath,
-        QuakeConfig(), FixtureNowMs)
-      val q = QuakeStream.submitWithExpiry(out, "https://sink.example/cot",
-        transport, checkpoint.getAbsolutePath,
+      val bodies = QuakeStream.landedBodies(spark, dir.getAbsolutePath)
+      val q = QuakeStream.submitSnapshots(bodies, QuakeConfig(),
+        "https://sink.example/cot", transport, checkpoint.getAbsolutePath,
+        clock = fixtureClock,
         onExpired = (b, ids) => expiredByBatch.synchronized {
           expiredByBatch += ((b, ids))
         })
@@ -134,10 +136,10 @@ class QuakeStreamSpec extends AnyFunSuite {
     f1.setLastModified(System.currentTimeMillis() - 60000)
     f2.setLastModified(System.currentTimeMillis() - 30000)
 
-    val out = QuakeStream.cotStream(spark, dir.getAbsolutePath,
-      QuakeConfig(), FixtureNowMs)
-    val q = QuakeStream.submitWithExpiry(out, "https://sink.example/cot",
-      transport, checkpoint.getAbsolutePath,
+    val bodies = QuakeStream.landedBodies(spark, dir.getAbsolutePath)
+    val q = QuakeStream.submitSnapshots(bodies, QuakeConfig(),
+      "https://sink.example/cot", transport, checkpoint.getAbsolutePath,
+      clock = fixtureClock,
       onExpired = (b, ids) => expiredByBatch.synchronized {
         expiredByBatch += ((b, ids))
       })
@@ -147,5 +149,82 @@ class QuakeStreamSpec extends AnyFunSuite {
       0L -> Seq.empty,
       1L -> Seq("earthquake-2026p000001")))
     assert(transport.posts.size == 2)
+  }
+
+  test("each batch reads the clock once: ten minutes on, stale moves " +
+    "with it and a feature that aged out in between is dropped and expired") {
+    val dir = Files.createTempDirectory("quakes-clock").toFile
+    val checkpoint = Files.createTempDirectory("quakes-clock-ckpt").toFile
+    val transport = new graft.sources.FakeTransport(
+      _ => graft.sources.HttpResponse(200, "OK", ""))
+    val expiredByBatch = mutable.ListBuffer.empty[(Long, Seq[String])]
+
+    // the same feed lands twice; #5 (2026-08-06T12:00Z) is 720 minutes
+    // old at the first clock and 730 at the second, so a 725-minute
+    // window keeps it once
+    val f1 = new java.io.File(dir, "s1.json")
+    val f2 = new java.io.File(dir, "s2.json")
+    Files.writeString(f1.toPath, FixtureJson)
+    Files.writeString(f2.toPath, FixtureJson)
+    f1.setLastModified(System.currentTimeMillis() - 60000)
+    f2.setLastModified(System.currentTimeMillis() - 30000)
+    // one stream definition, two batches; a third read would throw
+    val clock = Iterator(FixtureNowMs, FixtureNowMs + 10 * 60000L)
+
+    val q = QuakeStream.submitSnapshots(
+      QuakeStream.landedBodies(spark, dir.getAbsolutePath),
+      QuakeConfig(maxAgeMinutes = 725.0), "https://sink.example/cot",
+      transport, checkpoint.getAbsolutePath, clock = () => clock.next(),
+      onExpired = (b, ids) => expiredByBatch.synchronized {
+        expiredByBatch += ((b, ids))
+      })
+    q.awaitTermination(60000)
+
+    assert(transport.posts.size == 2)
+    val Seq(first, second) = transport.posts.map(_._2).toSeq
+    assert(idsOf(first) == Seq("earthquake-2026p000001",
+      "earthquake-2026p000002", "earthquake-2026p000005"))
+    assert(first.contains(""""stale":"2026-08-07T00:05:00.000Z""""))
+    assert(idsOf(second) == Seq("earthquake-2026p000001",
+      "earthquake-2026p000002"))
+    assert(second.contains(""""stale":"2026-08-07T00:15:00.000Z""""))
+    assert(!second.contains("2026-08-07T00:05:00.000Z"))
+    assert(expiredByBatch.toList == List(
+      0L -> Seq.empty,
+      1L -> Seq("earthquake-2026p000005")))
+  }
+
+  test("a truncated landed file fails the query with `Failed to parse " +
+    "data` before it is POSTed, and expires nothing") {
+    val dir = Files.createTempDirectory("quakes-bad").toFile
+    val checkpoint = Files.createTempDirectory("quakes-bad-ckpt").toFile
+    val transport = new graft.sources.FakeTransport(
+      _ => graft.sources.HttpResponse(200, "OK", ""))
+    val expiredByBatch = mutable.ListBuffer.empty[(Long, Seq[String])]
+
+    val f1 = new java.io.File(dir, "s1.json")
+    val f2 = new java.io.File(dir, "s2.json")
+    Files.writeString(f1.toPath, FixtureJson)
+    Files.writeString(f2.toPath, FixtureJson.take(FixtureJson.length / 2))
+    f1.setLastModified(System.currentTimeMillis() - 60000)
+    f2.setLastModified(System.currentTimeMillis() - 30000)
+
+    val q = QuakeStream.submitSnapshots(
+      QuakeStream.landedBodies(spark, dir.getAbsolutePath), QuakeConfig(),
+      "https://sink.example/cot", transport, checkpoint.getAbsolutePath,
+      clock = fixtureClock,
+      onExpired = (b, ids) => expiredByBatch.synchronized {
+        expiredByBatch += ((b, ids))
+      })
+    val e = intercept[StreamingQueryException](q.awaitTermination(60000))
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x =>
+        Option(x.getMessage).toSeq ++ messages(x.getCause))
+    assert(messages(e).exists(_.contains("Failed to parse data")),
+      messages(e).mkString(" | "))
+    assert(transport.posts.size == 1)
+    assert(idsOf(transport.posts.head._2) == Seq("earthquake-2026p000001",
+      "earthquake-2026p000002", "earthquake-2026p000005"))
+    assert(expiredByBatch.toList == List(0L -> Seq.empty))
   }
 }

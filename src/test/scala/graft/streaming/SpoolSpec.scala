@@ -56,4 +56,16 @@ class SpoolSpec extends AnyFunSuite {
     StreamingQueries.resetSpools()
     assert(StreamingQueries.ensureEventSpool(spark, sf) == "reused")
   }
+
+  test("SPARK_GRAFT_SPOOL_FPT accepts 1 or 2 (unset = 2) and refuses " +
+    "anything else by name") {
+    assert(StreamingQueries.spoolFilesPerTrigger(None) == 2)
+    assert(StreamingQueries.spoolFilesPerTrigger(Some("2")) == 2)
+    assert(StreamingQueries.spoolFilesPerTrigger(Some("1")) == 1)
+    Seq("3", "0", "x").foreach { v =>
+      val e = intercept[IllegalArgumentException](
+        StreamingQueries.spoolFilesPerTrigger(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_SPOOL_FPT"), v)
+    }
+  }
 }
