@@ -8,9 +8,11 @@
 #  2. The specs of the snapshot path: the graft.quakes specs, which hold
 #     the prepared snapshot (the one snapshot path, used by QuakeRunner and
 #     the streaming sink) byte-identical to a `to_json(collect_list(...))`
-#     oracle over transform, and QuakeStreamSpec and GeoNetStreamingSpec,
-#     which run it from landed files and `geonet` fetches with the sink's
-#     per-batch clock and expiry contract.
+#     oracle over transform; GeoNetSourceSpec, which holds the `geonet`
+#     source's flat rows (read with the snapshot's feed parser) equal to
+#     the JSON reader's on odd and null fields; and QuakeStreamSpec and
+#     GeoNetStreamingSpec, which run the snapshot from landed files and
+#     `geonet` fetches with the sink's per-batch clock and expiry contract.
 #
 # Usage: dev/verify_quakes.sh [out-dir] [sf-dir]
 #   out-dir  dump directory, emptied first (default /tmp/verify_quakes_out)
@@ -47,4 +49,4 @@ echo "$REPORT"
 grep -q "^${#QUERIES[@]} pass, 0 close, 0 fail" <<< "$REPORT"
 
 echo "[quakes] running the snapshot specs..."
-sbt -batch "testOnly graft.quakes.* graft.streaming.QuakeStreamSpec graft.streaming.GeoNetStreamingSpec"
+sbt -batch "testOnly graft.quakes.* graft.sources.GeoNetSourceSpec graft.streaming.QuakeStreamSpec graft.streaming.GeoNetStreamingSpec"

@@ -12,14 +12,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BasePredicate, BindReferences,
   Expression, ExpressionsEvaluator, GenericInternalRow, JoinedRow, Predicate,
   UnsafeProjection}
-import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions,
-  JacksonParser}
+import org.apache.spark.sql.catalyst.json.JSONOptions
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.util.FailureSafeParser
 import org.apache.spark.sql.classic.ClassicConversions._
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The GeoNet snapshot query of one session and config, planned once:
   * [[QuakePipeline.transform]] and the snapshot's `to_json` projection,
@@ -29,10 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * run clock with the same generated code.
   *
   * A run is then ONE map-only job: each task parses its feature texts
-  * the way `DataFrameReader.json(Dataset[String])` does (PERMISSIVE, the
-  * session's time zone and corrupt-record column), appends `now` to each
-  * row, runs the chain and renders its features' JSON, joined with `,`;
-  * the driver joins the partitions in order. The output is byte for
+  * with the feed reader's [[QuakePipeline.featureParser]] in the
+  * session's options, appends `now` to each row, runs the chain and
+  * renders its features' JSON, joined with `,`; the driver joins the
+  * partitions in order. The output is byte for
   * byte one `to_json` of the `collect_list` of [[QuakePipeline.transform]]'s
   * rows for the same feed (the oracle of QuakeSnapshotSpec).
   *
@@ -87,23 +83,21 @@ object PreparedSnapshot {
   /** A `Project`: the bound output columns. */
   private final case class Compute(columns: Seq[Expression]) extends Step
 
-  /** What a task needs: the feed schema and reader options for the
-    * parser, and the steps from the feed row up to `(json, id)`.
+  /** What a task needs: the reader options for the feed parser, and the
+    * steps from the feed row up to `(json, id)`.
     */
-  private final case class Plan(schema: StructType,
-      options: JSONOptions, steps: Seq[Step])
+  private final case class Plan(options: JSONOptions, steps: Seq[Step])
 
   private val nextId = new AtomicLong()
 
-  /** @param schema the feed schema as the JSON reader gives it
-    * @param query  the optimised snapshot query over a `LogicalRDD` of
-    *               `schema` plus a LONG `now` column
+  /** @param query the optimised snapshot query over a `LogicalRDD` of
+    *              [[QuakeModel.GeoNetFeatureSchema]] plus a LONG `now` column
     * @throws IllegalStateException if the query is not a chain of
     *         `Project`/`Filter` over that scan
     */
-  private[quakes] def apply(spark: SparkSession, schema: StructType,
-      query: LogicalPlan, conf: Map[String, String]): PreparedSnapshot = {
-    val feedColumns = (schema.fieldNames :+ "now").toSeq
+  private[quakes] def apply(spark: SparkSession, query: LogicalPlan,
+      conf: Map[String, String]): PreparedSnapshot = {
+    val feedColumns = (QuakeModel.GeoNetFeatureSchema.fieldNames :+ "now").toSeq
     def steps(p: LogicalPlan): List[Step] = p match {
       case Project(columns, child) =>
         Compute(BindReferences.bindReferences(columns, child.output)) :: steps(child)
@@ -114,10 +108,8 @@ object PreparedSnapshot {
         s"cannot prepare the snapshot: ${other.nodeName} in a plan that may " +
           s"only hold Project and Filter over the feed scan:\n$query")
     }
-    val sqlConf = spark.sessionState.conf
-    val options = new JSONOptions(Map.empty[String, String],
-      sqlConf.sessionLocalTimeZone, sqlConf.columnNameOfCorruptRecord)
-    val plan = Plan(schema, options, steps(query).reverse)
+    val plan = Plan(QuakePipeline.feedOptions(spark.sessionState.conf),
+      steps(query).reverse)
     val bytes = SparkEnv.get.closureSerializer.newInstance().serialize(plan)
     new PreparedSnapshot(conf, nextId.incrementAndGet(),
       spark.sparkContext.broadcast(bytes.array.take(bytes.limit)))
@@ -139,16 +131,7 @@ object PreparedSnapshot {
         .deserialize[Plan](ByteBuffer.wrap(plan.value))))
 
   private final class Evaluators(plan: Plan) {
-    private val options = plan.options
-    private val parser = {
-      // as DataFrameReader.json: the corrupt-record column is not parsed
-      val parsed = StructType(
-        plan.schema.filterNot(_.name == options.columnNameOfCorruptRecord))
-      val raw = new JacksonParser(parsed, options, allowArrayAsStructs = true)
-      new FailureSafeParser[String](
-        raw.parse(_, CreateJacksonParser.string, UTF8String.fromString),
-        options.parseMode, plan.schema, options.columnNameOfCorruptRecord)
-    }
+    private val parser = QuakePipeline.featureParser(plan.options)
     private val steps: Array[ExpressionsEvaluator] = plan.steps.map {
       case Keep(condition) => Predicate.create(condition)
       case Compute(columns) => UnsafeProjection.create(columns)

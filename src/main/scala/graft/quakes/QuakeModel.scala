@@ -15,13 +15,15 @@ object QuakeModel {
   /** Input row: one GeoJSON Feature from the GeoNet quake API (task.ts:64-79).
     * `time` stays a string column at ingest (the reference passes the raw
     * ISO-8601 string through to several output fields, task.ts:219-230);
-    * it is parsed to TimestampType only where arithmetic needs it.
+    * it is parsed to TimestampType only where arithmetic needs it. Every
+    * field is nullable, as the JSON reader gives it: one constant for
+    * `parseFeatureCollection`, the prepared snapshot and the `geonet` source.
     */
   val GeoNetFeatureSchema: StructType = StructType(Seq(
     StructField("type", StringType),
     StructField("properties", StructType(Seq(
-      StructField("publicID", StringType, nullable = false),
-      StructField("time", StringType, nullable = false),
+      StructField("publicID", StringType),
+      StructField("time", StringType),
       StructField("depth", DoubleType),
       StructField("magnitude", DoubleType),
       StructField("mmi", IntegerType),

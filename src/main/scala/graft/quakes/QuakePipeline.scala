@@ -4,8 +4,12 @@ import java.io.IOException
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JacksonParser}
+import org.apache.spark.sql.catalyst.util.FailureSafeParser
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.quakes.QuakeModel._
 import graft.quakes.QuakeFunctions._
@@ -20,12 +24,13 @@ import graft.quakes.QuakeFunctions._
   * ([[prepare]]), with `now` an input column instead of a literal, so a
   * new run clock reuses the same compiled code.
   *
-  * Physical shape of one prepared run: a driver-side streaming pass cuts
-  * the response body into one JSON text per feature; ONE map-only job
-  * over `min(features, defaultParallelism)` partitions parses each text,
-  * filters (age, quality) and projects (P1-P11) it with the prepared
-  * evaluators and renders its JSON; the driver joins the partitions'
-  * JSON in partition order. No Exchange, no broadcast join, no planning.
+  * Physical shape of one prepared run: a driver-side streaming pass
+  * ([[featureTexts]]) cuts the response body into one JSON text per
+  * feature; ONE map-only job over `min(features, defaultParallelism)`
+  * partitions parses each text ([[featureParser]]), filters (age,
+  * quality), projects (P1-P11) and renders it; the driver joins the
+  * partitions' JSON in order. No Exchange, no broadcast join, no planning.
+  * The `geonet` source's flat view reads bodies with the same two.
   *
   * Both dictionary lookups (icon P4, intensity P5) are map literals +
   * `element_at` + default, which Catalyst constant-folds into the
@@ -59,7 +64,7 @@ object QuakePipeline {
     * fails with `Failed to parse data: …`, so a malformed feed can never
     * turn into an empty snapshot that expires every live quake.
     */
-  private[quakes] def featureTexts(body: String): Vector[String] = {
+  private[graft] def featureTexts(body: String): Vector[String] = {
     val p = Json.createParser(body)
     def offset: Int = p.currentTokenLocation().getCharOffset.toInt
     // Jackson throws on end of input anywhere below the root object, so
@@ -98,6 +103,26 @@ object QuakePipeline {
     } finally p.close()
   }
 
+  /** [[featureParser]]'s options as `DataFrameReader.json` builds them in
+    * a session with `conf`: PERMISSIVE, its time zone and corrupt column. */
+  private[graft] def feedOptions(conf: SQLConf): JSONOptions =
+    new JSONOptions(Map.empty[String, String],
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+
+  /** The parser that `spark.read.schema(GeoNetFeatureSchema).json` runs
+    * on each feature text: one [[GeoNetFeatureSchema]] row per text.
+    * Not thread-safe, so each task builds its own.
+    */
+  private[graft] def featureParser(options: JSONOptions): FailureSafeParser[String] = {
+    // as DataFrameReader.json: the corrupt-record column is not parsed
+    val parsed = StructType(
+      GeoNetFeatureSchema.filterNot(_.name == options.columnNameOfCorruptRecord))
+    val raw = new JacksonParser(parsed, options, allowArrayAsStructs = true)
+    new FailureSafeParser[String](
+      raw.parse(_, CreateJacksonParser.string, UTF8String.fromString),
+      options.parseMode, GeoNetFeatureSchema, options.columnNameOfCorruptRecord)
+  }
+
   /** Parse a GeoNet API response body (a FeatureCollection JSON string)
     * into one row per feature (reference task.ts:183 + loop at 187), in
     * `min(features, defaultParallelism)` partitions.
@@ -114,12 +139,6 @@ object QuakePipeline {
     spark.read.schema(GeoNetFeatureSchema)
       .json(spark.createDataset(rdd)(Encoders.STRING))
   }
-
-  /** F1 — the reference pushes `MMI >= mmi` into the source URL
-    * (task.ts:176). Against a materialized table the same predicate is a
-    * plain filter that Catalyst pushes into the parquet scan.
-    */
-  def mmiFilter(cfg: QuakeConfig): Column = col("properties.mmi") >= cfg.mmi
 
   /** Full transform: GeoNet feature rows → CoT feature rows.
     *
@@ -234,20 +253,11 @@ object QuakePipeline {
     */
   private def plan(spark: SparkSession, cfg: QuakeConfig,
       conf: Map[String, String]): PreparedSnapshot = {
-    // the feed schema as the JSON reader gives it, nullability included
-    val schema = parseFeatureCollection(spark, """{"features":[]}""").schema
     val rows = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      schema.add(StructField("now", LongType, nullable = false)))
+      GeoNetFeatureSchema.add(StructField("now", LongType, nullable = false)))
     val query = transform(rows, cfg, col("now")).select(
       to_json(struct(col("id"), col("type"), col("properties"), col("geometry"))),
       col("id"))
-    PreparedSnapshot(spark, schema, query.queryExecution.optimizedPlan, conf)
+    PreparedSnapshot(spark, query.queryExecution.optimizedPlan, conf)
   }
-
-  /** J2 (task.ts:195-203 comment): the snapshot sink's expiry semantics —
-    * ids present in the previous snapshot but absent from the current one
-    * are expired. A left-anti join computes the expired set.
-    */
-  def expiredIds(previous: DataFrame, current: DataFrame): DataFrame =
-    previous.select("id").join(current.select("id"), Seq("id"), "left_anti")
 }

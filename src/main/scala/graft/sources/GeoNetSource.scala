@@ -5,17 +5,22 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.analysis.caseSensitiveResolution
+import org.apache.spark.sql.catalyst.expressions
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+  ExtractValue, GenericInternalRow, Literal, Predicate, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{Filter, GreaterThan, GreaterThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.quakes.QuakeModel.GeoNetFeatureSchema
+import graft.quakes.QuakePipeline
 
 /** DataSource V2 connector for the GeoNet quake feed — `format("geonet")`.
   *
@@ -24,15 +29,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * data moves. This connector expresses the same optimization the Spark
   * way: [[GeoNetScanBuilder]] implements `SupportsPushDownFilters` and
   * absorbs `mmi >= v` / `mmi > v` predicates into the source request, and
-  * `SupportsPushDownRequiredColumns` so projection reaches the parser.
+  * `SupportsPushDownRequiredColumns` so only the required columns are built.
   * Catalyst then never sees the filtered rows at all — `.filter(col("mmi")
   * >= 5)` on this source costs the same as the reference's URL parameter.
   *
   * Input options (first match wins):
   *  - `body`: an inline FeatureCollection JSON string (tests, and the
   *    driver-fetch pattern where the HTTP GET happens outside the scan)
-  *  - `path`: a local/DFS file containing one FeatureCollection; a 100 TB
-  *    backfill points this at an archive directory, one partition per file
+  *  - `path`: a local file containing one FeatureCollection
   *  - neither: live mode — GET `api.geonet.org.nz/quake?MMI=` once at
   *    planning via [[GeoNetHttp]], the MMI taken from the pushed filter
   *    (else the `mmi` option, else the reference default). Non-2xx throws
@@ -42,8 +46,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    loudly rather than silently going live).
   *
   * Rows come out FLAT (publicID, time, depth, magnitude, mmi, locality,
-  * quality, lon, lat) — the relational view of the feed; [[GeoNetSource.nest]]
-  * rebuilds the GeoJSON nesting for [[graft.quakes.QuakePipeline]]. Read
+  * quality, lon, lat): each is the row of one feature that the shared feed
+  * reader of [[QuakePipeline]] parses, as in the prepared snapshot,
+  * flattened; a body that is not a FeatureCollection fails the read with
+  * `Failed to parse data`. [[GeoNetSource.nest]] rebuilds the GeoJSON
+  * nesting for [[QuakePipeline.transform]]. Read
   * with `.schema(GeoNetSource.BodySchema)`, the source gives the body
   * view instead: one row per response, its whole text in `value` — what
   * the prepared snapshot of [[graft.streaming.QuakeStream]] consumes.
@@ -130,18 +137,12 @@ final class GeoNetScan(options: Map[String, String], mmiMin: Option[Int],
     s"GeoNetScan(mmiPushed=${mmiMin.getOrElse("none")}, " +
       s"columns=${required.fieldNames.mkString(",")})"
 
-  // With neither `body` nor `path`, the scan performs the reference's
-  // live leg (task.ts:176-181): build `?MMI=` from the PUSHED filter
-  // (falling back to the `mmi` option, then the reference's default)
-  // and GET it once, driver-side at planning — the same single-fetch
-  // shape as the reference, with non-2xx failing the run. `lazy val`
-  // memoizes: Spark may call planInputPartitions more than once per
-  // query, and one run must mean one request.
+  // the live leg (task.ts:176-181) GETs once, at planning; `lazy val`
+  // because Spark may call planInputPartitions more than once per query,
+  // and one run must mean one request
   private lazy val body: String = GeoNetSource.resolveBody(options, mmiMin)
 
   override def planInputPartitions(): Array[InputPartition] =
-    // One partition per response body. A backfill over an archive would
-    // emit one partition per file here instead.
     Array(GeoNetInputPartition(body))
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -242,52 +243,40 @@ final class GeoNetMicroBatchStream(options: Map[String, String],
   override def stop(): Unit = ()
 }
 
+/** Reads one body: the body view as its one row; the flat view as the
+  * feed reader's rows of it, kept by the pushed `mmi` predicate (the
+  * moral equivalent of the server-side `?MMI=` parameter) and flattened
+  * to the required columns.
+  */
 final class GeoNetPartitionReaderFactory(mmiMin: Option[Int],
     required: StructType) extends PartitionReaderFactory {
+
+  // built on the driver, from the session's conf, and shipped
+  private val options = QuakePipeline.feedOptions(SQLConf.get)
+  private val columns =
+    if (required == GeoNetSource.BodySchema) Nil
+    else required.fieldNames.toSeq.map(GeoNetSource.flatColumn)
+  private val keep = mmiMin.map(m =>
+    expressions.GreaterThanOrEqual(GeoNetSource.flatColumn("mmi"), Literal(m)))
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val body = p.asInstanceOf[GeoNetInputPartition].body
     val rows =
       if (required == GeoNetSource.BodySchema)
         Iterator.single(new GenericInternalRow(Array[Any](UTF8String.fromString(body))))
-      else featureRows(body)
+      else {
+        val parser = QuakePipeline.featureParser(options)
+        val kept = keep.map(Predicate.create(_))
+        QuakePipeline.featureTexts(body).iterator.flatMap(parser.parse)
+          .filter(row => kept.forall(_.eval(row)))
+          .map(UnsafeProjection.create(columns))
+      }
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       override def next(): Boolean = rows.hasNext && { current = rows.next(); true }
       override def get(): InternalRow = current
       override def close(): Unit = ()
     }
-  }
-
-  /** The flat view: one row of `required` per feature. */
-  private def featureRows(body: String): Iterator[InternalRow] = {
-    val fs = new ObjectMapper().readTree(body).path("features")
-    // the pushed filter applies before any row reaches Spark —
-    // the moral equivalent of the server-side ?MMI= parameter
-    (0 until fs.size).iterator.map(fs.get)
-      .filter(f => mmiMin.forall(m =>
-        f.path("properties").path("mmi").asInt(Int.MinValue) >= m))
-      .map { feature =>
-        val props = feature.path("properties")
-        val coords = feature.path("geometry").path("coordinates")
-        def str(n: String) = UTF8String.fromString(props.path(n).asText)
-        val values = required.fields.map { f =>
-          (f.name, f.dataType) match {
-            case ("publicID", _) => str("publicID")
-            case ("time", _) => str("time")
-            case ("depth", _) => props.path("depth").asDouble
-            case ("magnitude", _) => props.path("magnitude").asDouble
-            case ("mmi", _) => props.path("mmi").asInt
-            case ("locality", _) => str("locality")
-            case ("quality", _) => str("quality")
-            case ("lon", _) => coords.get(0).asDouble
-            case ("lat", _) => coords.get(1).asDouble
-            case (other, _) => throw new IllegalStateException(
-              s"unknown column $other")
-          }
-        }
-        new GenericInternalRow(values.asInstanceOf[Array[Any]])
-      }
   }
 }
 
@@ -309,18 +298,30 @@ object GeoNetSource {
           GeoNetHttp.transportFor(options.get("transport")), mmi)
       }
 
-  /** The flat relational view of one GeoNet feature (task.ts:64-79). */
-  val FlatSchema: StructType = StructType(Seq(
-    StructField("publicID", StringType, nullable = false),
-    StructField("time", StringType, nullable = false),
-    StructField("depth", DoubleType),
-    StructField("magnitude", DoubleType),
-    StructField("mmi", IntegerType),
-    StructField("locality", StringType),
-    StructField("quality", StringType),
-    StructField("lon", DoubleType),
-    StructField("lat", DoubleType)
-  ))
+  /** A flat column over the feed row, the inverse of [[nest]]: `lon` and
+    * `lat` are `geometry.coordinates[0]` and `[1]`, any other column is
+    * `properties.<name>`.
+    */
+  private[sources] def flatColumn(name: String): Expression = {
+    def top(field: String) = {
+      val i = GeoNetFeatureSchema.fieldIndex(field)
+      BoundReference(i, GeoNetFeatureSchema(i).dataType, nullable = true)
+    }
+    def get(parent: Expression, step: Any) =
+      ExtractValue(parent, Literal(step), caseSensitiveResolution)
+    name match {
+      case "lon" => get(get(top("geometry"), "coordinates"), 0)
+      case "lat" => get(get(top("geometry"), "coordinates"), 1)
+      case _ => get(top("properties"), name)
+    }
+  }
+
+  /** The flat relational view of one GeoNet feature (task.ts:64-79): the
+    * feed's properties, then lon and lat, all nullable as the feed's are.
+    */
+  val FlatSchema: StructType = StructType(
+    GeoNetFeatureSchema("properties").dataType.asInstanceOf[StructType].fields ++
+      Seq(StructField("lon", DoubleType), StructField("lat", DoubleType)))
 
   /** The body view: one row per response body, its text in `value` (the
     * column name of Spark's text source, so landed files and fetches

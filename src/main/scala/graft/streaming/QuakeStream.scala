@@ -52,11 +52,14 @@ object QuakeStream {
 
   /** [[geonetStream]]'s fetches as bodies: one row per trigger, the
     * response text in column `value`, the shape of [[landedBodies]].
+    * A live fetch asks for `?MMI=${cfg.mmi}`, as `QuakeRunner.run` does:
+    * `cfg.mmi` sets the source's `mmi` option, over any in `options`.
     */
-  def geonetBodies(spark: SparkSession,
+  def geonetBodies(spark: SparkSession, cfg: QuakeConfig,
       options: Map[String, String]): DataFrame =
     spark.readStream.format("graft.sources.GeoNetTableProvider")
-      .schema(GeoNetSource.BodySchema).options(options).load()
+      .schema(GeoNetSource.BodySchema).options(options)
+      .option("mmi", cfg.mmi.toLong).load()
 
   /** Streaming K1 (task.ts:251-256, continuous form) with the sink's
     * CUMULATIVE expiry contract (J2, task.ts:195-203 comment). Each

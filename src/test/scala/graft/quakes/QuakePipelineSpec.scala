@@ -34,7 +34,7 @@ class QuakePipelineSpec extends AnyFunSuite {
 
   test("fixture parses to 6 feature rows with the declared schema") {
     assert(features.count() == 6)
-    assert(norm(features.schema) == norm(GeoNetFeatureSchema))
+    assert(features.schema == GeoNetFeatureSchema)
   }
 
   test("filters: age drops #3/#6, quality='deleted' drops #4 (task.ts:193,204)") {
@@ -114,14 +114,6 @@ class QuakePipelineSpec extends AnyFunSuite {
     assert(md.getString(md.fieldIndex("intensity")) == "Unnoticeable")
     // 2026-01-15T03:00Z = 16:00 NZDT same day
     assert(md.getString(md.fieldIndex("timeLocal")).contains("15/01/2026, 16:00 NZDT"))
-  }
-
-  test("snapshot expiry (J2): omitted ids form the expired set") {
-    val prev = run(QuakeConfig(maxAgeMinutes = 525600.0)) // keeps 1,2,3,5,6
-    val cur = run() // keeps 1,2,5
-    val expired = QuakePipeline.expiredIds(prev, cur)
-      .collect.map(_.getString(0)).sorted.toSeq
-    assert(expired == Seq("earthquake-2026p000003", "earthquake-2026p000006"))
   }
 
   test("FeatureCollection JSON assembly (K1, task.ts:251-254)") {

@@ -134,8 +134,7 @@ class QuakeSnapshotSpec extends AnyFunSuite {
     assert(QuakePipeline.prepare(other, cfg) eq after)
     assert(before.snapshotWithIds(other, FixtureJson, FixtureNowMs)._1 == beforeJson)
     assert(after.snapshotWithIds(other, FixtureJson, FixtureNowMs)._1 == beforeJson)
-    val schema = QuakePipeline.parseFeatureCollection(spark, """{"features":[]}""").schema
-    val e = intercept[IllegalStateException](PreparedSnapshot(spark, schema,
+    val e = intercept[IllegalStateException](PreparedSnapshot(spark,
       spark.range(1).queryExecution.optimizedPlan, Map.empty))
     assert(e.getMessage.contains("Range"), e.getMessage)
   }

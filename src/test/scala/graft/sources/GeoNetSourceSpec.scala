@@ -60,4 +60,53 @@ class GeoNetSourceSpec extends AnyFunSuite {
       QuakeConfig(), FixtureNowMs)
     assert(viaSource.collect().toSet == viaJson.collect().toSet)
   }
+
+  private val feature = """{"type":"Feature","properties":{""" +
+    """"publicID":"2026p000001","time":"2026-08-06T23:30:00.000Z",""" +
+    """"depth":12.3,"magnitude":5.17,"mmi":6,""" +
+    """"locality":"15 km east of Seddon","quality":"best"},""" +
+    """"geometry":{"type":"Point","coordinates":[174.27,-41.67]}}"""
+
+  /** A FeatureCollection of `feature`, each `from -> to` replaced. */
+  private def oneFeature(edits: (String, String)*): String = {
+    val f = edits.foldLeft(feature) { case (acc, (from, to)) => acc.replace(from, to) }
+    s"""{"type":"FeatureCollection","features":[$f]}"""
+  }
+
+  test("the flat view reads every null or odd field as the snapshot's " +
+    "parser does") {
+    val noId = oneFeature(""""publicID":"2026p000001",""" -> "")
+    val noMmi = oneFeature(""""mmi":6""" -> """"mmi":null""")
+    val bodies = Seq(noId, noMmi,
+      oneFeature(""""quality":"best"""" -> """"quality":null"""),
+      oneFeature(""""locality":"15 km east of Seddon"""" -> """"locality":null"""),
+      oneFeature(""""depth":12.3,""" -> ""),
+      oneFeature(""""mmi":6""" -> """"mmi":"6""""),
+      oneFeature(""","coordinates":[174.27,-41.67]""" -> ""))
+    val cfg = QuakeConfig(maxAgeMinutes = 525600.0)
+    def flat(body: String) = spark.read.format("geonet").option("body", body).load()
+    for (body <- bodies) {
+      val viaSource = QuakePipeline.transform(GeoNetSource.nest(flat(body)), cfg,
+        FixtureNowMs).toJSON.collect().toSeq
+      val viaJson = QuakePipeline.transform(
+        QuakePipeline.parseFeatureCollection(spark, body), cfg, FixtureNowMs)
+        .toJSON.collect().toSeq
+      assert(viaSource == viaJson, body)
+    }
+    assert(flat(noId).head().isNullAt(0)) // publicID
+    // a null mmi fails the pushed mmi >= v, as SQL would
+    assert(flat(noMmi).count() == 1 && flat(noMmi).filter(col("mmi") >= -1).count() == 0)
+  }
+
+  test("a body that is not a FeatureCollection fails the flat view with " +
+    "Failed to parse data") {
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    for (body <- Seq("{}", FixtureJson.dropRight(20))) {
+      val e = intercept[Exception](
+        spark.read.format("geonet").option("body", body).load().collect())
+      assert(messages(e).exists(_.contains("Failed to parse data")),
+        s"$body: ${messages(e).mkString(" | ")}")
+    }
+  }
 }

@@ -25,7 +25,7 @@ class GeoNetStreamingSpec extends AnyFunSuite {
     val saved = GeoNetHttp.defaultTransport
     GeoNetHttp.defaultTransport = t
     try {
-      val bodies = QuakeStream.geonetBodies(spark, Map.empty)
+      val bodies = QuakeStream.geonetBodies(spark, QuakeConfig(), Map.empty)
       val q = QuakeStream.submitSnapshots(bodies, QuakeConfig(),
         "https://sink.example/fc", t, newCheckpoint(),
         clock = () => FixtureNowMs)
@@ -40,6 +40,21 @@ class GeoNetStreamingSpec extends AnyFunSuite {
     } finally GeoNetHttp.defaultTransport = saved
   }
 
+  test("the body stream fetches the sink's MMI, over any mmi option " +
+    "(task.ts:176)") {
+    val t = new FakeTransport(_ => HttpResponse(200, "OK", FixtureJson))
+    val saved = GeoNetHttp.defaultTransport
+    GeoNetHttp.defaultTransport = t
+    try {
+      val cfg = QuakeConfig(mmi = 3)
+      val bodies = QuakeStream.geonetBodies(spark, cfg, Map("MMI" -> "5"))
+      QuakeStream.submitSnapshots(bodies, cfg, "https://sink.example/fc", t,
+        newCheckpoint(), clock = () => FixtureNowMs).awaitTermination()
+      assert(t.gets.toSeq === Seq("https://api.geonet.org.nz/quake?MMI=3"))
+      assert(t.posts.size === 1)
+    } finally GeoNetHttp.defaultTransport = saved
+  }
+
   test("restart from the same checkpoint fetches the NEXT snapshot " +
     "(re-invocation is the schedule)") {
     val t = new FakeTransport(_ => HttpResponse(200, "OK", FixtureJson))
@@ -48,7 +63,7 @@ class GeoNetStreamingSpec extends AnyFunSuite {
     try {
       val ckpt = newCheckpoint()
       def runOnce(): Unit = {
-        val bodies = QuakeStream.geonetBodies(spark, Map.empty)
+        val bodies = QuakeStream.geonetBodies(spark, QuakeConfig(), Map.empty)
         QuakeStream.submitSnapshots(bodies, QuakeConfig(),
           "https://sink.example/fc", t, ckpt,
           clock = () => FixtureNowMs).awaitTermination()
@@ -99,7 +114,8 @@ class GeoNetStreamingSpec extends AnyFunSuite {
 
   test("the read schema selects the body view: one row per fetch, the " +
     "response text itself; any other schema is refused") {
-    val bodies = QuakeStream.geonetBodies(spark, Map("body" -> FixtureJson))
+    val bodies = QuakeStream.geonetBodies(spark, QuakeConfig(),
+      Map("body" -> FixtureJson))
     assert(bodies.isStreaming)
     assert(bodies.schema === GeoNetSource.BodySchema)
     val q = bodies.writeStream.format("memory").queryName("geonet_bodies")
