@@ -2,35 +2,46 @@ package graft.quakes
 
 import java.io.ByteArrayOutputStream
 import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicLong
+
+import scala.annotation.tailrec
+import scala.collection.mutable
 
 import org.apache.spark.{SparkEnv, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BasePredicate, BindReferences,
-  Expression, ExpressionsEvaluator, GenericInternalRow, JoinedRow, Predicate,
-  UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
+  AttributeSet, BasePredicate, BindReferences, Expression, ExpressionsEvaluator,
+  GenericInternalRow, JoinedRow, NamedExpression, Predicate, UnsafeProjection}
 import org.apache.spark.sql.catalyst.json.JSONOptions
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.classic.ClassicConversions._
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
+import graft.quakes.QuakePipeline.FeatureSlices
+
 /** The GeoNet snapshot query of one session and config, planned once:
   * [[QuakePipeline.transform]] and the snapshot's `to_json` projection,
   * analysed and optimised into a chain of filters and projections over
   * the feed rows, with every expression bound to its input row. `now`
-  * is the last column of that row, so one prepared snapshot serves every
-  * run clock with the same generated code.
+  * follows the feed columns in that row, so one prepared snapshot serves
+  * every run clock with the same generated code. The subexpressions that
+  * read nothing but `now` (today `stale`) are cut out of the chain as run
+  * constants, evaluated once per task and appended after `now`.
   *
-  * A run is then ONE map-only job: each task parses its feature texts
-  * with the feed reader's [[QuakePipeline.featureParser]] in the
-  * session's options, appends `now` to each row, runs the chain and
-  * renders its features' JSON, joined with `,`; the driver joins the
-  * partitions in order. The output is byte for
-  * byte one `to_json` of the `collect_list` of [[QuakePipeline.transform]]'s
-  * rows for the same feed (the oracle of QuakeSnapshotSpec).
+  * A run is then ONE map-only Spark job, named `GeoNet snapshot`: the
+  * driver cuts the body into UTF-8 feature slices
+  * ([[QuakePipeline.featureSlices]]) and gives each task one contiguous
+  * chunk of them. Each task parses its slices with the feed reader's
+  * [[QuakePipeline.featureParser]] in the session's options, appends
+  * `now` and the run constants to each row, runs the chain and renders
+  * its features' JSON as UTF-8, joined with `,`; the driver joins the
+  * partitions' bytes in order and decodes them once. The task is a named
+  * function class, so starting the job cleans no closure. The output is
+  * byte for byte one `to_json` of the `collect_list` of
+  * [[QuakePipeline.transform]]'s rows for the same feed (the oracle of
+  * QuakeSnapshotSpec).
   *
   * The task-side state — parser, compiled predicates and projections,
   * and the expressions themselves, some of which hold a stateful
@@ -51,20 +62,19 @@ final class PreparedSnapshot private (
     */
   def snapshotWithIds(spark: SparkSession, body: String,
       nowMs: Long): (String, Long, Seq[String]) = {
-    val texts = QuakePipeline.featureTexts(body)
+    val slices = QuakePipeline.featureSlices(body)
     val sc = spark.sparkContext
-    // locals, so the task closure holds these two and not `this`
-    val (id, plan) = (this.id, this.plan)
-    val parts = SQLExecution.withSQLConfPropagated(spark) {
-      sc.parallelize(texts, math.max(1, math.min(texts.size, sc.defaultParallelism)))
-        .mapPartitions { it =>
-          Iterator.single(PreparedSnapshot.evaluators(id, plan).render(it, nowMs))
-        }
-        .collect()
-    }
+    val n = math.max(1, math.min(slices.size, sc.defaultParallelism))
+    // contiguous runs of features, split as `parallelize` splits a Seq
+    val chunks = (0 until n).map(i =>
+      slices.chunk((i.toLong * slices.size / n).toInt, ((i + 1L) * slices.size / n).toInt))
+    val previous = sc.getLocalProperty(PreparedSnapshot.JobDescription)
+    sc.setJobDescription("GeoNet snapshot")
+    val parts = try SQLExecution.withSQLConfPropagated(spark) {
+      sc.runJob(sc.parallelize(chunks, n), new PreparedSnapshot.Render(id, plan, nowMs))
+    } finally sc.setLocalProperty(PreparedSnapshot.JobDescription, previous)
     val ids = parts.toSeq.flatMap(_._2)
-    val json = parts.iterator.map(_._1).filter(_.nonEmpty).map(new String(_, UTF_8))
-    (QuakePipeline.featureCollection(json), ids.size.toLong, ids)
+    (QuakePipeline.featureCollection(parts.toSeq.map(_._1)), ids.size.toLong, ids)
   }
 
   /** Once a re-plan has replaced this snapshot: drop the executors'
@@ -77,16 +87,21 @@ final class PreparedSnapshot private (
 
 object PreparedSnapshot {
 
-  private sealed trait Step
+  /** The local property `SparkContext.setJobDescription` sets. */
+  private val JobDescription = "spark.job.description"
+
+  private[quakes] sealed trait Step
   /** A `Filter`: keep the row iff the bound condition is true. */
   private final case class Keep(condition: Expression) extends Step
   /** A `Project`: the bound output columns. */
   private final case class Compute(columns: Seq[Expression]) extends Step
 
-  /** What a task needs: the reader options for the feed parser, and the
-    * steps from the feed row up to `(json, id)`.
+  /** What a task needs: the reader options for the feed parser, the run
+    * constants bound to a one-column `now` row, and the steps from the
+    * feed row (plus `now` and those constants) up to `(json, id)`.
     */
-  private final case class Plan(options: JSONOptions, steps: Seq[Step])
+  private final case class Plan(options: JSONOptions, constants: Seq[Expression],
+      steps: Seq[Step])
 
   private val nextId = new AtomicLong()
 
@@ -97,22 +112,67 @@ object PreparedSnapshot {
     */
   private[quakes] def apply(spark: SparkSession, query: LogicalPlan,
       conf: Map[String, String]): PreparedSnapshot = {
-    val feedColumns = (QuakeModel.GeoNetFeatureSchema.fieldNames :+ "now").toSeq
-    def steps(p: LogicalPlan): List[Step] = p match {
-      case Project(columns, child) =>
-        Compute(BindReferences.bindReferences(columns, child.output)) :: steps(child)
-      case Filter(condition, child) =>
-        Keep(BindReferences.bindReference(condition, child.output)) :: steps(child)
-      case scan: LogicalRDD if scan.output.map(_.name) == feedColumns => Nil
-      case other => throw new IllegalStateException(
-        s"cannot prepare the snapshot: ${other.nodeName} in a plan that may " +
-          s"only hold Project and Filter over the feed scan:\n$query")
-    }
-    val plan = Plan(QuakePipeline.feedOptions(spark.sessionState.conf),
-      steps(query).reverse)
+    val (constants, steps) = compile(query)
+    val plan = Plan(QuakePipeline.feedOptions(spark.sessionState.conf), constants, steps)
     val bytes = SparkEnv.get.closureSerializer.newInstance().serialize(plan)
     new PreparedSnapshot(conf, nextId.incrementAndGet(),
       spark.sparkContext.broadcast(bytes.array.take(bytes.limit)))
+  }
+
+  /** The query's run constants and its steps, scan first.
+    *
+    * A run constant is a maximal deterministic subexpression, other than
+    * a named one, whose only reference is `now`: it has one value per
+    * run. Each distinct one is replaced by a new attribute in the steps
+    * that read the scan row (its filters and the first projection), which
+    * bind to the scan's columns followed by those attributes; the steps
+    * above bind to their child's output. The constants come back bound to
+    * a row that holds `now` alone. Each task evaluates every constant,
+    * even one that only a conditional branch or a filtered-out row would
+    * reach.
+    */
+  private[quakes] def compile(query: LogicalPlan): (Seq[Expression], Seq[Step]) = {
+    val feedColumns = (QuakeModel.GeoNetFeatureSchema.fieldNames :+ "now").toSeq
+    // the Project/Filter chain, scan side first, and the scan under it
+    @tailrec def chain(p: LogicalPlan, above: List[LogicalPlan]): (List[LogicalPlan], LogicalRDD) =
+      p match {
+        case Project(_, child) => chain(child, p :: above)
+        case Filter(_, child) => chain(child, p :: above)
+        case scan: LogicalRDD if scan.output.map(_.name) == feedColumns => (above, scan)
+        case other => throw new IllegalStateException(
+          s"cannot prepare the snapshot: ${other.nodeName} in a plan that may " +
+            s"only hold Project and Filter over the feed scan:\n$query")
+      }
+    val (nodes, scan) = chain(query, Nil)
+    val now = AttributeSet(scan.output.last)
+    // canonical form → (attribute, expression), in order of discovery
+    val constants = mutable.LinkedHashMap.empty[Expression, (Attribute, Expression)]
+    def hoist(node: LogicalPlan): LogicalPlan = node.transformExpressionsDown {
+      case e if !e.isInstanceOf[NamedExpression] && e.deterministic &&
+          e.references.nonEmpty && e.references.subsetOf(now) =>
+        constants.getOrElseUpdate(e.canonicalized,
+          (AttributeReference(s"constant${constants.size}", e.dataType, e.nullable)(), e))._1
+    }
+    def step(node: LogicalPlan, input: Seq[Attribute]): Step = node match {
+      case Project(columns, _) => Compute(BindReferences.bindReferences(columns, input))
+      case Filter(condition, _) => Keep(BindReferences.bindReference(condition, input))
+    }
+    val (filters, rest) = nodes.span(_.isInstanceOf[Filter])
+    val scanLevel = (filters ++ rest.take(1)).map(hoist)
+    val input = scan.output ++ constants.values.map(_._1)
+    (constants.values.map(c => BindReferences.bindReference(c._2, now.toSeq)).toSeq,
+      scanLevel.map(step(_, input)) ++ rest.drop(1).map(n => step(n, n.children.head.output)))
+  }
+
+  /** One task of a run: its chunk rendered by the thread's evaluators. A
+    * named class, not a lambda, so `runJob` finds no closure to clean.
+    */
+  private final class Render(id: Long, plan: Broadcast[Array[Byte]], nowMs: Long)
+      extends ((TaskContext, Iterator[FeatureSlices]) => (Array[Byte], Array[String]))
+      with Serializable {
+    override def apply(context: TaskContext,
+        chunks: Iterator[FeatureSlices]): (Array[Byte], Array[String]) =
+      evaluators(id, plan).render(chunks.next(), nowMs, context.partitionId())
   }
 
   /** Per executor thread, the evaluators of the few prepared snapshots
@@ -132,36 +192,48 @@ object PreparedSnapshot {
 
   private final class Evaluators(plan: Plan) {
     private val parser = QuakePipeline.featureParser(plan.options)
+    private val constants = plan.constants.toArray
     private val steps: Array[ExpressionsEvaluator] = plan.steps.map {
       case Keep(condition) => Predicate.create(condition)
       case Compute(columns) => UnsafeProjection.create(columns)
     }.toArray
-    private val now = new GenericInternalRow(1)
+    /** `now`, then the run constants. */
+    private val run = new GenericInternalRow(1 + constants.length)
     private val input = new JoinedRow
 
-    /** The partition's kept features as UTF-8 `json,json,…` (the bytes
+    /** The chunk's kept features as UTF-8 `json,json,…` (the bytes
       * `to_json` wrote, shipped without a String round trip) and their ids.
       */
-    def render(texts: Iterator[String], nowMs: Long): (Array[Byte], Array[String]) = {
-      steps.foreach(_.initialize(TaskContext.getPartitionId()))
-      now.setLong(0, nowMs)
+    def render(chunk: FeatureSlices, nowMs: Long,
+        partition: Int): (Array[Byte], Array[String]) = {
+      steps.foreach(_.initialize(partition))
+      run.setLong(0, nowMs)
+      var c = 0
+      while (c < constants.length) {
+        run.update(c + 1, constants(c).eval(run))
+        c += 1
+      }
       val json = new ByteArrayOutputStream(1 << 16)
       val ids = Array.newBuilder[String]
-      texts.flatMap(parser.parse).foreach { feature =>
-        var row: InternalRow = input(feature, now)
-        var i = 0
-        while (row != null && i < steps.length) {
-          row = steps(i) match {
-            case keep: BasePredicate => if (keep.eval(row)) row else null
-            case compute: UnsafeProjection => compute(row)
+      var f = 0
+      while (f < chunk.size) {
+        parser.parse(chunk.utf8(f)).foreach { feature =>
+          var row: InternalRow = input(feature, run)
+          var i = 0
+          while (row != null && i < steps.length) {
+            row = steps(i) match {
+              case keep: BasePredicate => if (keep.eval(row)) row else null
+              case compute: UnsafeProjection => compute(row)
+            }
+            i += 1
           }
-          i += 1
+          if (row != null) {
+            if (json.size > 0) json.write(',')
+            row.getUTF8String(0).writeTo(json)
+            ids += (if (row.isNullAt(1)) null else row.getUTF8String(1).toString)
+          }
         }
-        if (row != null) {
-          if (json.size > 0) json.write(',')
-          row.getUTF8String(0).writeTo(json)
-          ids += (if (row.isNullAt(1)) null else row.getUTF8String(1).toString)
-        }
+        f += 1
       }
       (json.toByteArray, ids.result())
     }

@@ -1,10 +1,12 @@
 package graft.quakes
 
-import java.io.IOException
+import java.io.{ByteArrayOutputStream, IOException}
+import java.nio.charset.StandardCharsets.UTF_8
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JacksonParser}
+import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonParser}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.util.FailureSafeParser
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -25,12 +27,14 @@ import graft.quakes.QuakeFunctions._
   * new run clock reuses the same compiled code.
   *
   * Physical shape of one prepared run: a driver-side streaming pass
-  * ([[featureTexts]]) cuts the response body into one JSON text per
-  * feature; ONE map-only job over `min(features, defaultParallelism)`
-  * partitions parses each text ([[featureParser]]), filters (age,
-  * quality), projects (P1-P11) and renders it; the driver joins the
-  * partitions' JSON in order. No Exchange, no broadcast join, no planning.
-  * The `geonet` source's flat view reads bodies with the same two.
+  * ([[featureSlices]]) encodes the response body to UTF-8 once and finds
+  * the byte range of each feature; ONE map-only job over
+  * `min(features, defaultParallelism)` partitions, each given one
+  * contiguous chunk of those bytes, parses each slice ([[featureParser]]),
+  * filters (age, quality), projects (P1-P11) and renders it; the driver
+  * joins the partitions' UTF-8 JSON in order into one array and decodes
+  * it once. No Exchange, no broadcast join, no planning. The `geonet`
+  * source's flat view reads bodies with the same two.
   *
   * Both dictionary lookups (icon P4, intensity P5) are map literals +
   * `element_at` + default, which Catalyst constant-folds into the
@@ -39,7 +43,8 @@ import graft.quakes.QuakeFunctions._
   * reference hand-codes (SURVEY.md §4) fall out automatically.
   *
   * `now` is captured ONCE per run — a literal in a DataFrame query, a
-  * column of every input row in a prepared snapshot — matching the
+  * column of every input row in a prepared snapshot, whose `now`-only
+  * subexpressions (`stale`) are evaluated once per task — matching the
   * reference's single `Date.now()` at task.ts:184 (we deliberately collapse
   * its second clock read at task.ts:221 into the same instant for
   * determinism; divergence is timing-only).
@@ -56,29 +61,55 @@ object QuakePipeline {
   private def parseError(why: String): Nothing =
     throw new RuntimeException(s"Failed to parse data: $why")
 
-  /** Cut a GeoNet response body into the JSON text of each `features[]`
-    * element, in one streaming pass that materializes no tree. `null`
-    * elements are skipped. Anything the reference's `res.json()` /
-    * `for…of body.features` (task.ts:183,187) would throw on — a body
-    * that is not one JSON object, or whose `features` is not an array —
-    * fails with `Failed to parse data: …`, so a malformed feed can never
-    * turn into an empty snapshot that expires every live quake.
+  /** A GeoNet response body in UTF-8 and the `[start, end)` byte range of
+    * each `features[]` element in it, kept in `bounds` as start, end
+    * pairs. [[PreparedSnapshot]] ships one contiguous [[chunk]] of it to
+    * each task.
     */
-  private[graft] def featureTexts(body: String): Vector[String] = {
-    val p = Json.createParser(body)
-    def offset: Int = p.currentTokenLocation().getCharOffset.toInt
+  private[graft] final class FeatureSlices(val bytes: Array[Byte],
+      val bounds: Array[Int]) extends Serializable {
+    def size: Int = bounds.length / 2
+
+    /** Feature `i`'s JSON, a view over [[bytes]]. */
+    def utf8(i: Int): UTF8String =
+      UTF8String.fromBytes(bytes, bounds(2 * i), bounds(2 * i + 1) - bounds(2 * i))
+
+    /** Features `from` until `until`, in a copy of just their bytes. */
+    def chunk(from: Int, until: Int): FeatureSlices =
+      if (from == until) new FeatureSlices(Array.emptyByteArray, Array.emptyIntArray)
+      else {
+        val base = bounds(2 * from)
+        new FeatureSlices(
+          java.util.Arrays.copyOfRange(bytes, base, bounds(2 * until - 1)),
+          bounds.slice(2 * from, 2 * until).map(_ - base))
+      }
+  }
+
+  /** Cut a GeoNet response body into its `features[]` elements: encode it
+    * to UTF-8 once and find each element's byte range in one streaming
+    * pass that materializes no tree. `null` elements are skipped. Anything
+    * the reference's `res.json()` / `for…of body.features`
+    * (task.ts:183,187) would throw on — a body that is not one JSON
+    * object, or whose `features` is not an array — fails with
+    * `Failed to parse data: …`, so a malformed feed can never turn into an
+    * empty snapshot that expires every live quake.
+    */
+  private[graft] def featureSlices(body: String): FeatureSlices = {
+    val bytes = body.getBytes(UTF_8)
+    val p = Json.createParser(bytes)
+    def offset: Int = p.currentTokenLocation().getByteOffset.toInt
     // Jackson throws on end of input anywhere below the root object, so
     // these loops cannot spin on a truncated body
-    def features(): Vector[String] = {
-      val out = Vector.newBuilder[String]
+    def features(): Array[Int] = {
+      val out = Array.newBuilder[Int]
       var t = p.nextToken()
       while (t != JsonToken.END_ARRAY) {
         t match {
           case JsonToken.VALUE_NULL =>
           case JsonToken.START_OBJECT =>
-            val start = offset
+            out += offset
             p.skipChildren()
-            out += body.substring(start, offset + 1)
+            out += offset + 1
           case other => parseError(s"feature is $other, not an object")
         }
         t = p.nextToken()
@@ -88,7 +119,7 @@ object QuakePipeline {
     try {
       if (p.nextToken() != JsonToken.START_OBJECT)
         parseError("body is not a JSON object")
-      var fs: Option[Vector[String]] = None
+      var fs: Option[Array[Int]] = None
       while (p.nextToken() == JsonToken.FIELD_NAME) {
         val name = p.currentName()
         val t = p.nextToken()
@@ -97,10 +128,18 @@ object QuakePipeline {
         else parseError(s"features is $t, not an array")
       }
       if (p.nextToken() != null) parseError("trailing content after the body")
-      fs.getOrElse(parseError("body has no features array"))
+      new FeatureSlices(bytes, fs.getOrElse(parseError("body has no features array")))
     } catch {
       case e: IOException => parseError(e.getMessage)
     } finally p.close()
+  }
+
+  /** The JSON text of each feature: [[featureSlices]] as Strings, for
+    * the JSON reader of [[parseFeatureCollection]].
+    */
+  private[graft] def featureTexts(body: String): Vector[String] = {
+    val slices = featureSlices(body)
+    Vector.tabulate(slices.size)(slices.utf8(_).toString)
   }
 
   /** [[featureParser]]'s options as `DataFrameReader.json` builds them in
@@ -110,17 +149,26 @@ object QuakePipeline {
       conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
 
   /** The parser that `spark.read.schema(GeoNetFeatureSchema).json` runs
-    * on each feature text: one [[GeoNetFeatureSchema]] row per text.
-    * Not thread-safe, so each task builds its own.
+    * on each feature text, here over its UTF-8 slice: one
+    * [[GeoNetFeatureSchema]] row per feature. Not thread-safe, so each
+    * task builds its own.
     */
-  private[graft] def featureParser(options: JSONOptions): FailureSafeParser[String] = {
+  private[graft] def featureParser(options: JSONOptions): FailureSafeParser[UTF8String] = {
     // as DataFrameReader.json: the corrupt-record column is not parsed
     val parsed = StructType(
       GeoNetFeatureSchema.filterNot(_.name == options.columnNameOfCorruptRecord))
     val raw = new JacksonParser(parsed, options, allowArrayAsStructs = true)
-    new FailureSafeParser[String](
-      raw.parse(_, CreateJacksonParser.string, UTF8String.fromString),
+    new FailureSafeParser[UTF8String](raw.parse[UTF8String](_, utf8Parser, identity),
       options.parseMode, GeoNetFeatureSchema, options.columnNameOfCorruptRecord)
+  }
+
+  /** Jackson's byte parser straight over a UTF-8 slice, as Spark's
+    * `CreateJacksonParser.text` makes it for a Hadoop `Text`; its
+    * `utf8String` would put an `InputStreamReader` on every record.
+    */
+  private def utf8Parser(json: JsonFactory, record: UTF8String): JsonParser = {
+    val b = record.getByteBuffer
+    json.createParser(b.array, b.arrayOffset + b.position, b.remaining)
   }
 
   /** Parse a GeoNet API response body (a FeatureCollection JSON string)
@@ -159,8 +207,9 @@ object QuakePipeline {
     val filtered = features
       // F2 (task.ts:190-193): keep iff ageMinutes <= maxAge (strict `>` drops)
       .filter(ageMinutes(eventTs, now) <= cfg.maxAgeMinutes)
-      // F3 (task.ts:195-204): GeoNet reclassified events are excluded
-      .filter(p("quality") =!= "deleted")
+      // F3 (task.ts:195-204): GeoNet reclassified events are excluded; a
+      // null quality is kept, as JS keeps it (`null !== 'deleted'`)
+      .filter(coalesce(p("quality") =!= "deleted", lit(true)))
 
     // P4/P5: icon and intensity lookups, map literal + default on miss
     val icon = lookupWithDefault(p("mmi"), MmiIcons, DefaultIcon)
@@ -209,21 +258,38 @@ object QuakePipeline {
         remarks.as("remarks")
       ).as("properties"),
       // P10/P11 (task.ts:206-208,244-247): [lon, lat, -depth] — CoT altitude
-      // is up-positive HAE, quake depth is km down, hence the negation
+      // is up-positive HAE, quake depth is km down, hence the negation; a
+      // missing element reads as null, as JS writes `undefined` in an array
       struct(
         lit("Point").as("type"),
         array(
-          col("geometry.coordinates").getItem(0),
-          col("geometry.coordinates").getItem(1),
+          get(col("geometry.coordinates"), lit(0)),
+          get(col("geometry.coordinates"), lit(1)),
           -p("depth")
         ).as("coordinates")
       ).as("geometry")
     )
   }
 
-  /** The K1 payload around already-rendered feature JSON. */
-  private[quakes] def featureCollection(features: Iterator[String]): String =
-    features.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
+  private val CollectionHead = """{"type":"FeatureCollection","features":[""".getBytes(UTF_8)
+
+  /** The K1 payload around already-rendered feature JSON: each part is
+    * UTF-8 `feature,feature,…`; they are joined with `,` into one array
+    * and decoded once.
+    */
+  private[quakes] def featureCollection(parts: Seq[Array[Byte]]): String = {
+    val kept = parts.filter(_.nonEmpty)
+    val out = new ByteArrayOutputStream(
+      CollectionHead.length + kept.map(_.length + 1).sum + 2)
+    out.write(CollectionHead)
+    kept.iterator.zipWithIndex.foreach { case (part, i) =>
+      if (i > 0) out.write(',')
+      out.write(part)
+    }
+    out.write(']')
+    out.write('}')
+    out.toString(UTF_8)
+  }
 
   /** Weak keys: a stopped session's prepared snapshots go with it. */
   private val prepared =
@@ -247,17 +313,19 @@ object QuakePipeline {
     }
   }
 
+  private def plan(spark: SparkSession, cfg: QuakeConfig,
+      conf: Map[String, String]): PreparedSnapshot =
+    PreparedSnapshot(spark, snapshotQuery(spark, cfg), conf)
+
   /** [[transform]] and the snapshot's K1 rows (task.ts:251-256) — each
     * CoT feature's JSON, then its id — over an empty frame of feed rows
     * plus a `now` column, optimised but not executed.
     */
-  private def plan(spark: SparkSession, cfg: QuakeConfig,
-      conf: Map[String, String]): PreparedSnapshot = {
+  private[quakes] def snapshotQuery(spark: SparkSession, cfg: QuakeConfig): LogicalPlan = {
     val rows = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       GeoNetFeatureSchema.add(StructField("now", LongType, nullable = false)))
-    val query = transform(rows, cfg, col("now")).select(
+    transform(rows, cfg, col("now")).select(
       to_json(struct(col("id"), col("type"), col("properties"), col("geometry"))),
-      col("id"))
-    PreparedSnapshot(spark, query.queryExecution.optimizedPlan, conf)
+      col("id")).queryExecution.optimizedPlan
   }
 }

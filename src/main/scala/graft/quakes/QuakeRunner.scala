@@ -10,8 +10,10 @@ import graft.sources.{GeoNetHttp, HttpTransport}
   *
   * Network and clock are injected so the whole run is testable with a
   * fake transport and a pinned `now`; the Spark work in the middle is
-  * the session's [[PreparedSnapshot]] for the config, one map-only job
-  * per run with no query planning. Config errors throw before any fetch,
+  * the session's [[PreparedSnapshot]] for the config: per run, one
+  * map-only job named `GeoNet snapshot` over UTF-8 slices of the body,
+  * with no query planning, no closure cleaning and no code generation.
+  * Config errors throw before any fetch,
   * fetch/submit non-2xx throw with the reference's messages, and a body
   * that is not a FeatureCollection throws `Failed to parse data: …`
   * before anything is submitted — the caller decides whether to

@@ -107,7 +107,7 @@ object QuakeQueries {
        |         timezone('Pacific/Auckland', CAST(f.time AS TIMESTAMPTZ)) AS local_ts
        |  FROM features f, cfg c
        |  WHERE (c.now_ms - epoch_ms(CAST(f.time AS TIMESTAMPTZ))) / 60000.0 <= c.max_age_minutes
-       |    AND f.quality <> 'deleted'),
+       |    AND (f.quality IS NULL OR f.quality <> 'deleted')),
        |ago AS (
        |  SELECT *,
        |    CASE WHEN mins < 60 THEN mins || ' minute' || (CASE WHEN mins = 1 THEN '' ELSE 's' END) || ' ago'
@@ -174,7 +174,7 @@ object QuakeQueries {
        |FROM features
        |WHERE mmi >= 5
        |  AND ($FixtureNowMs - epoch_ms(CAST(time AS TIMESTAMPTZ))) / 60000.0 <= $maxAge
-       |  AND quality <> 'deleted'
+       |  AND (quality IS NULL OR quality <> 'deleted')
        |ORDER BY id""".stripMargin
   }
 

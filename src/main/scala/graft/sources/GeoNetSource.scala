@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.caseSensitiveResolution
 import org.apache.spark.sql.catalyst.expressions
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
-  ExtractValue, GenericInternalRow, Literal, Predicate, UnsafeProjection}
+  ExtractValue, GenericInternalRow, GetArrayItem, Literal, Predicate, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -267,7 +267,8 @@ final class GeoNetPartitionReaderFactory(mmiMin: Option[Int],
       else {
         val parser = QuakePipeline.featureParser(options)
         val kept = keep.map(Predicate.create(_))
-        QuakePipeline.featureTexts(body).iterator.flatMap(parser.parse)
+        val slices = QuakePipeline.featureSlices(body)
+        Iterator.range(0, slices.size).flatMap(i => parser.parse(slices.utf8(i)))
           .filter(row => kept.forall(_.eval(row)))
           .map(UnsafeProjection.create(columns))
       }
@@ -299,8 +300,8 @@ object GeoNetSource {
       }
 
   /** A flat column over the feed row, the inverse of [[nest]]: `lon` and
-    * `lat` are `geometry.coordinates[0]` and `[1]`, any other column is
-    * `properties.<name>`.
+    * `lat` are `geometry.coordinates[0]` and `[1]`, null where the array
+    * is shorter, and any other column is `properties.<name>`.
     */
   private[sources] def flatColumn(name: String): Expression = {
     def top(field: String) = {
@@ -309,9 +310,11 @@ object GeoNetSource {
     }
     def get(parent: Expression, step: Any) =
       ExtractValue(parent, Literal(step), caseSensitiveResolution)
+    def coordinate(i: Int) =
+      GetArrayItem(get(top("geometry"), "coordinates"), Literal(i), failOnError = false)
     name match {
-      case "lon" => get(get(top("geometry"), "coordinates"), 0)
-      case "lat" => get(get(top("geometry"), "coordinates"), 1)
+      case "lon" => coordinate(0)
+      case "lat" => coordinate(1)
       case _ => get(top("properties"), name)
     }
   }

@@ -1,6 +1,10 @@
 package graft.quakes
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.grafttest.ListenerBusBridge
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -101,6 +105,26 @@ class QuakeRunnerSpec extends AnyFunSuite {
     assert(QuakePipeline.featureTexts(body) == Vector(a, b))
   }
 
+  test("feature slices are exact byte ranges of the UTF-8 body") {
+    val a = """{"properties":{"locality":"Ōtaki \"north\" 🌏"}}"""
+    val b = """{"geometry":{"coordinates":[1.5,-2]}}"""
+    val head = """{"type":"FeatureCollection","features":[null,"""
+    val beforeB = s"$head\n$a,\n null ,\r\n  "
+    val body = s"$beforeB$b\n]}"
+    def bytes(s: String) = s.getBytes(UTF_8).length
+    val slices = QuakePipeline.featureSlices(body)
+    assert(slices.bytes.sameElements(body.getBytes(UTF_8)))
+    val (aStart, bStart) = (bytes(head) + 1, bytes(beforeB))
+    assert(slices.bounds.toSeq ==
+      Seq(aStart, aStart + bytes(a), bStart, bStart + bytes(b)))
+    assert((0 until slices.size).map(slices.utf8(_).toString) == Seq(a, b))
+    // a chunk copies just its features' bytes, with offsets into the copy
+    val second = slices.chunk(1, 2)
+    assert(new String(second.bytes, UTF_8) == b)
+    assert(second.bounds.toSeq == Seq(0, bytes(b)))
+    assert(slices.chunk(0, 2).utf8(1).toString == b)
+  }
+
   test("the fixture parses into min(6, defaultParallelism) > 1 partitions") {
     val n = math.min(6, spark.sparkContext.defaultParallelism)
     assert(n > 1)
@@ -117,6 +141,34 @@ class QuakeRunnerSpec extends AnyFunSuite {
     assert(jobs == 1)
     assert(stages == 1)
     assert(shuffleWrite == 0L)
+  }
+
+  test("each run's job is described as `GeoNet snapshot`, and the " +
+    "caller's description and other local properties are kept") {
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.add((js.properties.getProperty("spark.job.description"),
+          js.properties.getProperty("caller.op")))
+        ()
+      }
+    }
+    ListenerBusBridge.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    sc.setJobDescription("the caller's job")
+    sc.setLocalProperty("caller.op", "7")
+    try {
+      assert(runOn(serving(FixtureJson)) == 5)
+      ListenerBusBridge.waitUntilEmpty(sc)
+      assert(sc.getLocalProperty("spark.job.description") == "the caller's job")
+      assert(sc.getLocalProperty("caller.op") == "7")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+      sc.setLocalProperty("caller.op", null)
+    }
+    assert(jobs.asScala.toSeq == Seq(("GeoNet snapshot", "7")))
   }
 
   test("a second run with a new nowMs reuses the prepared snapshot and " +

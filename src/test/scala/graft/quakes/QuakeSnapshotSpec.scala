@@ -1,7 +1,10 @@
 package graft.quakes
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -91,6 +94,27 @@ class QuakeSnapshotSpec extends AnyFunSuite {
     assert(count(body, QuakeConfig()) == 5)
   }
 
+  test("a null quality keeps the feature, as JS does (`null !== 'deleted'`)") {
+    val body = collection(
+      feature(1, "5", "Ōtaki").replace(""""quality":"best"""", """"quality":null"""),
+      feature(2, "5", "Rotorua").replace(""""quality":"best"""", """"quality":"deleted""""))
+    val cfg = QuakeConfig(maxAgeMinutes = 525600.0)
+    val (json, n) = assertSameSnapshot(body, cfg)
+    assert(n == 1)
+    assert(json.contains(""""id":"earthquake-2026p10001""""), json)
+  }
+
+  test("a short coordinates array reads its missing elements as null, as " +
+    "JS writes `undefined` in an array") {
+    val body = collection(
+      feature(1, "5", "Ōtaki", coordinates = "[174.2]"),
+      feature(2, "5", "Rotorua", coordinates = "[]"))
+    val (json, n) = assertSameSnapshot(body, QuakeConfig(maxAgeMinutes = 525600.0))
+    assert(n == 2)
+    assert(json.contains(""""coordinates":[174.2,null,-10.5]"""), json)
+    assert(json.contains(""""coordinates":[null,null,-10.5]"""), json)
+  }
+
   test("timeAgo minute, hour and day boundaries between two run clocks") {
     val nowMs = FixtureNowMs
     def at(ms: Long) = java.time.Instant.ofEpochMilli(ms).toString
@@ -137,6 +161,28 @@ class QuakeSnapshotSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException](PreparedSnapshot(spark,
       spark.range(1).queryExecution.optimizedPlan, Map.empty))
     assert(e.getMessage.contains("Range"), e.getMessage)
+  }
+
+  test("the prepared plan hoists one run constant, `stale`") {
+    val (constants, _) =
+      PreparedSnapshot.compile(QuakePipeline.snapshotQuery(spark, QuakeConfig()))
+    assert(constants.size == 1)
+    assert(constants.head.eval(InternalRow(FixtureNowMs)) ==
+      UTF8String.fromString("2026-08-07T00:05:00.000Z"))
+  }
+
+  test("expressions that mix `now` with row columns are not hoisted") {
+    val rows = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      GeoNetFeatureSchema.add(StructField("now", LongType, nullable = false)))
+    val p = col("properties")
+    val eventMs = unix_millis(to_timestamp(p("time")))
+    val query = rows.filter(col("now") - eventMs < 60000L)
+      .select(col("now"), (col("now") + p("mmi")).as("plus"),
+        array(col("now"), eventMs).as("both"))
+      .queryExecution.optimizedPlan
+    val (constants, steps) = PreparedSnapshot.compile(query)
+    assert(constants.isEmpty)
+    assert(steps.size == 2)
   }
 
   test("the snapshot does not depend on the session time zone") {

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -77,7 +78,9 @@ class GeoNetSourceSpec extends AnyFunSuite {
     "parser does") {
     val noId = oneFeature(""""publicID":"2026p000001",""" -> "")
     val noMmi = oneFeature(""""mmi":6""" -> """"mmi":null""")
-    val bodies = Seq(noId, noMmi,
+    val lonOnly = oneFeature("[174.27,-41.67]" -> "[174.2]")
+    val noLonLat = oneFeature("[174.27,-41.67]" -> "[]")
+    val bodies = Seq(noId, noMmi, lonOnly, noLonLat,
       oneFeature(""""quality":"best"""" -> """"quality":null"""),
       oneFeature(""""locality":"15 km east of Seddon"""" -> """"locality":null"""),
       oneFeature(""""depth":12.3,""" -> ""),
@@ -94,6 +97,9 @@ class GeoNetSourceSpec extends AnyFunSuite {
       assert(viaSource == viaJson, body)
     }
     assert(flat(noId).head().isNullAt(0)) // publicID
+    // a short coordinates array reads its missing elements as null
+    assert(flat(lonOnly).select("lon", "lat").head() == Row(174.2, null))
+    assert(flat(noLonLat).select("lon", "lat").head() == Row(null, null))
     // a null mmi fails the pushed mmi >= v, as SQL would
     assert(flat(noMmi).count() == 1 && flat(noMmi).filter(col("mmi") >= -1).count() == 0)
   }
