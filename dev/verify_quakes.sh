@@ -10,7 +10,10 @@
 #     the streaming sink) byte-identical to a `to_json(collect_list(...))`
 #     oracle over transform; GeoNetSourceSpec, which holds the `geonet`
 #     source's flat rows (read with the snapshot's feed parser) equal to
-#     the JSON reader's on odd and null fields; and QuakeStreamSpec and
+#     the JSON reader's on odd and null fields; HttpTransportSpec, which
+#     runs QuakeRunner's full control loop (fetch, snapshot, submit, and
+#     its failure and invalid-config paths) and the source's live `?MMI=`
+#     GET through the transport seam; and QuakeStreamSpec and
 #     GeoNetStreamingSpec, which run the snapshot from landed files and
 #     `geonet` fetches with the sink's per-batch clock and expiry contract.
 #
@@ -49,4 +52,4 @@ echo "$REPORT"
 grep -q "^${#QUERIES[@]} pass, 0 close, 0 fail" <<< "$REPORT"
 
 echo "[quakes] running the snapshot specs..."
-sbt -batch "testOnly graft.quakes.* graft.sources.GeoNetSourceSpec graft.streaming.QuakeStreamSpec graft.streaming.GeoNetStreamingSpec"
+sbt -batch "testOnly graft.quakes.* graft.sources.GeoNetSourceSpec graft.sources.HttpTransportSpec graft.streaming.QuakeStreamSpec graft.streaming.GeoNetStreamingSpec"

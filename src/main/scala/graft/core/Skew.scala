@@ -3,16 +3,14 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew-mitigation primitives (builder prompt: "skewed keys → salting or
-  * AQE skew-join").
+/** Skew mitigation for heavy-hitter AGGREGATION keys (q58).
   *
-  * AQE's skew-join splitting handles sort-merge joins automatically; these
-  * helpers cover the two cases it does not: heavy-hitter AGGREGATION keys
-  * (one reducer owns the hot key) and hash joins where the hot key's rows
-  * must be spread across many tasks. Both trade a bounded replication /
-  * extra partial phase for even task sizes — at 100 TB a single hot key
-  * (the empty document, a default user id, a null-ish sentinel) otherwise
-  * turns one task into the job's critical path.
+  * AQE's skew-join splitting already handles skewed sort-merge joins
+  * (AqeSkewSpec); it does not help an aggregate, where one reducer owns
+  * the hot key. Salting trades an extra partial phase for even task
+  * sizes — at 100 TB a single hot key (the empty document, a default
+  * user id, a null-ish sentinel) otherwise turns one task into the job's
+  * critical path.
   */
 object Skew {
 
@@ -34,19 +32,4 @@ object Skew {
       .groupBy("k")
       .agg(sum(col("pv")).cast("double").as("total"),
         sum(col("pn")).as("n"))
-
-  /** Salted equi-join of a skewed fact against a non-broadcastable dim:
-    * the fact side gets a deterministic salt in [0, buckets); the dim side
-    * is replicated `buckets` times with every salt value; joining on
-    * (key, salt) spreads each hot key over `buckets` tasks. Replication
-    * cost is buckets × |dim| — use only when the dim is too big to
-    * broadcast but far smaller than the fact.
-    */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String,
-      factSaltBy: Column, buckets: Int): DataFrame = {
-    val saltedFact = fact.withColumn("_salt", pmod(hash(factSaltBy), lit(buckets)))
-    val saltedDim = dim.withColumn("_salt",
-        explode(array((0 until buckets).map(lit): _*)))
-    saltedFact.join(saltedDim, Seq(key, "_salt")).drop("_salt")
-  }
 }

@@ -313,7 +313,7 @@ object RelationalQueries {
       .orderBy("o_orderstatus")
 
   /** q58 — two-phase SALTED aggregation over a heavy-hitter key
-    * ([[graft.core.Skew.saltedSum]], registered so the skew helpers get
+    * ([[graft.core.Skew.saltedSum]], registered so the skew helper gets
     * an oracle-checked row, not just SkewSpec's equality proof).
     * `l_returnflag` has 3 values — the textbook hot-key aggregation where
     * one reducer owns a third of a 100 TB fact table. The salted form

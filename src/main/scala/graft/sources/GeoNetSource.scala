@@ -176,8 +176,6 @@ final class GeoNetMicroBatchStream(options: Map[String, String],
 
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
-  private val progressed = new java.util.concurrent.atomic.AtomicLong(0L)
-
   // AvailableNow contract: after prepare, latestOffset must return a
   // FIXED offset (the engine drains up to it, then terminates); we fix it
   // to start+1 on the first post-prepare call — one fresh snapshot per
@@ -207,8 +205,11 @@ final class GeoNetMicroBatchStream(options: Map[String, String],
     } else GeoNetOffset(s + 1)
   }
 
-  /** Legacy no-arg form (not called when admission control is present). */
-  override def latestOffset(): Offset = GeoNetOffset(progressed.get() + 1)
+  /** Never called: the engine asks a source with admission control for
+    * `latestOffset(start, limit)` only.
+    */
+  override def latestOffset(): Offset = throw new UnsupportedOperationException(
+    "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   override def deserializeOffset(json: String): Offset =
     GeoNetOffset(json.trim.toLong)
@@ -236,7 +237,6 @@ final class GeoNetMicroBatchStream(options: Map[String, String],
 
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[GeoNetOffset].n
-    progressed.updateAndGet(cur => math.max(cur, e))
     bodies.keySet().removeIf(_ <= e) // committed snapshots won't replan
   }
 

@@ -40,18 +40,10 @@ object QuakeStream {
       .option("maxFilesPerTrigger", "1")
       .text(dir)
 
-  /** One row per GeoNet feature per fetched snapshot, via the `geonet`
-    * source's micro-batch stream: every trigger performs one feed fetch
-    * (or re-reads the `body`/`path` option). The reference's cron loop as
-    * a continuous query.
-    */
-  def geonetStream(spark: SparkSession,
-      options: Map[String, String]): DataFrame =
-    spark.readStream.format("graft.sources.GeoNetTableProvider")
-      .options(options).load()
-
-  /** [[geonetStream]]'s fetches as bodies: one row per trigger, the
-    * response text in column `value`, the shape of [[landedBodies]].
+  /** The `geonet` source's micro-batch stream as bodies: every trigger
+    * performs one feed fetch (or re-reads the `body`/`path` option), the
+    * reference's cron loop as a continuous query. One row per trigger,
+    * the response text in column `value`, the shape of [[landedBodies]].
     * A live fetch asks for `?MMI=${cfg.mmi}`, as `QuakeRunner.run` does:
     * `cfg.mmi` sets the source's `mmi` option, over any in `options`.
     */
@@ -91,9 +83,7 @@ object QuakeStream {
     * batch reads the newest state OLDER than itself, so a replayed batch
     * recomputes against the same baseline and overwrites its own state —
     * idempotent. The set is snapshot-sized (one API response, ~100
-    * features — task.ts:176), so driver-side text files match the scale;
-    * an unbounded id universe would move this to the
-    * `flatMapGroupsWithState` machinery in [[EventStreaming.expireStale]].
+    * features — task.ts:176), so driver-side text files match the scale.
     *
     * @param bodies    one string column, one response body per
     *                  micro-batch: [[landedBodies]] or [[geonetBodies]]

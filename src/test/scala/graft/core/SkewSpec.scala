@@ -36,8 +36,10 @@ class SkewSpec extends AnyFunSuite {
     val dim = Tables.nation(spark, sf).withColumnRenamed("n_nationkey", "nation_key")
     val plain = ev.join(dim, Seq("nation_key"))
       .select("event_id", "n_name").collect().toSet
-    val salted = Skew.saltedJoin(ev, dim, "nation_key",
-        factSaltBy = col("event_id"), buckets = 4)
+    // the fact side salted in [0, 4), the dim side replicated per salt
+    val salted = ev.withColumn("_salt", pmod(hash(col("event_id")), lit(4)))
+      .join(dim.withColumn("_salt", explode(array((0 until 4).map(lit): _*))),
+        Seq("nation_key", "_salt"))
       .select("event_id", "n_name").collect().toSet
     assert(salted == plain)
   }

@@ -2,16 +2,48 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Stateful stale-key expiry (flatMapGroupsWithState + event-time
-  * timeout) — the streaming form of the sink's snapshot-expiry contract.
+case class KeyedObs(id: String, ts: Timestamp)
+case class Expired(id: String, last_seen: Timestamp)
+
+/** `flatMapGroupsWithState` with an event-time timeout: a per-key TTL
+  * that emits a key once the watermark passes its last sighting plus
+  * `staleMs`. This is not the sink's snapshot expiry (J2, a feature
+  * absent from this run's snapshot expires), which
+  * `QuakeStream.submitSnapshots` computes as `live -- current`.
   */
 class ExpirySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  private def expireAfterTtl(events: Dataset[KeyedObs],
+      staleMs: Long): Dataset[Expired] = {
+    import events.sparkSession.implicits._
+    events
+      .withWatermark("ts", "0 seconds")
+      .groupByKey(_.id)
+      .flatMapGroupsWithState[Timestamp, Expired](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (id: String, obs: Iterator[KeyedObs], state: GroupState[Timestamp]) =>
+          if (state.hasTimedOut) {
+            val last = state.get
+            state.remove()
+            Iterator.single(Expired(id, last))
+          } else {
+            val newest = obs.map(_.ts).maxBy(_.getTime)
+            val last = state.getOption.fold(newest)(cur =>
+              if (cur.after(newest)) cur else newest)
+            state.update(last)
+            state.setTimeoutTimestamp(last.getTime + staleMs)
+            Iterator.empty
+          }
+      }
+  }
 
   private def t(min: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 ${min / 60}%02d:${min % 60}%02d:00")
@@ -20,8 +52,7 @@ class ExpirySpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[KeyedObs]
-    val q = EventStreaming
-      .expireStale(source.toDS(), staleMs = 5 * 60 * 1000)
+    val q = expireAfterTtl(source.toDS(), staleMs = 5 * 60 * 1000)
       .writeStream.format("memory").queryName("expiry")
       .outputMode("append").start()
 

@@ -81,7 +81,8 @@ class GeoNetStreamingSpec extends AnyFunSuite {
     val saved = GeoNetHttp.defaultTransport
     GeoNetHttp.defaultTransport = t
     try {
-      val flat = QuakeStream.geonetStream(spark, Map.empty)
+      val flat =
+        spark.readStream.format("graft.sources.GeoNetTableProvider").load()
       val q = flat.writeStream.format("memory").queryName("geonet_fail")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", newCheckpoint())
@@ -98,7 +99,8 @@ class GeoNetStreamingSpec extends AnyFunSuite {
   }
 
   test("streaming scan still honors body option and the source schema") {
-    val flat = QuakeStream.geonetStream(spark, Map("body" -> FixtureJson))
+    val flat = spark.readStream.format("graft.sources.GeoNetTableProvider")
+      .option("body", FixtureJson).load()
     assert(flat.isStreaming)
     assert(flat.schema === GeoNetSource.FlatSchema)
     val out = flat.filter(col("mmi") >= 5)

@@ -739,7 +739,8 @@ class StreamingAdmissionSpec extends AnyFunSuite {
     val got = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Boolean, Long, Long)]
     val q = StreamingAdmission.admissionQuery(
-        asDocs(QuakeStream.geonetStream(spark, Map("body" -> FixtureJson))),
+        asDocs(spark.readStream.format("graft.sources.GeoNetTableProvider")
+          .option("body", FixtureJson).load()),
         storeBands,
         java.nio.file.Files.createTempDirectory("geo_adm_ckpt").toString) {
       (verdicts, _) => got.synchronized { got ++= verdictRows(verdicts) }; ()
