@@ -3,6 +3,9 @@
 
 Usage: python3 dev/compare.py <sfDir> <verifyOutDir> [--json <path>] [query ...]
 
+Exits 1 if any query FAILs or is only CLOSE, or if a named query has no
+oracle entry; 0 otherwise.
+
 --json writes the per-query results as a CORRECTNESS-style artifact
 (rows_match / schema_match / hash_match per query) in addition to the
 text report — the sf0.1 spot-check tier (dev/verify_sf01.sh) commits
@@ -85,6 +88,10 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = n_close = 0
+    for name in sorted(only - oracle.keys()):
+        print(f"FAIL {name}: no oracle entry")
+        record(name, None, None, None, err="no oracle entry")
+        n_fail += 1
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
@@ -156,11 +163,12 @@ def main():
             record(name, True, True, True, len(srows), len(orows))
             n_pass += 1
     print(f"\n{n_pass} pass, {n_close} close, {n_fail} fail "
-          f"(+{len([k for k in json.load(open(f'{out_dir}/oracle_sql.json'))])} oracles total)")
+          f"(+{len(oracle)} oracles total)")
     if json_path:
         with open(json_path, "w") as f:
             json.dump(dict(sorted(report.items())), f, indent=2)
         print(f"wrote {json_path}")
+    return 1 if n_fail or n_close else 0
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

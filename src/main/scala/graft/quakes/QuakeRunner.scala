@@ -30,13 +30,13 @@ object QuakeRunner {
 
   /** @param env       env-style config ('MMI', 'Max Age Minutes')
     * @param submitUrl where the snapshot FeatureCollection is POSTed
-    * @param transport HTTP seam (defaults to the process-wide transport)
+    * @param transport HTTP seam (defaults to [[GeoNetHttp.LiveTransport]])
     * @param nowMs     run clock, captured once (task.ts:184)
     * @param log       sink for the reference's `ok - ...` lines
     * @return number of features submitted
     */
   def run(spark: SparkSession, env: Map[String, String], submitUrl: String,
-      transport: HttpTransport = GeoNetHttp.defaultTransport,
+      transport: HttpTransport = GeoNetHttp.LiveTransport,
       nowMs: Long = System.currentTimeMillis(),
       log: String => Unit = println): Long = {
     val cfg = QuakeConfig.fromEnv(env)

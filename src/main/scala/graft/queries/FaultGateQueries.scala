@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables._
+import graft.queries.StreamingQueries.{runDirs, spoolStream, withSessionConfs}
 
 /** Execution-fault gates (q272–q274): the engine's behavior under the
   * conditions a 100 TB cluster actually runs in — task retries, memory
@@ -80,16 +81,6 @@ object FaultGateQueries {
       it
     }
     s.createDataFrame(rdd, schema)
-  }
-
-  private[queries] def withConf[T](s: SparkSession)(kvs: (String, String)*)(
-      body: => T): T = {
-    val saved = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
   }
 
   /** Every physical node, recursing through the AQE wrappers a plain
@@ -226,7 +217,7 @@ object FaultGateQueries {
   // separate limited plan whose metrics stay zero).
   // ─────────────────────────────────────────────────────────────────
   val q273SpillGate: Q = (s, d) =>
-    withConf(s)(
+    withSessionConfs(s,
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2",
       "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "16",
       "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "16",
@@ -307,7 +298,7 @@ object FaultGateQueries {
   // nothing), so the detector can flip.
   // ─────────────────────────────────────────────────────────────────
   val q299WindowSpillGate: Q = (s, d) =>
-    withConf(s)(
+    withSessionConfs(s,
       "spark.sql.windowExec.buffer.in.memory.threshold" -> "16",
       "spark.sql.windowExec.buffer.spill.threshold" -> "16") {
       val w = org.apache.spark.sql.expressions.Window
@@ -360,7 +351,7 @@ object FaultGateQueries {
   // proportional to data, not to a static shuffle.partitions.
   // ─────────────────────────────────────────────────────────────────
   val q274AqeGate: Q = (s, d) =>
-    withConf(s)(
+    withSessionConfs(s,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
@@ -393,7 +384,7 @@ object FaultGateQueries {
       val joinedRow = joined.collect()(0)
       val skewed = metricSum(joined, "numSkewedPartitions")
 
-      val coalesce = withConf(s)(
+      val coalesce = withSessionConfs(s,
         "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m") {
         val df = docs.groupBy(expr("doc_id % 16").as("bucket"))
@@ -450,21 +441,12 @@ object FaultGateQueries {
   // ─────────────────────────────────────────────────────────────────
   val q277StreamingRetry: Q = (s, d) => {
     val spDir = StreamingQueries.docSpool(s, d)
-    val base = RunStore.tableName("graft_stream_retry", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_retry", d)("_ckpt", "_out")
     val tag = freshTag()
-    s.readStream.schema(s.read.parquet(spDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(spDir)
+    spoolStream(s, spDir, 1)
       .writeStream
-      .option("checkpointLocation", path("_ckpt").toString)
+      .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         StreamingQueries.writeBatch(

@@ -906,19 +906,13 @@ object IngestQueries {
     jsonlReport(decoded)
   }
 
-  /** A fresh landing directory under the warehouse for the at-rest
-    * format round-trips (q222–q224), reset at entry like every
-    * re-runnable query fixture.
+  /** A fresh landing directory for the at-rest format round-trips
+    * (q222–q224): the `_data` run dir of `graft_<tag>`
+    * ([[StreamingQueries.runDirs]]).
     */
   private[queries] def landingDir(s: org.apache.spark.sql.SparkSession,
-      d: String, tag: String): String = {
-    val dir = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      RunStore.tableName(s"graft_$tag", d) + "_data")
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    dir.toString
-  }
+      d: String, tag: String): String =
+    StreamingQueries.runDirs(s, s"graft_$tag", d)("_data").head
 
   /** q222 — CSV INGEST round-trip (q200's discipline for the other
     * format real corpora land in): the documents table — hazard meta

@@ -5,7 +5,8 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables._
-import graft.queries.FaultGateQueries.{allNodes, withConf}
+import graft.queries.FaultGateQueries.allNodes
+import graft.queries.StreamingQueries.withSessionConfs
 
 /** Plan-mechanism gates (q278–q288): the physical-plan
   * mechanisms a 100 TB deployment leans on that were previously proved
@@ -113,7 +114,7 @@ object PlanGateQueries {
       bucketKeys = Seq("doc_id"), sortKeys = Seq("doc_id"))
     graft.core.Tables.writeBucketedSorted(meta, tm, numBuckets = 8,
       bucketKeys = Seq("doc_id"), sortKeys = Seq("doc_id"))
-    withConf(s)(
+    withSessionConfs(s,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       def joinNode(df: DataFrame): Option[SparkPlan] = {
@@ -174,7 +175,7 @@ object PlanGateQueries {
   // without this switch every such join is a full corpus shuffle.
   // ─────────────────────────────────────────────────────────────────
   val q279AqeJoinSwitch: Q = (s, d) =>
-    withConf(s)(
+    withSessionConfs(s,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "1m") {
@@ -222,7 +223,7 @@ object PlanGateQueries {
   // its corpus I/O; with it, the second leg costs one map-output read.
   // ─────────────────────────────────────────────────────────────────
   val q280ExchangeReuse: Q = (s, d) =>
-    withConf(s)(
+    withSessionConfs(s,
       "spark.sql.exchange.reuse" -> "true",
       // broadcast off: a broadcast of side b would still reuse the
       // underlying shuffle, but the SMJ shape keeps the census exact
@@ -293,7 +294,7 @@ object PlanGateQueries {
         if (codegen) Seq("spark.sql.codegen.wholeStage" -> "true")
         else Seq("spark.sql.codegen.wholeStage" -> "false",
           "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-      withConf(s)(confs: _*) {
+      withSessionConfs(s, confs: _*) {
         val scrub = LuhnScrub.luhnScrub(aug)
         val perLang = documents(s, d).select(
           col("lang"), col("doc_id"),
@@ -553,7 +554,7 @@ object PlanGateQueries {
   // pushdown (empty PushedAggregation) and still answer correctly.
   // ─────────────────────────────────────────────────────────────────
   val q286AggregatePushdown: Q = (s, d) => {
-    val (rows, scanDesc) = withConf(s)(
+    val (rows, scanDesc) = withSessionConfs(s,
       "spark.sql.parquet.aggregatePushdown" -> "true",
       "spark.sql.sources.useV1SourceList" -> "") {
       val agg = s.read.parquet(s"$d/documents.parquet")
@@ -618,7 +619,7 @@ object PlanGateQueries {
     def kg(dir: String, ddl: String): DataFrame =
       s.read.format("graft-kg").option("path", dir)
         .option("schema", ddl).option("key", "source").load()
-    withConf(s)(
+    withSessionConfs(s,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
@@ -689,7 +690,7 @@ object PlanGateQueries {
   val q288VectorizedParity: Q = (s, d) => {
     def leg(vectorized: Boolean)
         : (Seq[(String, Long, Long)], Long, Boolean) =
-      withConf(s)(
+      withSessionConfs(s,
         "spark.sql.parquet.enableVectorizedReader" -> vectorized.toString) {
         val perLang = documents(s, d)
           .groupBy("lang")

@@ -46,10 +46,11 @@ object StreamingQueries {
     * ranges) NEED their write order to be the processing order. Called
     * after each ordered append with a monotonically increasing epoch.
     */
-  private def stampOrder(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, stamped: scala.collection.mutable.Set[String],
-      epoch: Long): Unit =
-    fs.listStatus(dir)
+  private def stampOrder(s: SparkSession, dir: String,
+      stamped: scala.collection.mutable.Set[String], epoch: Long): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.listStatus(p)
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
       .sortBy(_.getPath.getName)
       .foreach { st =>
@@ -58,6 +59,7 @@ object StreamingQueries {
           stamped += st.getPath.getName
         }
       }
+  }
 
   // ------------------------------------------------------ shared spools
 
@@ -119,8 +121,7 @@ object StreamingQueries {
     */
   private def ensureSpool(s: SparkSession, d: String, name: String,
       version: String, sourceFile: String)(
-      build: (org.apache.hadoop.fs.Path,
-        org.apache.hadoop.fs.FileSystem) => Map[String, String]): SpoolInfo =
+      build: String => Map[String, String]): SpoolInfo =
     spoolMemo.computeIfAbsent(s"$name|$d", _ => {
       val base = RunStore.tableName(s"graft_spool_$name", d)
       val dir = new org.apache.hadoop.fs.Path(
@@ -158,7 +159,7 @@ object StreamingQueries {
           }.getOrElse {
             spoolModes.put(s"$name|$d", "built")
             if (fs.exists(dir)) fs.delete(dir, true)
-            val meta = build(dir, fs)
+            val meta = build(dir.toString)
             val props = new java.util.Properties()
             props.setProperty("fingerprint", fp)
             props.setProperty("manifest", spoolManifest(fs, dir))
@@ -221,14 +222,14 @@ object StreamingQueries {
 
   private[graft] def eventSpool(s: SparkSession, d: String): EventSpool = {
     val info = ensureSpool(s, d, "events", "v1", "events.parquet") {
-      (dir, fs) =>
+      dir =>
         val ev = graft.core.Tables.events(s, d)
           .select(col("user_id"), col("ts"), col("event_id"),
             col("event_type"), col("value"))
-        ev.repartition(3).write.parquet(dir.toString)
+        ev.repartition(3).write.parquet(dir)
         val stamped = scala.collection.mutable.Set.empty[String]
         var epoch = SpoolStampBase
-        stampOrder(fs, dir, stamped, epoch)
+        stampOrder(s, dir, stamped, epoch)
         val span = ev.agg(min(col("ts")), max(col("ts")), min(col("user_id")))
           .head()
         val (minTs, maxTs) =
@@ -242,9 +243,9 @@ object StreamingQueries {
               org.apache.spark.sql.Row(sentinelUid,
                 new java.sql.Timestamp(ts), Long.MaxValue, "sentinel", 0.0)),
             ev.schema)
-            .write.mode("append").parquet(dir.toString)
+            .write.mode("append").parquet(dir)
           epoch += 1000
-          stampOrder(fs, dir, stamped, epoch)
+          stampOrder(s, dir, stamped, epoch)
         }
         Map("min_ts" -> minTs.toString, "max_ts" -> maxTs.toString,
           "sentinel_uid" -> sentinelUid.toString)
@@ -266,9 +267,9 @@ object StreamingQueries {
     * monoid, so no stamping or sentinels are needed).
     */
   private[graft] def cdcSpool(s: SparkSession, d: String): String =
-    ensureSpool(s, d, "cdc", "v1", "documents.parquet") { (dir, _) =>
+    ensureSpool(s, d, "cdc", "v1", "documents.parquet") { dir =>
       IngestQueries.cdcFeed(s, d)
-        .repartition(3).write.parquet(dir.toString)
+        .repartition(3).write.parquet(dir)
       Map.empty
     }.dir
 
@@ -286,21 +287,13 @@ object StreamingQueries {
   }
 
   private[graft] def docSpool(s: SparkSession, d: String): String =
-    ensureSpool(s, d, "docs", "v2", "documents.parquet") { (dir, _) =>
+    ensureSpool(s, d, "docs", "v2", "documents.parquet") { dir =>
       graft.core.Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-        .repartition(3).write.parquet(dir.toString)
+        .repartition(3).write.parquet(dir)
       Map.empty
     }.dir
 
-  /** Micro-batches here carry O(|delta|/nFiles) rows, so the session's
-    * batch-sized shuffle-partition count just multiplies per-trigger
-    * task/state overhead for empty gain — pin it low for the stream's
-    * duration (state partition counts bake in at stream start; each
-    * run starts a fresh checkpoint, so this never conflicts with a
-    * prior run's layout). At 100 TB the equivalent knob is sizing
-    * shuffle partitions to the micro-batch, not the backfill.
-    */
   /** Stream shuffle-partition count: env-overridable for measurement
     * and deployment sizing (SPARK_GRAFT_STREAM_PARTITIONS), default 4.
     *
@@ -372,16 +365,17 @@ object StreamingQueries {
       .getOrElse(throw new IllegalArgumentException(s"SPARK_GRAFT_SPOOL_FPT " +
         s"must be 1 or 2, not '$v': at 3 or more the final windows can be lost")))
 
+  /** Micro-batches here carry O(|delta|/nFiles) rows, so the session's
+    * batch-sized shuffle-partition count just multiplies per-trigger
+    * task/state overhead for empty gain — pin it low for the stream's
+    * duration (state partition counts bake in at stream start; each
+    * run starts a fresh checkpoint, so this never conflicts with a
+    * prior run's layout). At 100 TB the equivalent knob is sizing
+    * shuffle partitions to the micro-batch, not the backfill.
+    */
   private def withFewShufflePartitions[T](s: SparkSession)(body: => T): T =
-    withShufflePartitions(s, StreamShufflePartitions)(body)
-
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(
-      body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, saved)
-  }
+    withSessionConfs(s,
+      "spark.sql.shuffle.partitions" -> StreamShufflePartitions.toString)(body)
 
   /** IDEMPOTENT per-batch parquet sink (round-9 verdict #4): each
     * micro-batch overwrites its own `batch_id=<id>` partition
@@ -401,37 +395,72 @@ object StreamingQueries {
   private[graft] def readSink(s: SparkSession, outPath: String): DataFrame =
     s.read.parquet(outPath).drop("batch_id")
 
+  /** The run dirs of one streaming query: its checkpoint, sinks, state
+    * and private spools. Each lives at
+    * `<spark.sql.warehouse.dir>/<RunStore.tableName(prefix, d)><suffix>`,
+    * and each is deleted here, at entry, before the query writes
+    * anything. A stale checkpoint would replay nothing and a stale sink
+    * would be read back as this run's result, so the reset is what lets
+    * a query run again in one JVM (Bench warmup and repeats, Verify,
+    * every perfbench pass). Returns the dirs' paths in `suffixes` order.
+    */
+  private[queries] def runDirs(s: SparkSession, prefix: String, d: String)(
+      suffixes: String*): Seq[String] = {
+    val warehouse = s.conf.get("spark.sql.warehouse.dir")
+    val base = RunStore.tableName(prefix, d)
+    suffixes.map { suffix =>
+      val p = new org.apache.hadoop.fs.Path(warehouse, base + suffix)
+      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) fs.delete(p, true)
+      p.toString
+    }
+  }
+
+  /** The parquet files under `dir` as a stream, `filesPerTrigger` files
+    * per micro-batch, with the schema the files were written with.
+    */
+  private[queries] def spoolStream(s: SparkSession, dir: String,
+      filesPerTrigger: Int): DataFrame =
+    s.readStream
+      .schema(s.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", filesPerTrigger)
+      .parquet(dir)
+
+  /** Drain `stream` under `AvailableNow` with its checkpoint at `ckpt`,
+    * each micro-batch written unchanged to the [[writeBatch]] sink at
+    * `outPath`, under [[withFewShufflePartitions]]; read the result back
+    * with [[readSink]].
+    */
+  private def drainToSink[T](s: SparkSession, ckpt: String, outPath: String)(
+      stream: => org.apache.spark.sql.Dataset[T]): Unit =
+    withFewShufflePartitions(s) {
+      stream.writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch {
+          (batch: org.apache.spark.sql.Dataset[T], batchId: Long) =>
+            writeBatch(batch.toDF(), outPath, batchId)
+        }
+        .start().awaitTermination()
+    }
+
   /** Spool `delta` to parquet (`nFiles` files), stream it back one file
     * per trigger under AvailableNow, admit each micro-batch against
     * `storeBands` via `admit`, write verdicts to a batchId-keyed
     * parquet sink, and return the sink's contents ordered by
-    * `orderCol`. All three dirs live under the warehouse dir with
-    * store-style hashed names and are reset at entry so the query is
-    * re-runnable within a JVM (Bench warmup/repeat, Verify — the q92
-    * convention).
+    * `orderCol`.
     */
   private def runAdmission(s: SparkSession, tag: String, d: String,
       delta: DataFrame, storeBands: => DataFrame,
       admit: DataFrame => DataFrame => DataFrame,
       orderCol: String, nFiles: Int = 3): DataFrame = {
-    val base = RunStore.tableName(s"graft_stream_$tag", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_delta", "_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val deltaPath = path("_delta").toString
-    val outPath = path("_out").toString
+    val Seq(deltaPath, ckpt, outPath) =
+      runDirs(s, s"graft_stream_$tag", d)("_delta", "_ckpt", "_out")
     delta.repartition(nFiles).write.parquet(deltaPath)
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", 1) // spec-pinned batch count
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, 1) // spec-pinned batch count
     withFewShufflePartitions(s) {
       graft.streaming.StreamingAdmission.admissionQuery(
-          stream, storeBands, path("_ckpt").toString,
+          stream, storeBands, ckpt,
           Trigger.AvailableNow(), admit) { (verdicts, batchId) =>
         writeBatch(verdicts, outPath, batchId)
       }.awaitTermination()
@@ -526,34 +555,15 @@ object StreamingQueries {
     */
   val q100StreamingPatternTopk: Q = (s, d) => {
     val ramp = (1 to 8).map(_.toDouble).toArray
-    val base = RunStore.tableName("graft_stream_pattern", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_pattern", d)("_ckpt", "_out")
     val sp = eventSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(sp.dir).schema)
-      .option("maxFilesPerTrigger", 1) // spec-pinned batch count
-      .parquet(sp.dir)
+    val stream = spoolStream(s, sp.dir, 1) // spec-pinned batch count
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    withFewShufflePartitions(s) {
+    drainToSink(s, ckpt, outPath) {
       graft.streaming.StreamingPatternSearch
         .scores(stream, ramp, s"${sp.delayMs} milliseconds",
           stateTtlMs = sp.ttlMs)
-        .writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[graft.streaming.PatternScore],
-              batchId: Long) =>
-            writeBatch(batch.toDF(), outPath, batchId)
-        }
-        .start().awaitTermination()
     }
     readSink(s, outPath)
       .filter(col("user_id") =!= lit(sp.sentinelUid))
@@ -586,16 +596,8 @@ object StreamingQueries {
     * ordered-spool requirement entirely.
     */
   val q101StreamingOnlineNeardup: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_online", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_delta", "_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val deltaPath = path("_delta").toString
-    val outPath = path("_out").toString
+    val Seq(deltaPath, ckpt, outPath) =
+      runDirs(s, "graft_stream_online", d)("_delta", "_ckpt", "_out")
     val docs = graft.core.Tables.documents(s, d)
       .select(col("doc_id"), col("text"),
         timestamp_millis(col("doc_id") + lit(1700000000000L)).as("ts"))
@@ -620,25 +622,13 @@ object StreamingQueries {
       .foreach { range =>
         docs.filter(range).coalesce(1).write.mode("append").parquet(deltaPath)
         epoch += 1000
-        stampOrder(fs, path("_delta"), stamped, epoch)
+        stampOrder(s, deltaPath, stamped, epoch)
       }
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(deltaPath)
-    withFewShufflePartitions(s) {
+    val stream = spoolStream(s, deltaPath, SpoolFilesPerTrigger)
+    drainToSink(s, ckpt, outPath) {
       graft.streaming.StreamingNearDup
         .collisions(stream, s"${spanMs + hourMs} milliseconds",
           stateTtlMs = 2 * spanMs + 2 * hourMs)
-        .writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[graft.streaming.NearDupHit],
-              batchId: Long) =>
-            writeBatch(batch.toDF(), outPath, batchId)
-        }
-        .start().awaitTermination()
     }
     readSink(s, outPath)
       .select(col("doc_id"), col("band"), col("dup_of"))
@@ -669,16 +659,8 @@ object StreamingQueries {
     * `AvailableNow` terminates.
     */
   val q102StreamingNeardupDisordered: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_disorder", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_delta", "_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val deltaPath = path("_delta").toString
-    val outPath = path("_out").toString
+    val Seq(deltaPath, ckpt, outPath) =
+      runDirs(s, "graft_stream_disorder", d)("_delta", "_ckpt", "_out")
     val epochMs = 1700000000000L
     val docs = graft.core.Tables.documents(s, d)
       .select(col("doc_id"), col("text"),
@@ -695,7 +677,7 @@ object StreamingQueries {
     docs.repartition(3).write.parquet(deltaPath)
     val stamped = scala.collection.mutable.Set.empty[String]
     var epoch = System.currentTimeMillis()
-    stampOrder(fs, path("_delta"), stamped, epoch)
+    stampOrder(s, deltaPath, stamped, epoch)
     val maxTsMs = epochMs + hi
     val sentinel1 = maxTsMs + ttlMs + delayMs + hourMs
     Seq((lo - 1, sentinel1, "graft q102 flush sentinel one"),
@@ -706,24 +688,12 @@ object StreamingQueries {
             docs.schema)
           .write.mode("append").parquet(deltaPath)
         epoch += 1000
-        stampOrder(fs, path("_delta"), stamped, epoch)
+        stampOrder(s, deltaPath, stamped, epoch)
       }
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", 1) // spec-pinned batch count
-      .parquet(deltaPath)
-    withFewShufflePartitions(s) {
+    val stream = spoolStream(s, deltaPath, 1) // spec-pinned batch count
+    drainToSink(s, ckpt, outPath) {
       graft.streaming.StreamingNearDup
         .finalityCollisions(stream, s"$delayMs milliseconds", ttlMs)
-        .writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[graft.streaming.NearDupHit],
-              batchId: Long) =>
-            writeBatch(batch.toDF(), outPath, batchId)
-        }
-        .start().awaitTermination()
     }
     readSink(s, outPath)
       .filter(col("doc_id") >= lit(lo))
@@ -757,16 +727,8 @@ object StreamingQueries {
     val t = RunStore.tableName("graft_stream_lifecycle", d)
     RunStore.dropWithLocation(s, t)
     RunStore.dropWithLocation(s, t + "_compacting")
-    val base = RunStore.tableName("graft_stream_lc", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_delta", "_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val deltaPath = path("_delta").toString
-    val outPath = path("_out").toString
+    val Seq(deltaPath, ckpt, outPath) =
+      runDirs(s, "graft_stream_lc", d)("_delta", "_ckpt", "_out")
     val docs = graft.core.Tables.documents(s, d)
       .select(col("doc_id"), col("text"))
     val isStore = col("doc_id") % 10 =!= 0
@@ -781,14 +743,11 @@ object StreamingQueries {
     def day(delta: DataFrame): Unit = {
       delta.coalesce(1).write.mode("append").parquet(deltaPath)
       epoch += 1000
-      stampOrder(fs, path("_delta"), stamped, epoch)
-      val stream = s.readStream
-        .schema(s.read.parquet(deltaPath).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(deltaPath)
+      stampOrder(s, deltaPath, stamped, epoch)
+      val stream = spoolStream(s, deltaPath, 1)
       withFewShufflePartitions(s) {
         graft.streaming.StreamingAdmission.admissionQuery(
-            stream, s.table(t), path("_ckpt").toString,
+            stream, s.table(t), ckpt,
             Trigger.AvailableNow()) { (verdicts, batchId) =>
           writeBatch(verdicts, outPath, batchId)
         }.awaitTermination()
@@ -874,14 +833,8 @@ object StreamingQueries {
     }
 
   val q109StreamingClusterMaintenance: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_clm", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_delta", "_ckpt", "_edges", "_labels").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(deltaPath, ckpt, edgesPath, labelsPath) =
+      runDirs(s, "graft_stream_clm", d)("_delta", "_ckpt", "_edges", "_labels")
     val isDelta = (c: org.apache.spark.sql.Column) => c % 10 === 0
     // ONE evaluation of the LSH pair chain feeds both the edge
     // materialization and the base-label components (dup-proportional
@@ -894,32 +847,27 @@ object StreamingQueries {
     // incident edges (what the batches consume) and the base labels
     // (the persisted cluster store the maintenance starts from)
     pairs.filter(isDelta(col("src")) || isDelta(col("dst")))
-      .write.parquet(path("_edges").toString)
+      .write.parquet(edgesPath)
     graft.operators.ConnectedComponents.labels(s,
         pairs.filter(!isDelta(col("src")) && !isDelta(col("dst"))))
-      .write.parquet(s"${path("_labels")}/base")
-    val deltaPath = path("_delta").toString
+      .write.parquet(s"$labelsPath/base")
     graft.core.Tables.documents(s, d).filter(isDelta(col("doc_id")))
       .select(col("doc_id")).repartition(3).write.parquet(deltaPath)
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", 1) // spec-pinned batch count
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, 1) // spec-pinned batch count
     var lastBatch = -1L
     withFewShufflePartitions(s) {
       val q = stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          clusterMaintenanceBatch(s, path("_edges").toString,
-            path("_labels").toString)(batch, id)
+          clusterMaintenanceBatch(s, edgesPath, labelsPath)(batch, id)
           lastBatch = math.max(lastBatch, id)
         }
         .start()
       q.awaitTermination()
     }
     require(lastBatch >= 0, "the maintenance stream processed no batches")
-    val labels = s.read.parquet(s"${path("_labels")}/batch_$lastBatch")
+    val labels = s.read.parquet(s"$labelsPath/batch_$lastBatch")
     graft.core.Tables.documents(s, d).select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .withColumn("cluster", coalesce(col("cluster"), col("doc_id")))
@@ -951,26 +899,15 @@ object StreamingQueries {
     * pass — same operator, same verdicts, by the hash gate's proof.
     */
   val q114StreamingPiiScrub: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_pii", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_delta", "_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val deltaPath = path("_delta").toString
-    val outPath = path("_out").toString
+    val Seq(deltaPath, ckpt, outPath) =
+      runDirs(s, "graft_stream_pii", d)("_delta", "_ckpt", "_out")
     DedupTextQueries.piiAugmented(
         graft.core.Tables.documents(s, d).select(col("doc_id"), col("text")))
       .repartition(3).write.parquet(deltaPath)
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", 1) // spec-pinned batch count
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, 1) // spec-pinned batch count
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeBatch(DedupTextQueries.piiScrub(batch), outPath, batchId)
@@ -1001,23 +938,12 @@ object StreamingQueries {
     */
   val q133StreamingBpeEncode: Q = (s, d) => {
     val merges = CorpusStatsQueries.trainedMerges(s, d)
-    val base = RunStore.tableName("graft_stream_bpe", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) = runDirs(s, "graft_stream_bpe", d)("_ckpt", "_out")
     val deltaPath = docSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, SpoolFilesPerTrigger)
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeBatch(
@@ -1052,25 +978,14 @@ object StreamingQueries {
     */
   val q117StreamingMediaDecode: Q = (s, d) => {
     import s.implicits._
-    val base = RunStore.tableName("graft_stream_dec", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_delta", "_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val deltaPath = path("_delta").toString
-    val outPath = path("_out").toString
+    val Seq(deltaPath, ckpt, outPath) =
+      runDirs(s, "graft_stream_dec", d)("_delta", "_ckpt", "_out")
     MultimodalQueries.mixedRealMedia(s, d).toDF()
       .repartition(3).write.parquet(deltaPath)
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", 1) // spec-pinned batch count
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, 1) // spec-pinned batch count
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeBatch(
@@ -1108,25 +1023,14 @@ object StreamingQueries {
     * shortlist.
     */
   val q123StreamingAnnServe: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_ann", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_delta", "_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val deltaPath = path("_delta").toString
-    val outPath = path("_out").toString
+    val Seq(deltaPath, ckpt, outPath) =
+      runDirs(s, "graft_stream_ann", d)("_delta", "_ckpt", "_out")
     SimilarityQueries.annQuerySet(graft.core.Tables.embeddings(s, d))
       .repartition(3).write.parquet(deltaPath)
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", 1) // spec-pinned batch count
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, 1) // spec-pinned batch count
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeBatch(
@@ -1214,25 +1118,16 @@ object StreamingQueries {
     * no forced user-grain broadcast anywhere in the per-batch plan.
     */
   val q144StreamingFunnel: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_funnel", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_state").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(ckpt, statePath) =
+      runDirs(s, "graft_stream_funnel", d)("_ckpt", "_state")
     val sp = eventSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(sp.dir).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(sp.dir)
+    val stream = spoolStream(s, sp.dir, SpoolFilesPerTrigger)
       .select(col("user_id"), col("event_type"),
         unix_millis(col("ts")).as("ms"))
     var lastBatch = -1L
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
           // the shared spool's trailing sentinel files exist for the
@@ -1241,7 +1136,7 @@ object StreamingQueries {
           // rewrite entirely (the chain links via lastBatch)
           val b = batch.filter(col("user_id") =!= lit(sp.sentinelUid))
           if (lastBatch < 0 || !b.isEmpty) {
-            funnelStateBatch(s, path("_state").toString, lastBatch)(b, id)
+            funnelStateBatch(s, statePath, lastBatch)(b, id)
             lastBatch = math.max(lastBatch, id)
           }
         }
@@ -1249,7 +1144,7 @@ object StreamingQueries {
     }
     require(lastBatch >= 0, "the funnel stream processed no batches")
     val state = graft.core.CacheScope.track(
-      s.read.parquet(s"${path("_state")}/batch_$lastBatch")
+      s.read.parquet(s"$statePath/batch_$lastBatch")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // the shared spool carries the sentinel user (its flush markers
     // for the watermarked consumers); this machine is unwatermarked,
@@ -1288,20 +1183,9 @@ object StreamingQueries {
     * the real disorder bound and state is proportionally small).
     */
   val q166StreamingSessionPaths: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_sess", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) = runDirs(s, "graft_stream_sess", d)("_ckpt", "_out")
     val sp = eventSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(sp.dir).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(sp.dir)
+    val stream = spoolStream(s, sp.dir, SpoolFilesPerTrigger)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
     withFewShufflePartitions(s) {
       stream
@@ -1316,7 +1200,7 @@ object StreamingQueries {
         .select(col("user_id"), col("path"))
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeBatch(batch, outPath, batchId)
@@ -1348,10 +1232,7 @@ object StreamingQueries {
     */
   private def ssJoinSide(s: SparkSession, sp: EventSpool, t: String,
       prefix: String, filesPerTrigger: Int = SpoolFilesPerTrigger): DataFrame =
-    s.readStream
-      .schema(s.read.parquet(sp.dir).schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(sp.dir)
+    spoolStream(s, sp.dir, filesPerTrigger)
       .filter(col("event_type").isin(t, "sentinel"))
       .select(col("user_id").as(s"${prefix}_uid"),
         col("ts").as(s"${prefix}_ts"),
@@ -1396,22 +1277,15 @@ object StreamingQueries {
     * must equal join-at-rest for any interleaving of the two streams.
     */
   val q183StreamStreamJoin: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_ssjoin", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_ssjoin", d)("_ckpt", "_out")
     val sp = eventSpool(s, d)
     withFewShufflePartitions(s) {
       ssJoinSide(s, sp, "view", "v")
         .join(ssJoinSide(s, sp, "purchase", "p"), ssJoinCond, "inner")
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeBatch(batch, outPath, batchId)
@@ -1465,22 +1339,15 @@ object StreamingQueries {
     * (dropped), or twice.
     */
   val q184StreamStreamLeftJoin: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_ssleft", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_ssleft", d)("_ckpt", "_out")
     val sp = eventSpool(s, d)
     withFewShufflePartitions(s) {
       ssJoinSide(s, sp, "view", "v")
         .join(ssJoinSide(s, sp, "purchase", "p"), ssJoinCond, "left_outer")
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeBatch(batch, outPath, batchId)
@@ -1510,22 +1377,15 @@ object StreamingQueries {
     * uids since either leg may be null. Oracle: the batch FULL JOIN.
     */
   val q215StreamStreamFullJoin: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_ssfull", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_ssfull", d)("_ckpt", "_out")
     val sp = eventSpool(s, d)
     withFewShufflePartitions(s) {
       ssJoinSide(s, sp, "view", "v")
         .join(ssJoinSide(s, sp, "purchase", "p"), ssJoinCond, "full_outer")
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeBatch(batch, outPath, batchId)
@@ -1593,34 +1453,15 @@ object StreamingQueries {
     * bit-for-bit under full-span disorder.
     */
   val q148StreamingWindowedFunnel: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_wfunnel", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_wfunnel", d)("_ckpt", "_out")
     val sp = eventSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(sp.dir).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(sp.dir)
+    val stream = spoolStream(s, sp.dir, SpoolFilesPerTrigger)
       .select(col("user_id"), col("ts"), col("event_type"))
-    withFewShufflePartitions(s) {
+    drainToSink(s, ckpt, outPath) {
       graft.streaming.StreamingFunnel
         .funnel(stream, EventQueries.FunnelWindowMs,
           s"${sp.delayMs} milliseconds", stateTtlMs = sp.ttlMs)
-        .writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[graft.streaming.FunnelRow],
-              batchId: Long) =>
-            writeBatch(batch.toDF(), outPath, batchId)
-        }
-        .start().awaitTermination()
     }
     readSink(s, outPath)
       .filter(col("user_id") =!= lit(sp.sentinelUid))
@@ -1646,23 +1487,13 @@ object StreamingQueries {
     * index-at-rest for ANY batching.
     */
   val q167StreamingPostingIndex: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_postseg", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_seg").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val segPath = path("_seg").toString
+    val Seq(ckpt, segPath) =
+      runDirs(s, "graft_stream_postseg", d)("_ckpt", "_seg")
     val deltaPath = docSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, SpoolFilesPerTrigger)
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeBatch(SearchQueries.postingRows(batch), segPath, batchId)
@@ -1705,32 +1536,23 @@ object StreamingQueries {
     * has streamed — contrast q144's event-proportional funnel state.
     */
   val q150StreamingCmsFold: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_cms", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_state").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(ckpt, statePath) =
+      runDirs(s, "graft_stream_cms", d)("_ckpt", "_state")
     val deltaPath = docSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, SpoolFilesPerTrigger)
     var lastBatch = -1L
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          cmsFoldBatch(s, path("_state").toString)(batch, id)
+          cmsFoldBatch(s, statePath)(batch, id)
           lastBatch = math.max(lastBatch, id)
         }
         .start().awaitTermination()
     }
     require(lastBatch >= 0, "the sketch stream processed no batches")
-    val sketch = s.read.parquet(s"${path("_state")}/batch_$lastBatch")
+    val sketch = s.read.parquet(s"$statePath/batch_$lastBatch")
     // the serve side shares q149's r20 shape: one vocab-grain count
     // feeds query set + exact counts (values unchanged — exact_n ≡ n)
     val tc = graft.core.CacheScope.track(
@@ -1783,32 +1605,23 @@ object StreamingQueries {
     * ingest telemetry tier runs side by side.
     */
   val q169StreamingHllFold: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_hll", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_state").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(ckpt, statePath) =
+      runDirs(s, "graft_stream_hll", d)("_ckpt", "_state")
     val deltaPath = docSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, SpoolFilesPerTrigger)
     var lastBatch = -1L
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          hllFoldBatch(s, path("_state").toString)(batch, id)
+          hllFoldBatch(s, statePath)(batch, id)
           lastBatch = math.max(lastBatch, id)
         }
         .start().awaitTermination()
     }
     require(lastBatch >= 0, "the HLL stream processed no batches")
-    val regFold = s.read.parquet(s"${path("_state")}/batch_$lastBatch")
+    val regFold = s.read.parquet(s"$statePath/batch_$lastBatch")
     val exact = s.read.parquet(deltaPath)
       .select(explode(tokens(col("text"))).as("tok"))
       .agg(count_distinct(col("tok")).as("exact_distinct"))
@@ -1846,37 +1659,28 @@ object StreamingQueries {
     * grouped-sketch-at-rest for ANY batching.
     */
   val q196StreamingGroupedHll: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_ghll", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_state").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(ckpt, statePath) =
+      runDirs(s, "graft_stream_ghll", d)("_ckpt", "_state")
     val sp = eventSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(sp.dir).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(sp.dir)
+    val stream = spoolStream(s, sp.dir, SpoolFilesPerTrigger)
       .filter(col("user_id") =!= lit(sp.sentinelUid))
       .select(col("event_type"), col("user_id"))
     var lastBatch = -1L
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
           // a sentinel-only batch folds an empty frame — a copy of the
           // predecessor state (<= groups x 256 rows, trivially cheap),
           // keeping batchId-addressed replay idempotence untouched
-          groupedHllFoldBatch(s, path("_state").toString)(batch, id)
+          groupedHllFoldBatch(s, statePath)(batch, id)
           lastBatch = math.max(lastBatch, id)
         }
         .start().awaitTermination()
     }
     require(lastBatch >= 0, "the grouped-HLL stream processed no batches")
-    val regFold = s.read.parquet(s"${path("_state")}/batch_$lastBatch")
+    val regFold = s.read.parquet(s"$statePath/batch_$lastBatch")
     val exact = graft.core.Tables.events(s, d)
       .groupBy("event_type")
       .agg(count_distinct(col("user_id")).as("exact_distinct"))
@@ -1895,30 +1699,15 @@ object StreamingQueries {
     * decode-at-rest, escapes included, for any batching of the files.
     */
   val q201StreamingJsonl: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_jsonl", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_data", "_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(dataPath, ckpt, outPath) =
+      runDirs(s, "graft_stream_jsonl", d)("_data", "_ckpt", "_out")
     IngestQueries.jsonlFrame(s, d)
-      .repartition(3).write.text(path("_data").toString)
-    val outPath = path("_out").toString
+      .repartition(3).write.text(dataPath)
     val stream = s.readStream
       .schema(IngestQueries.JsonlSchema)
       .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .json(path("_data").toString)
-    withFewShufflePartitions(s) {
-      stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          writeBatch(batch, outPath, batchId)
-        }
-        .start().awaitTermination()
-    }
+      .json(dataPath)
+    drainToSink(s, ckpt, outPath)(stream)
     IngestQueries.jsonlReport(readSink(s, outPath))
   }
 
@@ -1935,23 +1724,16 @@ object StreamingQueries {
     * equal decode-at-rest, escapes included, for any batching.
     */
   val q217StreamingVariant: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_variant", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_data", "_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(dataPath, ckpt, outPath) =
+      runDirs(s, "graft_stream_variant", d)("_data", "_ckpt", "_out")
     IngestQueries.jsonlFrame(s, d)
-      .repartition(3).write.text(path("_data").toString)
-    val outPath = path("_out").toString
+      .repartition(3).write.text(dataPath)
     val stream = s.readStream
       .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .text(path("_data").toString)
+      .text(dataPath)
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val decoded = batch
@@ -2007,33 +1789,24 @@ object StreamingQueries {
     * doc-length histograms are value-domain-bounded to begin with.
     */
   val q170StreamingQuantileFold: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_hist", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_state").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(ckpt, statePath) =
+      runDirs(s, "graft_stream_hist", d)("_ckpt", "_state")
     val deltaPath = docSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, SpoolFilesPerTrigger)
     var lastBatch = -1L
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          histFoldBatch(s, path("_state").toString)(batch, id)
+          histFoldBatch(s, statePath)(batch, id)
           lastBatch = math.max(lastBatch, id)
         }
         .start().awaitTermination()
     }
     require(lastBatch >= 0, "the histogram stream processed no batches")
     CorpusStatsQueries.quantilesOverHist(
-        s.read.parquet(s"${path("_state")}/batch_$lastBatch"))
+        s.read.parquet(s"$statePath/batch_$lastBatch"))
       .orderBy("lang")
   }
 
@@ -2073,33 +1846,24 @@ object StreamingQueries {
     * membership — the four live gauges an ingest tier actually runs.
     */
   val q174StreamingBloomFold: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_bloom", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_state").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(ckpt, statePath) =
+      runDirs(s, "graft_stream_bloom", d)("_ckpt", "_state")
     val deltaPath = docSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, SpoolFilesPerTrigger)
     var lastBatch = -1L
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          bloomFoldBatch(s, path("_state").toString)(batch, id)
+          bloomFoldBatch(s, statePath)(batch, id)
           lastBatch = math.max(lastBatch, id)
         }
         .start().awaitTermination()
     }
     require(lastBatch >= 0, "the bloom stream processed no batches")
     CorpusStatsQueries.bloomReport(s, d,
-      s.read.parquet(s"${path("_state")}/batch_$lastBatch"))
+      s.read.parquet(s"$statePath/batch_$lastBatch"))
   }
 
   /** The at-least-once DUPLICATED feed q181 replays: every document
@@ -2113,7 +1877,7 @@ object StreamingQueries {
   private[graft] val DupFeedEpoch0 = 1704067200000L // 2024-01-01T00:00Z
 
   private[graft] def dupSpool(s: SparkSession, d: String): String =
-    ensureSpool(s, d, "dupfeed", "v1", "documents.parquet") { (dir, _) =>
+    ensureSpool(s, d, "dupfeed", "v1", "documents.parquet") { dir =>
       graft.core.Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"),
           timestamp_millis(lit(DupFeedEpoch0) + col("doc_id") * 1000L)
@@ -2126,7 +1890,7 @@ object StreamingQueries {
         .select(col("doc_id"), col("lang"), col("n_chars"), col("ts"),
           explode(sequence(lit(1), col("k"))).as("copy"))
         .drop("copy", "k")
-        .repartition(3).write.parquet(dir.toString)
+        .repartition(3).write.parquet(dir)
       Map.empty
     }.dir
 
@@ -2147,34 +1911,16 @@ object StreamingQueries {
     * synthesized event time replayed as a formula).
     */
   val q181StreamingExactDedup: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_dedup", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_dedup", d)("_ckpt", "_out")
     val deltaPath = dupSpool(s, d)
     val span = s.read.parquet(deltaPath)
       .agg(unix_millis(max(col("ts"))) - unix_millis(min(col("ts"))))
       .head().getLong(0)
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, SpoolFilesPerTrigger)
       .withWatermark("ts", s"${span + DayMs} milliseconds")
       .dropDuplicatesWithinWatermark("doc_id")
-    withFewShufflePartitions(s) {
-      stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          writeBatch(batch, outPath, batchId)
-        }
-        .start().awaitTermination()
-    }
+    drainToSink(s, ckpt, outPath)(stream)
     readSink(s, outPath)
       .select(col("doc_id"), col("lang"), col("n_chars"),
         unix_millis(col("ts")).as("ts_ms"))
@@ -2226,26 +1972,17 @@ object StreamingQueries {
     * continuously.
     */
   val q180StreamingMergeFold: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_merge", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_state").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(ckpt, statePath) =
+      runDirs(s, "graft_stream_merge", d)("_ckpt", "_state")
     val deltaPath = cdcSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, SpoolFilesPerTrigger)
     var lastBatch = -1L
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          mergeFoldBatch(s, path("_state").toString)(batch, id)
+          mergeFoldBatch(s, statePath)(batch, id)
           lastBatch = math.max(lastBatch, id)
         }
         .start().awaitTermination()
@@ -2253,7 +1990,7 @@ object StreamingQueries {
     require(lastBatch >= 0, "the merge stream processed no batches")
     IngestQueries.mergeReport(IngestQueries.applyMerge(
       graft.core.Tables.documents(s, d).select(col("doc_id"), col("text")),
-      s.read.parquet(s"${path("_state")}/batch_$lastBatch")))
+      s.read.parquet(s"$statePath/batch_$lastBatch")))
   }
 
   /** q193's per-batch body: fold the batch into the per-doc argmax
@@ -2324,14 +2061,8 @@ object StreamingQueries {
     * delta-grain (the compacted feed), the q180 contract.
     */
   val q193StreamingRetractView: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_retract", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_state", "_partials").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(ckpt, statePath, partialsPath) =
+      runDirs(s, "graft_stream_retract", d)("_ckpt", "_state", "_partials")
     val deltaPath = cdcSpool(s, d)
     val docs = graft.core.Tables.documents(s, d)
       .select(col("doc_id"), col("text"))
@@ -2343,18 +2074,14 @@ object StreamingQueries {
       docs.select(col("doc_id"),
         length(col("text")).cast("long").as("base_len"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val stream = s.readStream
-      .schema(s.read.parquet(deltaPath).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(deltaPath)
+    val stream = spoolStream(s, deltaPath, SpoolFilesPerTrigger)
     var lastBatch = -1L
     withFewShufflePartitions(s) {
       stream.writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          retractFoldBatch(s, path("_state").toString,
-            path("_partials").toString, baseLens)(batch, id)
+          retractFoldBatch(s, statePath, partialsPath, baseLens)(batch, id)
           lastBatch = math.max(lastBatch, id)
         }
         .start().awaitTermination()
@@ -2364,7 +2091,7 @@ object StreamingQueries {
       .groupBy((col("doc_id") % 8).as("shard"))
       .agg(count(lit(1)).cast("long").as("dn"),
         sum(length(col("text")).cast("long")).as("dchars"))
-    basePartials.unionByName(readSink(s, path("_partials").toString))
+    basePartials.unionByName(readSink(s, partialsPath))
       .groupBy("shard")
       .agg(sum(col("dn")).as("n_live"), sum(col("dchars")).as("n_chars"))
       .orderBy("shard")
@@ -2386,34 +2113,14 @@ object StreamingQueries {
     * batch dimension for ANY batching.
     */
   val q177StreamingScd2: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_scd2", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) = runDirs(s, "graft_stream_scd2", d)("_ckpt", "_out")
     val sp = eventSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(sp.dir).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(sp.dir)
+    val stream = spoolStream(s, sp.dir, SpoolFilesPerTrigger)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    withFewShufflePartitions(s) {
+    drainToSink(s, ckpt, outPath) {
       graft.streaming.StreamingScd2
         .segments(stream, s"${sp.delayMs} milliseconds",
           stateTtlMs = sp.ttlMs)
-        .writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[graft.streaming.Scd2Segment],
-              batchId: Long) =>
-            writeBatch(batch.toDF(), outPath, batchId)
-        }
-        .start().awaitTermination()
     }
     EventQueries.scd2Report(
       readSink(s, outPath)
@@ -2435,34 +2142,14 @@ object StreamingQueries {
     * table for ANY batching.
     */
   val q159StreamingAttribution: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_attr", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) = runDirs(s, "graft_stream_attr", d)("_ckpt", "_out")
     val sp = eventSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(sp.dir).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(sp.dir)
+    val stream = spoolStream(s, sp.dir, SpoolFilesPerTrigger)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    withFewShufflePartitions(s) {
+    drainToSink(s, ckpt, outPath) {
       graft.streaming.StreamingAttribution
         .attribute(stream, EventQueries.AttributionWindowMs,
           s"${sp.delayMs} milliseconds", stateTtlMs = sp.ttlMs)
-        .writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[graft.streaming.AttributionRow],
-              batchId: Long) =>
-            writeBatch(batch.toDF(), outPath, batchId)
-        }
-        .start().awaitTermination()
     }
     readSink(s, outPath)
       .filter(col("user_id") =!= lit(sp.sentinelUid))
@@ -2492,7 +2179,7 @@ object StreamingQueries {
 
   private[graft] def lateSpool(s: SparkSession, d: String): LateSpool = {
     val info = ensureSpool(s, d, "late", "v1", "events.parquet") {
-      (dir, fs) =>
+      dir =>
         val ev = graft.core.Tables.events(s, d)
           .select(col("user_id"), col("ts"), col("event_id"),
             col("event_type"), col("value"))
@@ -2504,9 +2191,9 @@ object StreamingQueries {
         val stamped = scala.collection.mutable.Set.empty[String]
         var epoch = SpoolStampBase
         def append(df: org.apache.spark.sql.DataFrame): Unit = {
-          df.repartition(1).write.mode("append").parquet(dir.toString)
+          df.repartition(1).write.mode("append").parquet(dir)
           epoch += 1000
-          stampOrder(fs, dir, stamped, epoch)
+          stampOrder(s, dir, stamped, epoch)
         }
         append(ev.filter(day >= midDay))
         append(ev.filter(day < midDay && col("user_id") % 2 === 0))
@@ -2541,7 +2228,7 @@ object StreamingQueries {
     */
   private[graft] def dupEventSpool(s: SparkSession, d: String): EventSpool = {
     val info = ensureSpool(s, d, "dupevents", "v1", "events.parquet") {
-      (dir, fs) =>
+      dir =>
         val ev = graft.core.Tables.events(s, d)
           .select(col("user_id"), col("ts"), col("event_id"),
             col("event_type"), col("value"))
@@ -2550,10 +2237,10 @@ object StreamingQueries {
           ((mdUniform("dupe:", col("event_id")) < 0.4) &&
             (mdUniform("dupe2:", col("event_id")) < 0.5)).cast("int")
         ev.withColumn("copy", explode(sequence(lit(1), k))).drop("copy")
-          .repartition(3).write.parquet(dir.toString)
+          .repartition(3).write.parquet(dir)
         val stamped = scala.collection.mutable.Set.empty[String]
         var epoch = SpoolStampBase
-        stampOrder(fs, dir, stamped, epoch)
+        stampOrder(s, dir, stamped, epoch)
         val span = ev.agg(min(col("ts")), max(col("ts")), min(col("user_id")))
           .head()
         val (minTs, maxTs) =
@@ -2568,9 +2255,9 @@ object StreamingQueries {
                 org.apache.spark.sql.Row(sentinelUid,
                   new java.sql.Timestamp(ts), eid, "sentinel", 0.0)),
               ev.schema)
-              .write.mode("append").parquet(dir.toString)
+              .write.mode("append").parquet(dir)
             epoch += 1000
-            stampOrder(fs, dir, stamped, epoch)
+            stampOrder(s, dir, stamped, epoch)
           }
         Map("min_ts" -> minTs.toString, "max_ts" -> maxTs.toString,
           "sentinel_uid" -> sentinelUid.toString)
@@ -2603,21 +2290,11 @@ object StreamingQueries {
     * corpus-proportional.
     */
   val q209DedupJoinCompose: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_ssdedup", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_ssdedup", d)("_ckpt", "_out")
     val sp = dupEventSpool(s, d)
     def side(t: String, prefix: String): DataFrame =
-      s.readStream
-        .schema(s.read.parquet(sp.dir).schema)
-        .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-        .parquet(sp.dir)
+      spoolStream(s, sp.dir, SpoolFilesPerTrigger)
         .filter(col("event_type").isin(t, "sentinel"))
         .select(col("user_id").as(s"${prefix}_uid"),
           col("ts").as(s"${prefix}_ts"),
@@ -2629,7 +2306,7 @@ object StreamingQueries {
         .join(side("purchase", "p"), ssJoinCond, "inner")
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeBatch(batch, outPath, batchId)
@@ -2669,15 +2346,8 @@ object StreamingQueries {
     */
   val q208WatermarkAudit: Q = (s, d) => {
     val sp = lateSpool(s, d)
-    val base = RunStore.tableName("graft_stream_wmaudit", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_wmaudit", d)("_ckpt", "_out")
     // GUARD (round-15 advisory): the oracle pins drop counts measured
     // POST map-side partial aggregation — one dropped row per distinct
     // window per batch — which only holds while each spool file lands
@@ -2721,10 +2391,7 @@ object StreamingQueries {
               "raise the knobs")
         }
     }
-    val stream = s.readStream
-      .schema(s.read.parquet(sp.dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sp.dir)
+    val stream = spoolStream(s, sp.dir, 1)
       .select(col("ts"))
     withFewShufflePartitions(s) {
       val q = stream
@@ -2734,7 +2401,7 @@ object StreamingQueries {
         .select(unix_millis(col("window.start")).as("day_ms"), col("n"))
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeBatch(batch, outPath, batchId)
@@ -2868,35 +2535,16 @@ object StreamingQueries {
     * disorder), identical to q159.
     */
   val q218TwsAttribution: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_attr_tws", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_attr_tws", d)("_ckpt", "_out")
     val sp = eventSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(sp.dir).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(sp.dir)
+    val stream = spoolStream(s, sp.dir, SpoolFilesPerTrigger)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
     withSessionConfs(s, ProviderKey -> RocksDbProvider) {
-      withFewShufflePartitions(s) {
+      drainToSink(s, ckpt, outPath) {
         graft.streaming.StreamingAttributionTws
           .attribute(stream, EventQueries.AttributionWindowMs,
             s"${sp.delayMs} milliseconds", stateTtlMs = sp.ttlMs)
-          .writeStream
-          .option("checkpointLocation", path("_ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[graft.streaming.AttributionRow],
-                batchId: Long) =>
-              writeBatch(batch.toDF(), outPath, batchId)
-          }
-          .start().awaitTermination()
       }
     }
     readSink(s, outPath)
@@ -2908,8 +2556,8 @@ object StreamingQueries {
   /** q219 — q183's symmetric stream-stream join re-run under the
     * RocksDB provider, oracle = [[q183Sql]] VERBATIM: join state (both
     * sides' buffered rows, the keyed range index) must serve identical
-    * results from an off-heap store. The checkpoint resets at entry,
-    * so no HDFS-format state ever replays into RocksDB.
+    * results from an off-heap store. Its checkpoint is one of q183's
+    * [[runDirs]], so no HDFS-format state ever replays into RocksDB.
     */
   val q219RocksdbSsjoinParity: Q = (s, d) =>
     withSessionConfs(s, ProviderKey -> RocksDbProvider) {
@@ -2963,46 +2611,33 @@ object StreamingQueries {
     * data corruption on every executor loss.
     */
   val q289ChangelogRestore: Q = (s, d) => {
-    val base = RunStore.tableName("graft_changelog_restore", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_spool", "_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val spool = path("_spool")
-    val outPath = path("_out").toString
+    val Seq(spool, ckpt, outPath, tmp) =
+      runDirs(s, "graft_changelog_restore", d)(
+        "_spool", "_ckpt", "_out", "_tmp")
+    val fs = new org.apache.hadoop.fs.Path(spool)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val docs = graft.core.Tables.documents(s, d)
       .select(col("doc_id"), col("text"))
     def slice(m: Int) = docs.filter(col("doc_id") % 3 === m)
+    // each file is written alone under `tmp`, then renamed into the spool
     def addFile(df: DataFrame, name: String): Unit = {
-      val tmp = path(s"_tmp_$name")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      df.coalesce(1).write.parquet(tmp.toString)
-      val part = fs.listStatus(tmp).map(_.getPath)
-        .find(_.getName.startsWith("part-"))
+      df.coalesce(1).write.parquet(tmp)
+      val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
+        .map(_.getPath).find(_.getName.startsWith("part-"))
         .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
-      fs.mkdirs(spool)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(spool))
       fs.rename(part, new org.apache.hadoop.fs.Path(spool, s"$name.parquet"))
-      fs.delete(tmp, true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
       ()
     }
     def runPhase(): Unit =
       withSessionConfs(s, ProviderKey -> RocksDbProvider,
           ChangelogKey -> "true") {
-        withFewShufflePartitions(s) {
+        drainToSink(s, ckpt, outPath) {
           s.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1)
-            .parquet(spool.toString)
+            .parquet(spool)
             .dropDuplicates("doc_id")
-            .writeStream
-            .option("checkpointLocation", path("_ckpt").toString)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              writeBatch(batch, outPath, batchId)
-            }
-            .start().awaitTermination()
         }
       }
     addFile(slice(0), "f0")
@@ -3012,7 +2647,7 @@ object StreamingQueries {
     addFile(slice(1), "f3")
     runPhase()
     val changelogFiles = {
-      val it = fs.listFiles(path("_ckpt"), true)
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(ckpt), true)
       var n = 0
       while (it.hasNext)
         if (it.next().getPath.getName.endsWith(".changelog")) n += 1
@@ -3023,8 +2658,7 @@ object StreamingQueries {
     // suppressed by the restored state) legitimately lands ZERO rows,
     // so a row-side countDistinct(batch_id) undercounts exactly when
     // the restore WORKS
-    val nBatches = fs.listStatus(
-      new org.apache.hadoop.fs.Path(path("_ckpt"), "commits"))
+    val nBatches = fs.listStatus(new org.apache.hadoop.fs.Path(ckpt, "commits"))
       .count(st => st.getPath.getName.forall(_.isDigit)).toLong
     val sunk = readSink(s, outPath)
       .agg(count(lit(1)).as("n"),
@@ -3061,7 +2695,7 @@ object StreamingQueries {
     * reads at file grain (a handful of tiny JSON-lines files).
     */
   private def sourceLogBatches(s: SparkSession,
-      ckpt: org.apache.hadoop.fs.Path): Map[Long, Set[String]] = {
+      ckpt: String): Map[Long, Set[String]] = {
     val dir = new org.apache.hadoop.fs.Path(ckpt, "sources/0")
     val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
     val pathRe = """"path"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
@@ -3090,7 +2724,7 @@ object StreamingQueries {
     * sentinel-2 batch) and refuses if the layout drifted.
     */
   private def sentinelBatchSplit(s: SparkSession, sp: EventSpool,
-      ckpt: org.apache.hadoop.fs.Path): (Long, Long, Long) = {
+      ckpt: String): (Long, Long, Long) = {
     val sentinelNames = s.read.parquet(sp.dir)
       .groupBy(col("_metadata.file_path").as("fp"))
       .agg(max(when(col("user_id") === sp.sentinelUid, 1)
@@ -3159,15 +2793,8 @@ object StreamingQueries {
       new java.util.concurrent.ConcurrentLinkedQueue[
         org.apache.spark.sql.streaming.StreamingQuery]()
     def runOne(joinType: String): DataFrame = {
-      val base = RunStore.tableName(s"graft_stream_ssobs_$joinType", d)
-      def path(suffix: String) = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-      val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-      Seq("_ckpt", "_out").foreach { suf =>
-        val p = path(suf)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-      val outPath = path("_out").toString
+      val Seq(ckpt, outPath) =
+        runDirs(s, s"graft_stream_ssobs_$joinType", d)("_ckpt", "_out")
       // FPT pinned to 1: sentinelBatchSplit + the per-batch state reads
       // below audit the one-file-per-trigger lifecycle the oracle replays
       ssJoinSide(s, sp, "view", "v", filesPerTrigger = 1)
@@ -3175,13 +2802,13 @@ object StreamingQueries {
           ssJoinCond, joinType)
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeBatch(batch, outPath, batchId)
         }
         .start() match { case q => started.add(q); q.awaitTermination() }
-      val (lastReal, drain1, drain2) = sentinelBatchSplit(s, sp, path("_ckpt"))
+      val (lastReal, drain1, drain2) = sentinelBatchSplit(s, sp, ckpt)
       val phases = Seq(
         "a_loaded" -> lastReal, // last real-data batch
         "b_drain1" -> drain1, // sentinel 1's batch
@@ -3193,7 +2820,7 @@ object StreamingQueries {
         val n = s.read.format("statestore")
           .option("joinSide", side)
           .option("batchId", batchId)
-          .load(path("_ckpt").toString)
+          .load(ckpt)
           .count()
         (joinType, if (side == "left") "v" else "p", phase, n)
       }
@@ -3257,15 +2884,8 @@ object StreamingQueries {
     * state stays O(1 + live disorder) per user.
     */
   val q227TwsBootstrap: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_attr_boot", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_attr_boot", d)("_ckpt", "_out")
     val sp = eventSpool(s, d)
     val cut = sp.minTs + sp.spanMs / 2
     val hist = graft.core.Tables.events(s, d)
@@ -3294,27 +2914,15 @@ object StreamingQueries {
       .agg(max(struct(col("ms"), col("event_id"))).as("b"))
       .select(col("user_id"), col("b.ms").as("best_ms"),
         col("b.event_id").as("best_id"))
-    val live = s.readStream
-      .schema(s.read.parquet(sp.dir).schema)
-      .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-      .parquet(sp.dir)
+    val live = spoolStream(s, sp.dir, SpoolFilesPerTrigger)
       .filter(col("ts") >= timestamp_millis(lit(cut)))
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
     withSessionConfs(s, ProviderKey -> RocksDbProvider) {
-      withFewShufflePartitions(s) {
+      drainToSink(s, ckpt, outPath) {
         graft.streaming.StreamingAttributionTws
           .attributeBootstrapped(live, seed,
             EventQueries.AttributionWindowMs,
             s"${sp.delayMs} milliseconds", stateTtlMs = sp.ttlMs)
-          .writeStream
-          .option("checkpointLocation", path("_ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[graft.streaming.AttributionRow],
-                batchId: Long) =>
-              writeBatch(batch.toDF(), outPath, batchId)
-          }
-          .start().awaitTermination()
       }
     }
     readSink(s, outPath)
@@ -3344,32 +2952,22 @@ object StreamingQueries {
     * the stream.
     */
   val q229DedupStateAudit: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_dedupobs", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    locally {
-      val p = path("_ckpt")
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(ckpt) = runDirs(s, "graft_stream_dedupobs", d)("_ckpt")
     val deltaPath = dupSpool(s, d)
     val span = s.read.parquet(deltaPath)
       .agg(unix_millis(max(col("ts"))) - unix_millis(min(col("ts"))))
       .head().getLong(0)
     withFewShufflePartitions(s) {
-      s.readStream
-        .schema(s.read.parquet(deltaPath).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(deltaPath)
+      spoolStream(s, deltaPath, 1)
         .withWatermark("ts", s"${span + DayMs} milliseconds")
         .dropDuplicatesWithinWatermark("doc_id")
         .writeStream
         .format("noop")
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start().awaitTermination()
     }
-    s.read.format("statestore").load(path("_ckpt").toString)
+    s.read.format("statestore").load(ckpt)
       .select(col("key.doc_id").as("doc_id"))
       .orderBy("doc_id")
   }
@@ -3401,37 +2999,28 @@ object StreamingQueries {
     * rows — constant cost regardless of state size.
     */
   val q236StateMetadataAudit: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_statemeta", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    locally {
-      val p = path("_ckpt")
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(ckpt) = runDirs(s, "graft_stream_statemeta", d)("_ckpt")
     val deltaPath = dupSpool(s, d)
     val span = s.read.parquet(deltaPath)
       .agg(unix_millis(max(col("ts"))) - unix_millis(min(col("ts"))))
       .head().getLong(0)
-    val nFiles = fs.listStatus(new org.apache.hadoop.fs.Path(deltaPath))
-      .count(_.getPath.getName.endsWith(".parquet"))
+    val spoolDir = new org.apache.hadoop.fs.Path(deltaPath)
+    val nFiles = spoolDir.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listStatus(spoolDir).count(_.getPath.getName.endsWith(".parquet"))
     // pinned at 8 REGARDLESS of the deployment knob: the oracle gates
     // the frozen-at-first-run partition count itself (q236Sql pins 8),
     // so this stream's conf is part of the declared result
-    withShufflePartitions(s, 8) {
-      s.readStream
-        .schema(s.read.parquet(deltaPath).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(deltaPath)
+    withSessionConfs(s, "spark.sql.shuffle.partitions" -> "8") {
+      spoolStream(s, deltaPath, 1)
         .withWatermark("ts", s"${span + DayMs} milliseconds")
         .dropDuplicatesWithinWatermark("doc_id")
         .writeStream
         .format("noop")
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start().awaitTermination()
     }
-    s.read.format("state-metadata").load(path("_ckpt").toString)
+    s.read.format("state-metadata").load(ckpt)
       .select(col("operatorId").as("operator_id"),
         col("operatorName").as("operator_name"),
         col("stateStoreName").as("state_store_name"),
@@ -3478,15 +3067,8 @@ object StreamingQueries {
     * horizon), never O(history).
     */
   val q239JoinAggChain: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_joinagg", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_joinagg", d)("_ckpt", "_out")
     val sp = eventSpool(s, d)
     // each side keeps EXACTLY ONE event-time column — the window; the
     // raw timestamp is demoted to plain millis (a second watermarked
@@ -3515,7 +3097,7 @@ object StreamingQueries {
           col("n_pairs"), col("sum_lead_ms"))
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeBatch(batch, outPath, batchId)
@@ -3548,24 +3130,13 @@ object StreamingQueries {
     * reconciliation reads both sinks once.
     */
   val q247MultiSinkFanout: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_fanout", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_raw", "_agg").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val rawPath = path("_raw").toString
-    val aggPath = path("_agg").toString
+    val Seq(ckpt, rawPath, aggPath) =
+      runDirs(s, "graft_stream_fanout", d)("_ckpt", "_raw", "_agg")
     val deltaPath = docSpool(s, d)
     withFewShufflePartitions(s) {
-      s.readStream
-        .schema(s.read.parquet(deltaPath).schema)
-        .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-        .parquet(deltaPath)
+      spoolStream(s, deltaPath, SpoolFilesPerTrigger)
         .writeStream
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           batch.persist()
@@ -3617,22 +3188,13 @@ object StreamingQueries {
     * sink keeps the gate about the METRICS channel, not the sink.
     */
   val q245StreamingObserve: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_observe", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    locally {
-      val p = path("_ckpt")
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(ckpt) = runDirs(s, "graft_stream_observe", d)("_ckpt")
     val deltaPath = docSpool(s, d)
-    val nFiles = fs.listStatus(new org.apache.hadoop.fs.Path(deltaPath))
-      .count(_.getPath.getName.endsWith(".parquet"))
+    val spoolDir = new org.apache.hadoop.fs.Path(deltaPath)
+    val nFiles = spoolDir.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listStatus(spoolDir).count(_.getPath.getName.endsWith(".parquet"))
     val q = withFewShufflePartitions(s) {
-      s.readStream
-        .schema(s.read.parquet(deltaPath).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(deltaPath)
+      spoolStream(s, deltaPath, 1)
         .observe("admission",
           count(lit(1)).as("n_rows"),
           sum(col("n_chars")).as("chars"),
@@ -3640,7 +3202,7 @@ object StreamingQueries {
             .as("n_admitted"))
         .writeStream
         .format("noop")
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start()
     }
@@ -3680,14 +3242,7 @@ object StreamingQueries {
     */
   private def sessionStateAudit(s: SparkSession, d: String, tag: String,
       gap: Column): DataFrame = {
-    val base = RunStore.tableName(s"graft_stream_$tag", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    locally {
-      val p = path("_ckpt")
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val Seq(ckpt) = runDirs(s, s"graft_stream_$tag", d)("_ckpt")
     val sp = eventSpool(s, d)
     // span of the WHOLE spool (sentinels included): the delay must
     // keep the watermark below every event or sessions start evicting
@@ -3695,10 +3250,7 @@ object StreamingQueries {
       .agg(unix_millis(max(col("ts"))) - unix_millis(min(col("ts"))))
       .head().getLong(0)
     withFewShufflePartitions(s) {
-      s.readStream
-        .schema(s.read.parquet(sp.dir).schema)
-        .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
-        .parquet(sp.dir)
+      spoolStream(s, sp.dir, SpoolFilesPerTrigger)
         .select(col("user_id"), col("ts"), col("event_type"))
         .withWatermark("ts", s"${fullSpan + DayMs} milliseconds")
         .groupBy(session_window(col("ts"), gap), col("user_id"))
@@ -3706,7 +3258,7 @@ object StreamingQueries {
         .writeStream
         .outputMode("append")
         .format("noop")
-        .option("checkpointLocation", path("_ckpt").toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start().awaitTermination()
     }
@@ -3714,7 +3266,7 @@ object StreamingQueries {
     // sessionStartTime) so the store can prefix-scan a key's sessions
     // for merge; the full merged window and the agg buffer live in the
     // VALUE (the buffer count field keeps its pre-alias name `count`)
-    s.read.format("statestore").load(path("_ckpt").toString)
+    s.read.format("statestore").load(ckpt)
       .filter(col("key.user_id") =!= lit(sp.sentinelUid))
       .select(col("key.user_id").as("user_id"),
         unix_millis(col("value.session_window.start"))
@@ -3846,42 +3398,23 @@ object StreamingQueries {
     * state actually holding" without touching the stream.
     */
   val q231TwsStateAudit: Q = (s, d) => {
-    val base = RunStore.tableName("graft_stream_attr_twsobs", d)
-    def path(suffix: String) = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), base + suffix)
-    val fs = path("").getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("_ckpt", "_out").foreach { suf =>
-      val p = path(suf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val outPath = path("_out").toString
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_attr_twsobs", d)("_ckpt", "_out")
     val sp = eventSpool(s, d)
-    val stream = s.readStream
-      .schema(s.read.parquet(sp.dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sp.dir)
+    val stream = spoolStream(s, sp.dir, 1)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
     withSessionConfs(s, ProviderKey -> RocksDbProvider) {
-      withFewShufflePartitions(s) {
+      drainToSink(s, ckpt, outPath) {
         graft.streaming.StreamingAttributionTws
           .attribute(stream, EventQueries.AttributionWindowMs,
             s"${sp.delayMs} milliseconds", stateTtlMs = sp.ttlMs)
-          .writeStream
-          .option("checkpointLocation", path("_ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[graft.streaming.AttributionRow],
-                batchId: Long) =>
-              writeBatch(batch.toDF(), outPath, batchId)
-          }
-          .start().awaitTermination()
       }
     }
-    val (lastReal, _, _) = sentinelBatchSplit(s, sp, path("_ckpt"))
+    val (lastReal, _, _) = sentinelBatchSplit(s, sp, ckpt)
     def read(opts: (String, String)*): DataFrame =
       opts.foldLeft(s.read.format("statestore")) { case (r, (k, v)) =>
         r.option(k, v)
-      }.load(path("_ckpt").toString)
+      }.load(ckpt)
     val pin = "batchId" -> lastReal.toString
     def listRows(tag: String, name: String, pinned: Option[(String, String)]) =
       read(Seq("stateVarName" -> name,

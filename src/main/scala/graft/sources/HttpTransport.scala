@@ -58,13 +58,13 @@ object GeoNetHttp {
   /** `?MMI={mmi}` — the server-side intensity filter (task.ts:176). */
   def quakeUrl(mmi: Int): String = s"$ApiBase?MMI=$mmi"
 
-  /** Process-wide default transport for deployments. The DSv2 scan is
-    * instantiated reflectively from string options, so a transport can't
-    * ride the call chain; prefer [[registerTransport]] + the `transport`
-    * source option for anything concurrent — two streaming queries (or
-    * parallel test suites) that each swap this var race each other.
+  /** The process-wide live transport: what a run uses when it is given
+    * no other. Another client goes in through the `transport` parameter
+    * of `QuakeRunner.run` and `QuakeStream.submitSnapshots`, or, for the
+    * `geonet` source, which is built from string options, through
+    * [[registerTransport]] and the source's `transport` option.
     */
-  @volatile var defaultTransport: HttpTransport = new JdkHttpTransport()
+  val LiveTransport: HttpTransport = new JdkHttpTransport()
 
   private val registry =
     new java.util.concurrent.ConcurrentHashMap[String, HttpTransport]()
@@ -77,12 +77,13 @@ object GeoNetHttp {
 
   def unregisterTransport(id: String): Unit = registry.remove(id)
 
-  /** Resolve the `transport` option: a registered id, or the process
-    * default when absent. An UNKNOWN id fails loudly — falling back to
-    * the live JDK transport on a typo would silently hit the network.
+  /** Resolve the `transport` option: a registered id, or
+    * [[LiveTransport]] when absent. An UNKNOWN id fails loudly — falling
+    * back to the live JDK transport on a typo would silently hit the
+    * network.
     */
   def transportFor(id: Option[String]): HttpTransport = id match {
-    case None => defaultTransport
+    case None => LiveTransport
     case Some(i) => Option(registry.get(i)).getOrElse(
       throw new IllegalArgumentException(
         s"unknown transport id '$i' — register it with " +

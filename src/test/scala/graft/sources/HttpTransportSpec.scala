@@ -29,6 +29,13 @@ class HttpTransportSpec extends AnyFunSuite {
   private def ok(body: String): String => HttpResponse =
     _ => HttpResponse(200, "OK", body)
 
+  /** Run `body` with `t` registered under a fresh `transport` id. */
+  private def withRegistered[T](t: HttpTransport)(body: String => T): T = {
+    val id = s"http-spec-${java.util.UUID.randomUUID()}"
+    GeoNetHttp.registerTransport(id, t)
+    try body(id) finally GeoNetHttp.unregisterTransport(id)
+  }
+
   test("quakeUrl builds the reference's ?MMI= request (task.ts:176)") {
     assert(GeoNetHttp.quakeUrl(5) === "https://api.geonet.org.nz/quake?MMI=5")
     assert(GeoNetHttp.quakeUrl(-1) === "https://api.geonet.org.nz/quake?MMI=-1")
@@ -42,29 +49,27 @@ class HttpTransportSpec extends AnyFunSuite {
 
   test("live scan: pushed mmi filter becomes the request URL") {
     val t = new FakeTransport(ok(FixtureJson))
-    val saved = GeoNetHttp.defaultTransport
-    GeoNetHttp.defaultTransport = t
-    try {
-      val rows = spark.read.format("graft.sources.GeoNetTableProvider").load()
+    withRegistered(t) { id =>
+      val rows = spark.read.format("graft.sources.GeoNetTableProvider")
+        .option("transport", id).load()
         .filter(col("mmi") >= 5)
         .select("publicID").collect().map(_.getString(0)).sorted.toSeq
       assert(t.gets.toSeq === Seq("https://api.geonet.org.nz/quake?MMI=5"))
       assert(rows === Seq("2026p000001", "2026p000003", "2026p000005"))
-    } finally GeoNetHttp.defaultTransport = saved
+    }
   }
 
   test("live scan with no filter: `mmi` option, else reference default 5") {
     val t = new FakeTransport(ok(FixtureJson))
-    val saved = GeoNetHttp.defaultTransport
-    GeoNetHttp.defaultTransport = t
-    try {
+    withRegistered(t) { id =>
       spark.read.format("graft.sources.GeoNetTableProvider")
-        .option("mmi", "3").load().count()
-      spark.read.format("graft.sources.GeoNetTableProvider").load().count()
+        .option("transport", id).option("mmi", "3").load().count()
+      spark.read.format("graft.sources.GeoNetTableProvider")
+        .option("transport", id).load().count()
       assert(t.gets.toSeq === Seq(
         "https://api.geonet.org.nz/quake?MMI=3",
         "https://api.geonet.org.nz/quake?MMI=5"))
-    } finally GeoNetHttp.defaultTransport = saved
+    }
   }
 
   test("live scan via a REGISTERED transport id: no shared-var swap, so " +

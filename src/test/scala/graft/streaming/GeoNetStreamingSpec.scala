@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.queries.QuakeQueries.{FixtureJson, FixtureNowMs}
 import graft.quakes.QuakeModel.QuakeConfig
-import graft.sources.{FakeTransport, GeoNetHttp, GeoNetSource, HttpResponse}
+import graft.sources.{FakeTransport, GeoNetHttp, GeoNetSource, HttpResponse,
+  HttpTransport}
 
 /** The reference's cron loop as a continuous query: geonet micro-batch
   * source (one fetch per trigger) → the SAME prepared snapshot as
@@ -20,12 +21,18 @@ class GeoNetStreamingSpec extends AnyFunSuite {
   private def newCheckpoint(): String =
     Files.createTempDirectory("graft-geonet-ckpt").toString
 
+  /** Run `body` with `t` registered under a fresh `transport` id. */
+  private def withRegistered[T](t: HttpTransport)(body: String => T): T = {
+    val id = s"geonet-streaming-spec-${java.util.UUID.randomUUID()}"
+    GeoNetHttp.registerTransport(id, t)
+    try body(id) finally GeoNetHttp.unregisterTransport(id)
+  }
+
   test("AvailableNow run = exactly one live fetch, one submitted snapshot") {
     val t = new FakeTransport(_ => HttpResponse(200, "OK", FixtureJson))
-    val saved = GeoNetHttp.defaultTransport
-    GeoNetHttp.defaultTransport = t
-    try {
-      val bodies = QuakeStream.geonetBodies(spark, QuakeConfig(), Map.empty)
+    withRegistered(t) { id =>
+      val bodies = QuakeStream.geonetBodies(spark, QuakeConfig(),
+        Map("transport" -> id))
       val q = QuakeStream.submitSnapshots(bodies, QuakeConfig(),
         "https://sink.example/fc", t, newCheckpoint(),
         clock = () => FixtureNowMs)
@@ -37,33 +44,31 @@ class GeoNetStreamingSpec extends AnyFunSuite {
       assert(payload.contains(""""id":"earthquake-2026p000002""""))
       assert(payload.contains(""""id":"earthquake-2026p000005""""))
       assert(!payload.contains("2026p000004")) // quality='deleted' excluded
-    } finally GeoNetHttp.defaultTransport = saved
+    }
   }
 
   test("the body stream fetches the sink's MMI, over any mmi option " +
     "(task.ts:176)") {
     val t = new FakeTransport(_ => HttpResponse(200, "OK", FixtureJson))
-    val saved = GeoNetHttp.defaultTransport
-    GeoNetHttp.defaultTransport = t
-    try {
+    withRegistered(t) { id =>
       val cfg = QuakeConfig(mmi = 3)
-      val bodies = QuakeStream.geonetBodies(spark, cfg, Map("MMI" -> "5"))
+      val bodies = QuakeStream.geonetBodies(spark, cfg,
+        Map("MMI" -> "5", "transport" -> id))
       QuakeStream.submitSnapshots(bodies, cfg, "https://sink.example/fc", t,
         newCheckpoint(), clock = () => FixtureNowMs).awaitTermination()
       assert(t.gets.toSeq === Seq("https://api.geonet.org.nz/quake?MMI=3"))
       assert(t.posts.size === 1)
-    } finally GeoNetHttp.defaultTransport = saved
+    }
   }
 
   test("restart from the same checkpoint fetches the NEXT snapshot " +
     "(re-invocation is the schedule)") {
     val t = new FakeTransport(_ => HttpResponse(200, "OK", FixtureJson))
-    val saved = GeoNetHttp.defaultTransport
-    GeoNetHttp.defaultTransport = t
-    try {
+    withRegistered(t) { id =>
       val ckpt = newCheckpoint()
       def runOnce(): Unit = {
-        val bodies = QuakeStream.geonetBodies(spark, QuakeConfig(), Map.empty)
+        val bodies = QuakeStream.geonetBodies(spark, QuakeConfig(),
+          Map("transport" -> id))
         QuakeStream.submitSnapshots(bodies, QuakeConfig(),
           "https://sink.example/fc", t, ckpt,
           clock = () => FixtureNowMs).awaitTermination()
@@ -72,17 +77,15 @@ class GeoNetStreamingSpec extends AnyFunSuite {
       runOnce()
       assert(t.gets.size === 2, t.gets)
       assert(t.posts.size === 2)
-    } finally GeoNetHttp.defaultTransport = saved
+    }
   }
 
   test("a failing live fetch fails the streaming query with the " +
     "reference's message (task.ts:179-181)") {
     val t = new FakeTransport(_ => HttpResponse(502, "Bad Gateway", ""))
-    val saved = GeoNetHttp.defaultTransport
-    GeoNetHttp.defaultTransport = t
-    try {
-      val flat =
-        spark.readStream.format("graft.sources.GeoNetTableProvider").load()
+    withRegistered(t) { id =>
+      val flat = spark.readStream.format("graft.sources.GeoNetTableProvider")
+        .option("transport", id).load()
       val q = flat.writeStream.format("memory").queryName("geonet_fail")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", newCheckpoint())
@@ -95,7 +98,7 @@ class GeoNetStreamingSpec extends AnyFunSuite {
           Option(x.getMessage).toSeq ++ messages(x.getCause))
       assert(messages(e).exists(_.contains("Failed to fetch data: 502 Bad Gateway")),
         messages(e).mkString(" | "))
-    } finally GeoNetHttp.defaultTransport = saved
+    }
   }
 
   test("streaming scan still honors body option and the source schema") {

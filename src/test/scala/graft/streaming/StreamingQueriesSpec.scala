@@ -161,6 +161,32 @@ class StreamingQueriesSpec extends AnyFunSuite {
       "the replayed batch must re-commit under the SAME id")
   }
 
+  test("a streaming query re-runs from emptied run dirs: a marker " +
+    "planted in each of its run dirs is gone and the rows repeat") {
+    val warehouse =
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    Seq(
+      ("pii", Seq("_delta", "_ckpt", "_out"),
+        StreamingQueries.q114StreamingPiiScrub),
+      ("funnel", Seq("_ckpt", "_state"), StreamingQueries.q144StreamingFunnel))
+      .foreach { case (tag, suffixes, query) =>
+        val first = rows(query(spark, sf))
+        // `_`-prefixed, so a reader that lists the dir skips it: without
+        // the reset the re-run fails on the stale dirs, not on the marker
+        val markers = suffixes.map { suffix =>
+          val dir = new java.io.File(warehouse,
+            RunStore.tableName(s"graft_stream_$tag", sf) + suffix)
+          assert(dir.isDirectory, s"$dir is missing after the first run")
+          val marker = new java.io.File(dir, "_stale_marker")
+          assert(marker.createNewFile())
+          marker
+        }
+        val second = rows(query(spark, sf))
+        markers.foreach(m => assert(!m.exists(), s"$m survived the re-run"))
+        assert(second.nonEmpty && second == first)
+      }
+  }
+
   test("q114 streaming PII scrub == batch q112 bit-for-bit across " +
     ">= 3 checkpointed micro-batches (scrub-on-ingest == " +
     "scrub-on-release, driver-visible)") {
