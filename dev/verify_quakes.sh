@@ -13,8 +13,9 @@
 #     the JSON reader's on odd and null fields; HttpTransportSpec, which
 #     runs QuakeRunner's full control loop (fetch, snapshot, submit, and
 #     its failure and invalid-config paths) and the source's live `?MMI=`
-#     GET through the transport seam; and QuakeStreamSpec and
-#     GeoNetStreamingSpec, which run the snapshot from landed files and
+#     GET through the transport seam; JsToFixedSpec, which holds the
+#     snapshot's number rendering to node's own `toFixed`; and
+#     QuakeStreamSpec and GeoNetStreamingSpec, which run the snapshot from landed files and
 #     `geonet` fetches with the sink's per-batch clock and expiry contract.
 #
 # Usage: dev/verify_quakes.sh [out-dir] [sf-dir]
@@ -50,4 +51,4 @@ echo "[quakes] comparing against DuckDB..."
 python3 dev/compare.py "$SF" "$OUT" "${QUERIES[@]}"
 
 echo "[quakes] running the snapshot specs..."
-sbt -batch "testOnly graft.quakes.* graft.sources.GeoNetSourceSpec graft.sources.HttpTransportSpec graft.streaming.QuakeStreamSpec graft.streaming.GeoNetStreamingSpec"
+sbt -batch "testOnly graft.quakes.* graft.functions.JsToFixedSpec graft.sources.GeoNetSourceSpec graft.sources.HttpTransportSpec graft.streaming.QuakeStreamSpec graft.streaming.GeoNetStreamingSpec"

@@ -7,24 +7,30 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.annotation.tailrec
 import scala.collection.mutable
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator}
+import com.fasterxml.jackson.core.io.SerializedString
 import org.apache.spark.{SparkEnv, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
   AttributeSet, BasePredicate, BindReferences, Expression, ExpressionsEvaluator,
-  GenericInternalRow, JoinedRow, NamedExpression, Predicate, UnsafeProjection}
+  GenericInternalRow, JoinedRow, NamedExpression, Predicate, SpecializedGetters,
+  UnsafeProjection}
 import org.apache.spark.sql.catalyst.json.JSONOptions
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.classic.ClassicConversions._
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType,
+  StructType}
 
 import graft.quakes.QuakePipeline.FeatureSlices
 
 /** The GeoNet snapshot query of one session and config, planned once:
-  * [[QuakePipeline.transform]] and the snapshot's `to_json` projection,
-  * analysed and optimised into a chain of filters and projections over
-  * the feed rows, with every expression bound to its input row. `now`
+  * [[QuakePipeline.transform]] and the snapshot's projection to one
+  * feature struct and its id, analysed and optimised into a chain of
+  * filters and projections over the feed rows, with every expression
+  * bound to its input row, and a JSON writer for that struct. `now`
   * follows the feed columns in that row, so one prepared snapshot serves
   * every run clock with the same generated code. The subexpressions that
   * read nothing but `now` (today `stale`) are cut out of the chain as run
@@ -35,13 +41,13 @@ import graft.quakes.QuakePipeline.FeatureSlices
   * ([[QuakePipeline.featureSlices]]) and gives each task one contiguous
   * chunk of them. Each task parses its slices with the feed reader's
   * [[QuakePipeline.featureParser]] in the session's options, appends
-  * `now` and the run constants to each row, runs the chain and renders
-  * its features' JSON as UTF-8, joined with `,`; the driver joins the
-  * partitions' bytes in order and decodes them once. The task is a named
-  * function class, so starting the job cleans no closure. The output is
-  * byte for byte one `to_json` of the `collect_list` of
-  * [[QuakePipeline.transform]]'s rows for the same feed (the oracle of
-  * QuakeSnapshotSpec).
+  * `now` and the run constants to each row, runs the chain and writes
+  * its features' structs straight to UTF-8 JSON, joined with `,`; the
+  * driver joins the partitions' bytes in order and decodes them once.
+  * The task is a named function class, so starting the job cleans no
+  * closure. The output is byte for byte Spark's own JSON of the
+  * `collect_list` of [[QuakePipeline.transform]]'s rows for the same
+  * feed (the oracle of QuakeSnapshotSpec).
   *
   * The task-side state — parser, compiled predicates and projections,
   * and the expressions themselves, some of which hold a stateful
@@ -97,23 +103,28 @@ object PreparedSnapshot {
   private final case class Compute(columns: Seq[Expression]) extends Step
 
   /** What a task needs: the reader options for the feed parser, the run
-    * constants bound to a one-column `now` row, and the steps from the
-    * feed row (plus `now` and those constants) up to `(json, id)`.
+    * constants bound to a one-column `now` row, the steps from the feed
+    * row (plus `now` and those constants) up to `(feature, id)`, and the
+    * writer of the feature struct.
     */
   private final case class Plan(options: JSONOptions, constants: Seq[Expression],
-      steps: Seq[Step])
+      steps: Seq[Step], feature: JsonWriter)
 
   private val nextId = new AtomicLong()
 
   /** @param query the optimised snapshot query over a `LogicalRDD` of
-    *              [[QuakeModel.GeoNetFeatureSchema]] plus a LONG `now` column
+    *              [[QuakeModel.GeoNetFeatureSchema]] plus a LONG `now`
+    *              column, with output `(feature struct, id)`
     * @throws IllegalStateException if the query is not a chain of
-    *         `Project`/`Filter` over that scan
+    *         `Project`/`Filter` over that scan, or the feature struct
+    *         holds a type [[JsonWriter]] cannot write
     */
   private[quakes] def apply(spark: SparkSession, query: LogicalPlan,
       conf: Map[String, String]): PreparedSnapshot = {
     val (constants, steps) = compile(query)
-    val plan = Plan(QuakePipeline.feedOptions(spark.sessionState.conf), constants, steps)
+    val sqlConf = spark.sessionState.conf
+    val plan = Plan(QuakePipeline.feedOptions(sqlConf), constants, steps,
+      JsonWriter(query.output.head.dataType, !sqlConf.jsonGeneratorIgnoreNullFields))
     val bytes = SparkEnv.get.closureSerializer.newInstance().serialize(plan)
     new PreparedSnapshot(conf, nextId.incrementAndGet(),
       spark.sparkContext.broadcast(bytes.array.take(bytes.limit)))
@@ -164,6 +175,86 @@ object PreparedSnapshot {
       scanLevel.map(step(_, input)) ++ rest.drop(1).map(n => step(n, n.children.head.output)))
   }
 
+  /** Writes one value of the snapshot's feature struct as JSON, byte for
+    * byte as Spark's `JacksonGenerator` writes it, but from the row's
+    * UTF-8 bytes into a UTF-8 generator: no string is decoded or
+    * re-encoded. Built once per plan from the struct's type, so a type
+    * it cannot write fails `prepare`, not a run.
+    */
+  private sealed abstract class JsonWriter extends Serializable {
+    def write(gen: JsonGenerator, data: SpecializedGetters, ordinal: Int): Unit
+  }
+
+  private object JsonWriter {
+    /** @param writeNulls the session's
+      *        `spark.sql.jsonGenerator.ignoreNullFields` negated: write a
+      *        null struct field as `"name":null` instead of leaving it out
+      */
+    def apply(t: DataType, writeNulls: Boolean): JsonWriter = t match {
+      case StringType => Utf8
+      case IntegerType => Int32
+      case DoubleType => Float64
+      case ArrayType(element, _) => new Elements(JsonWriter(element, writeNulls))
+      case s: StructType =>
+        new Fields(s.fieldNames.map(new SerializedString(_)),
+          s.fields.map(f => JsonWriter(f.dataType, writeNulls)), writeNulls)
+      case other => throw new IllegalStateException(
+        s"cannot prepare the snapshot: no JSON writer for ${other.sql}")
+    }
+
+    private case object Utf8 extends JsonWriter {
+      def write(gen: JsonGenerator, data: SpecializedGetters, ordinal: Int): Unit = {
+        val b = data.getUTF8String(ordinal).getByteBuffer
+        gen.writeUTF8String(b.array, b.arrayOffset + b.position, b.remaining)
+      }
+    }
+    private case object Int32 extends JsonWriter {
+      def write(gen: JsonGenerator, data: SpecializedGetters, ordinal: Int): Unit =
+        gen.writeNumber(data.getInt(ordinal))
+    }
+    private case object Float64 extends JsonWriter {
+      def write(gen: JsonGenerator, data: SpecializedGetters, ordinal: Int): Unit =
+        gen.writeNumber(data.getDouble(ordinal))
+    }
+
+    /** An array; a null element is written as `null`. */
+    private final class Elements(element: JsonWriter) extends JsonWriter {
+      def write(gen: JsonGenerator, data: SpecializedGetters, ordinal: Int): Unit = {
+        val array = data.getArray(ordinal)
+        gen.writeStartArray()
+        var i = 0
+        while (i < array.numElements()) {
+          if (array.isNullAt(i)) gen.writeNull() else element.write(gen, array, i)
+          i += 1
+        }
+        gen.writeEndArray()
+      }
+    }
+
+    /** A struct, its fields in order; a null field is left out unless
+      * `writeNulls`.
+      */
+    private final class Fields(names: Array[SerializedString], fields: Array[JsonWriter],
+        writeNulls: Boolean) extends JsonWriter {
+      def write(gen: JsonGenerator, data: SpecializedGetters, ordinal: Int): Unit = {
+        val row = data.getStruct(ordinal, fields.length)
+        gen.writeStartObject()
+        var i = 0
+        while (i < fields.length) {
+          if (!row.isNullAt(i)) {
+            gen.writeFieldName(names(i))
+            fields(i).write(gen, row, i)
+          } else if (writeNulls) {
+            gen.writeFieldName(names(i))
+            gen.writeNull()
+          }
+          i += 1
+        }
+        gen.writeEndObject()
+      }
+    }
+  }
+
   /** One task of a run: its chunk rendered by the thread's evaluators. A
     * named class, not a lambda, so `runJob` finds no closure to clean.
     */
@@ -190,6 +281,9 @@ object PreparedSnapshot {
       SparkEnv.get.closureSerializer.newInstance()
         .deserialize[Plan](ByteBuffer.wrap(plan.value))))
 
+  /** As `JacksonGenerator` builds its factory. */
+  private val Json = new JsonFactory()
+
   private final class Evaluators(plan: Plan) {
     private val parser = QuakePipeline.featureParser(plan.options)
     private val constants = plan.constants.toArray
@@ -201,8 +295,8 @@ object PreparedSnapshot {
     private val run = new GenericInternalRow(1 + constants.length)
     private val input = new JoinedRow
 
-    /** The chunk's kept features as UTF-8 `json,json,…` (the bytes
-      * `to_json` wrote, shipped without a String round trip) and their ids.
+    /** The chunk's kept features as UTF-8 `json,json,…`, written by one
+      * generator and shipped without a String round trip, and their ids.
       */
     def render(chunk: FeatureSlices, nowMs: Long,
         partition: Int): (Array[Byte], Array[String]) = {
@@ -214,6 +308,7 @@ object PreparedSnapshot {
         c += 1
       }
       val json = new ByteArrayOutputStream(1 << 16)
+      val gen = Json.createGenerator(json).setRootValueSeparator(null)
       val ids = Array.newBuilder[String]
       var f = 0
       while (f < chunk.size) {
@@ -228,13 +323,14 @@ object PreparedSnapshot {
             i += 1
           }
           if (row != null) {
-            if (json.size > 0) json.write(',')
-            row.getUTF8String(0).writeTo(json)
+            if (ids.length > 0) gen.writeRaw(',')
+            plan.feature.write(gen, row, 0)
             ids += (if (row.isNullAt(1)) null else row.getUTF8String(1).toString)
           }
         }
         f += 1
       }
+      gen.close()
       (json.toByteArray, ids.result())
     }
   }

@@ -2,12 +2,13 @@ package graft.quakes
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 
-/** Column-combinator implementations of the reference's scalar helpers
-  * (task.ts:81-138). Everything here is a pure `Column => Column`
-  * composition of built-in functions — fully visible to Catalyst
-  * (constant folding, codegen), no UDFs, and directly expressible as
-  * ANSI SQL for the DuckDB oracle.
+/** Column implementations of the reference's scalar helpers
+  * (task.ts:81-138). Each is a `Column => Column` composition of
+  * built-in functions, except the NZ wall clock, which is one codegen'd
+  * expression ([[NzLocalTime]]) — all fully visible to Catalyst
+  * (constant folding, codegen), no UDFs.
   */
 object QuakeFunctions {
 
@@ -43,19 +44,16 @@ object QuakeFunctions {
       .otherwise(unitPhrase(days, "day"))
   }
 
-  /** UTC-offset of Pacific/Auckland at the event instant, in milliseconds.
-    * `from_utc_timestamp` shifts the instant so its UTC rendering equals the
-    * NZ wall clock; the shift (+12h NZST / +13h NZDT) is the offset.
+  /** task.ts:81-105,134-135 — `dd/MM/yyyy, HH:mm NZST|NZDT` in
+    * Pacific/Auckland: one [[NzLocalTime]] expression. Like every
+    * rendering here it does not depend on the session time zone.
     */
-  private def nzOffsetMillis(ts: Column): Column =
-    nzWallMillis(ts) - unix_millis(ts)
+  def nzLocalTime(ts: Column): Column =
+    ExpressionUtils.column(NzLocalTime(ExpressionUtils.expression(ts.cast("timestamp"))))
 
-  /** Pacific/Auckland wall clock of `ts` as epoch millis of the same UTC
-    * wall clock. `from_utc_timestamp` shifts by the zone's offset at the
-    * instant, independent of the session time zone.
-    */
-  private def nzWallMillis(ts: Column): Column =
-    unix_millis(from_utc_timestamp(ts, NzTz))
+  /** task.ts:132-138 — `"dd/MM/yyyy, HH:mm NZST|NZDT (N units ago)"`. */
+  def nzLocal(ts: Column, nowMs: Column): Column =
+    concat(nzLocalTime(ts), lit(" ("), timeAgo(ts, nowMs), lit(")"))
 
   private val DayMs = 24L * 3600 * 1000
 
@@ -71,40 +69,6 @@ object QuakeFunctions {
 
   private def zeroPad(n: Column, width: Int): Column =
     lpad(n.cast("string"), width, "0")
-
-  /** task.ts:93-105 — 'NZDT' | 'NZST', fallback 'NZT'. Implemented from the
-    * UTC offset instead of locale data (Intl `timeZoneName:'short'` in the
-    * reference): +13h ⇒ NZDT, +12h ⇒ NZST, anything else ⇒ the reference's
-    * 'NZT' fallback. Handles the DST transition instants exactly because the
-    * offset itself is what flips there.
-    */
-  def nzTzName(ts: Column): Column =
-    when(nzOffsetMillis(ts) === lit(13L * 3600 * 1000), lit("NZDT"))
-      .when(nzOffsetMillis(ts) === lit(12L * 3600 * 1000), lit("NZST"))
-      .otherwise(lit("NZT"))
-
-  /** task.ts:81-86,134 — en-NZ `dd/MM/yyyy` in Pacific/Auckland. Like
-    * every rendering here it is built from date parts and clock
-    * arithmetic, not `date_format`, which would print in the session
-    * time zone.
-    */
-  def nzDate(ts: Column): Column = {
-    val d = utcDate(nzWallMillis(ts))
-    concat(zeroPad(dayofmonth(d), 2), lit("/"), zeroPad(month(d), 2),
-      lit("/"), zeroPad(year(d), 4))
-  }
-
-  /** task.ts:87-92,135 — 24h `HH:mm` in Pacific/Auckland. */
-  def nzTime(ts: Column): Column = {
-    val ms = nzWallMillis(ts)
-    concat(zeroPad(clock(ms, 3600000L, 24), 2), lit(":"),
-      zeroPad(clock(ms, 60000L, 60), 2))
-  }
-
-  /** task.ts:132-138 — `"dd/MM/yyyy, HH:mm NZST|NZDT (N units ago)"`. */
-  def nzLocal(ts: Column, nowMs: Column): Column =
-    concat(nzDate(ts), lit(", "), nzTime(ts), lit(" "), nzTzName(ts),
-      lit(" ("), timeAgo(ts, nowMs), lit(")"))
 
   /** Dictionary lookup with default (task.ts:218,225): a map literal +
     * `element_at` + `coalesce`. Constant-folded by Catalyst, so the

@@ -13,6 +13,7 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.JsToFixed.jsToFixed
 import graft.quakes.QuakeModel._
 import graft.quakes.QuakeFunctions._
 
@@ -21,10 +22,11 @@ import graft.quakes.QuakeFunctions._
   * `transform` is the one definition of the semantics. The registered
   * queries (q50/q51) run it as a DataFrame query; every snapshot — the
   * batch runner's and each streaming sink batch's — is built by a
-  * [[PreparedSnapshot]]: the filter / project / `to_json` of the
-  * snapshot analysed, optimised and bound once per session and config
-  * ([[prepare]]), with `now` an input column instead of a literal, so a
-  * new run clock reuses the same compiled code.
+  * [[PreparedSnapshot]]: the filter / project of the snapshot analysed,
+  * optimised and bound once per session and config ([[prepare]]), with
+  * `now` an input column instead of a literal, so a new run clock reuses
+  * the same compiled code; each feature's struct is written straight to
+  * UTF-8 JSON, byte for byte as Spark's JSON writer would write it.
   *
   * Physical shape of one prepared run: a driver-side streaming pass
   * ([[featureSlices]]) encodes the response body to UTF-8 once and finds
@@ -219,15 +221,21 @@ object QuakePipeline {
     val timeLocal = nzLocal(eventTs, now)
     val staleIso = toIso(timestamp_millis(now + lit(5L * 60 * 1000)))
 
+    // P2/P9 numbers: JS toFixed, which rounds the exact binary value. A
+    // missing number prints `null`; JS's toFixed throws on it instead,
+    // which the run does not reproduce yet
+    def toFixed(x: Column, digits: Int): Column =
+      coalesce(jsToFixed(x, digits), lit("null"))
+
     // P9 (task.ts:233-242): 8 formatted lines joined with '\n'
     val remarks = concat_ws("\n",
-      format_string("Magnitude: %.2f", p("magnitude")),
+      concat(lit("Magnitude: "), toFixed(p("magnitude"), 2)),
       concat(lit("MMI: "), p("mmi").cast("string")),
       concat(lit("Intensity: "), intensity),
       concat(lit("Location: "), p("locality")),
       concat(lit("Time (UTC): "), p("time")),
       concat(lit("Time (NZ): "), timeLocal),
-      format_string("Depth: %.1f km", p("depth")),
+      concat(lit("Depth: "), toFixed(p("depth"), 1), lit(" km")),
       concat(lit("Information Quality: "), p("quality")))
 
     filtered.select(
@@ -235,9 +243,9 @@ object QuakePipeline {
       concat(lit("earthquake-"), p("publicID")).as("id"),
       lit("Feature").as("type"),
       struct(
-        // P2 (task.ts:216) — JS toFixed(1) ≈ JVM %.1f; divergence only at
-        // shortest-decimal half-boundaries (SURVEY.md §7.4 risk 1)
-        format_string("M%.1f %s", p("magnitude"), p("locality")).as("callsign"),
+        // P2 (task.ts:216) — a null locality prints `null`, as in JS
+        concat(lit("M"), toFixed(p("magnitude"), 1), lit(" "),
+          coalesce(p("locality"), lit("null"))).as("callsign"),
         lit(CotType).as("type"),
         icon.as("icon"),
         p("time").as("time"),
@@ -318,14 +326,15 @@ object QuakePipeline {
     PreparedSnapshot(spark, snapshotQuery(spark, cfg), conf)
 
   /** [[transform]] and the snapshot's K1 rows (task.ts:251-256) — each
-    * CoT feature's JSON, then its id — over an empty frame of feed rows
-    * plus a `now` column, optimised but not executed.
+    * CoT feature as one struct, which [[PreparedSnapshot]] writes as
+    * JSON, then its id — over an empty frame of feed rows plus a `now`
+    * column, optimised but not executed.
     */
   private[quakes] def snapshotQuery(spark: SparkSession, cfg: QuakeConfig): LogicalPlan = {
     val rows = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       GeoNetFeatureSchema.add(StructField("now", LongType, nullable = false)))
     transform(rows, cfg, col("now")).select(
-      to_json(struct(col("id"), col("type"), col("properties"), col("geometry"))),
+      struct(col("id"), col("type"), col("properties"), col("geometry")).as("feature"),
       col("id")).queryExecution.optimizedPlan
   }
 }

@@ -1876,9 +1876,19 @@ object StreamingQueries {
     */
   private[graft] val DupFeedEpoch0 = 1704067200000L // 2024-01-01T00:00Z
 
-  private[graft] def dupSpool(s: SparkSession, d: String): String =
-    ensureSpool(s, d, "dupfeed", "v1", "documents.parquet") { dir =>
-      graft.core.Tables.documents(s, d)
+  /** The dup spool's dir and the event-time span of its rows, which
+    * ride the sidecar as [[EventSpool]]'s do, so no consumer re-scans the
+    * spool for them. `delayMs` is a watermark delay past the whole span:
+    * no copy is ever late-dropped.
+    */
+  private[graft] final case class DupSpool(dir: String, minTs: Long, maxTs: Long) {
+    def spanMs: Long = maxTs - minTs
+    def delayMs: Long = spanMs + DayMs
+  }
+
+  private[graft] def dupSpool(s: SparkSession, d: String): DupSpool = {
+    val info = ensureSpool(s, d, "dupfeed", "v2", "documents.parquet") { dir =>
+      val feed = graft.core.Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"),
           timestamp_millis(lit(DupFeedEpoch0) + col("doc_id") * 1000L)
             .as("ts"),
@@ -1887,12 +1897,16 @@ object StreamingQueries {
             ((mdUniform("dup:", col("doc_id")) < 0.4) &&
               (mdUniform("dup2:", col("doc_id")) < 0.5)).cast("int"))
             .as("k"))
-        .select(col("doc_id"), col("lang"), col("n_chars"), col("ts"),
+      feed.select(col("doc_id"), col("lang"), col("n_chars"), col("ts"),
           explode(sequence(lit(1), col("k"))).as("copy"))
         .drop("copy", "k")
         .repartition(3).write.parquet(dir)
-      Map.empty
-    }.dir
+      val span = feed.agg(unix_millis(min(col("ts"))), unix_millis(max(col("ts"))))
+        .head()
+      Map("min_ts" -> span.getLong(0).toString, "max_ts" -> span.getLong(1).toString)
+    }
+    DupSpool(info.dir, info.meta("min_ts").toLong, info.meta("max_ts").toLong)
+  }
 
   /** q181 — EXACTLY-ONCE from AT-LEAST-ONCE via the engine's OWN
     * stateful dedup: Spark's native `dropDuplicatesWithinWatermark`
@@ -1913,12 +1927,9 @@ object StreamingQueries {
   val q181StreamingExactDedup: Q = (s, d) => {
     val Seq(ckpt, outPath) =
       runDirs(s, "graft_stream_dedup", d)("_ckpt", "_out")
-    val deltaPath = dupSpool(s, d)
-    val span = s.read.parquet(deltaPath)
-      .agg(unix_millis(max(col("ts"))) - unix_millis(min(col("ts"))))
-      .head().getLong(0)
-    val stream = spoolStream(s, deltaPath, SpoolFilesPerTrigger)
-      .withWatermark("ts", s"${span + DayMs} milliseconds")
+    val spool = dupSpool(s, d)
+    val stream = spoolStream(s, spool.dir, SpoolFilesPerTrigger)
+      .withWatermark("ts", s"${spool.delayMs} milliseconds")
       .dropDuplicatesWithinWatermark("doc_id")
     drainToSink(s, ckpt, outPath)(stream)
     readSink(s, outPath)
@@ -2953,13 +2964,10 @@ object StreamingQueries {
     */
   val q229DedupStateAudit: Q = (s, d) => {
     val Seq(ckpt) = runDirs(s, "graft_stream_dedupobs", d)("_ckpt")
-    val deltaPath = dupSpool(s, d)
-    val span = s.read.parquet(deltaPath)
-      .agg(unix_millis(max(col("ts"))) - unix_millis(min(col("ts"))))
-      .head().getLong(0)
+    val spool = dupSpool(s, d)
     withFewShufflePartitions(s) {
-      spoolStream(s, deltaPath, 1)
-        .withWatermark("ts", s"${span + DayMs} milliseconds")
+      spoolStream(s, spool.dir, 1)
+        .withWatermark("ts", s"${spool.delayMs} milliseconds")
         .dropDuplicatesWithinWatermark("doc_id")
         .writeStream
         .format("noop")
@@ -3000,19 +3008,16 @@ object StreamingQueries {
     */
   val q236StateMetadataAudit: Q = (s, d) => {
     val Seq(ckpt) = runDirs(s, "graft_stream_statemeta", d)("_ckpt")
-    val deltaPath = dupSpool(s, d)
-    val span = s.read.parquet(deltaPath)
-      .agg(unix_millis(max(col("ts"))) - unix_millis(min(col("ts"))))
-      .head().getLong(0)
-    val spoolDir = new org.apache.hadoop.fs.Path(deltaPath)
+    val spool = dupSpool(s, d)
+    val spoolDir = new org.apache.hadoop.fs.Path(spool.dir)
     val nFiles = spoolDir.getFileSystem(s.sparkContext.hadoopConfiguration)
       .listStatus(spoolDir).count(_.getPath.getName.endsWith(".parquet"))
     // pinned at 8 REGARDLESS of the deployment knob: the oracle gates
     // the frozen-at-first-run partition count itself (q236Sql pins 8),
     // so this stream's conf is part of the declared result
     withSessionConfs(s, "spark.sql.shuffle.partitions" -> "8") {
-      spoolStream(s, deltaPath, 1)
-        .withWatermark("ts", s"${span + DayMs} milliseconds")
+      spoolStream(s, spool.dir, 1)
+        .withWatermark("ts", s"${spool.delayMs} milliseconds")
         .dropDuplicatesWithinWatermark("doc_id")
         .writeStream
         .format("noop")

@@ -44,8 +44,10 @@ class QuakeFunctionsSpec extends AnyFunSuite {
     assert(agoAt("2026-08-01T00:00:00Z", "2026-08-21T00:00:00Z") == "20 days ago")
   }
 
+  /** The zone name that ends the NZ local time of `iso`. */
   private def tzAt(iso: String): String =
-    Seq(iso).toDF("t").select(nzTzName(to_timestamp($"t"))).head.getString(0)
+    Seq(iso).toDF("t").select(nzLocalTime(to_timestamp($"t"))).head.getString(0)
+      .split(' ').last
 
   test("nzTzName: NZST in southern winter, NZDT in summer") {
     assert(tzAt("2026-08-06T23:30:00Z") == "NZST")
@@ -63,11 +65,26 @@ class QuakeFunctionsSpec extends AnyFunSuite {
   }
 
   test("nzDate / nzTime: en-NZ rendering in Pacific/Auckland (task.ts:81-92)") {
+    val local = nzLocalTime(to_timestamp($"t"))
     val row = Seq("2026-08-06T23:30:00Z").toDF("t")
-      .select(nzDate(to_timestamp($"t")), nzTime(to_timestamp($"t"))).head
+      .select(substring(local, 1, 10), substring(local, 13, 5)).head
     // 2026-08-06T23:30Z = 2026-08-07 11:30 NZST
     assert(row.getString(0) == "07/08/2026")
     assert(row.getString(1) == "11:30")
+  }
+
+  test("nzLocalTime: the wall clock either side of the 2026 DST transitions") {
+    def localAt(iso: String): String =
+      Seq(iso).toDF("t").select(nzLocalTime(to_timestamp($"t"))).head().getString(0)
+    // 03:00 NZDT becomes 02:00 NZST, and 02:00 NZST becomes 03:00 NZDT
+    assert(localAt("2026-04-04T13:59:59.999Z") == "05/04/2026, 02:59 NZDT")
+    assert(localAt("2026-04-04T14:00:00Z") == "05/04/2026, 02:00 NZST")
+    assert(localAt("2026-09-26T13:59:59.999Z") == "27/09/2026, 01:59 NZST")
+    assert(localAt("2026-09-26T14:00:00Z") == "27/09/2026, 03:00 NZDT")
+    // before 1970 the epoch seconds are negative: floor, not truncate
+    assert(localAt("1968-05-31T23:59:59.5Z") == "01/06/1968, 11:59 NZST")
+    assert(Seq("x").toDF("t").select(nzLocalTime(lit(null).cast("timestamp")))
+      .head().isNullAt(0))
   }
 
   test("nzLocal: composite format (task.ts:132-138)") {

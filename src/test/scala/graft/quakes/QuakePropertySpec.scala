@@ -50,14 +50,30 @@ class QuakePropertySpec extends AnyFunSuite {
     import spark.implicits._
     val cases = samples(instantGen, 500)
     val got = cases.map(Instant.ofEpochMilli(_).toString).toDF("t")
-      .select(QuakeFunctions.nzTzName(to_timestamp($"t")))
-      .collect().map(_.getString(0))
+      .select(QuakeFunctions.nzLocalTime(to_timestamp($"t")))
+      .collect().map(_.getString(0).split(' ').last)
     cases.zip(got).foreach { case (ms, g) =>
       val expected = java.time.ZonedDateTime
         .ofInstant(Instant.ofEpochMilli(ms),
           java.time.ZoneId.of("Pacific/Auckland"))
         .format(java.time.format.DateTimeFormatter.ofPattern("zzz"))
       assert(g == expected, s"ms=$ms")
+    }
+  }
+
+  test("NzLocalTime equals java.time's en-NZ wall clock on 500 random " +
+    "millisecond instants, in a non-UTC session") {
+    val session = spark.newSession()
+    session.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    import session.implicits._
+    val cases = samples(instantGen, 500)
+    val got = cases.map(Instant.ofEpochMilli(_).toString).toDF("t")
+      .select(QuakeFunctions.nzLocalTime(to_timestamp($"t")))
+      .collect().map(_.getString(0))
+    val format = java.time.format.DateTimeFormatter.ofPattern("dd/MM/yyyy, HH:mm zzz")
+      .withZone(java.time.ZoneId.of("Pacific/Auckland"))
+    cases.zip(got).foreach { case (ms, g) =>
+      assert(g == format.format(Instant.ofEpochMilli(ms)), s"ms=$ms")
     }
   }
 

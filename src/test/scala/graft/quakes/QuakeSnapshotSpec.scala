@@ -14,7 +14,11 @@ import graft.quakes.QuakeModel._
 /** The prepared snapshot against the whole-collection formulation: one
   * `to_json` over `collect_list` of every feature behind a
   * single-partition shuffle. Both must agree byte for byte, ids in the
-  * same order, on every feed shape and in every session time zone.
+  * same order, on every feed shape of [[cases]] and in every session time
+  * zone. The prepared snapshot writes each feature's JSON with its own
+  * writer, so the odd values here (control characters, NaN, null array
+  * elements, null fields a session asks to keep) check that writer
+  * against Spark's.
   */
 class QuakeSnapshotSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -67,6 +71,69 @@ class QuakeSnapshotSpec extends AnyFunSuite {
   private def collection(features: String*): String =
     features.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
 
+  private val OneYear = QuakeConfig(maxAgeMinutes = 525600.0)
+
+  private val oddValues = collection(
+    feature(1, "-1", "5 km north of Ōtaki"),
+    feature(2, "0", "Whakatāne — \\\"offshore\\\" 🌊", magnitude = "null"),
+    feature(3, "10", "Ōamaru\\\\coast", depth = "null"),
+    feature(4, "11", "東 of Kaikōura", magnitude = "null", depth = "null"),
+    feature(5, "12", "Te Anau"),
+    feature(6, "6", "Rotorua"))
+
+  private val wrongTypes = collection(
+    feature(1, "\"x\"", "Ōtaki"),
+    feature(2, "5", "Whakatāne", depth = "\"3.2\""),
+    feature(3, "4", "Te Anau", coordinates = "\"n/a\""),
+    feature(4, "\"x\"", "Rotorua", depth = "\"3.2\"", coordinates = "\"n/a\""),
+    feature(5, "7", "Kaikōura"))
+
+  private val nullQuality = collection(
+    feature(1, "5", "Ōtaki").replace(""""quality":"best"""", """"quality":null"""),
+    feature(2, "5", "Rotorua").replace(""""quality":"best"""", """"quality":"deleted""""))
+
+  private val shortCoordinates = collection(
+    feature(1, "5", "Ōtaki", coordinates = "[174.2]"),
+    feature(2, "5", "Rotorua", coordinates = "[]"))
+
+  /** U+0001, U+001F, tab and newline, which JSON must escape. */
+  private val controlCharacters = collection(
+    feature(1, "5", "Ōtaki\\u0001bell"),
+    feature(2, "5", "Rotorua\\tinland\\n\\u001fend"))
+
+  /** The feed reader reads the strings `"NaN"`, `"Infinity"` and
+    * `"-Infinity"` in a number field as those doubles. (A bare `NaN`
+    * token fails the body, as `JSON.parse` fails it.)
+    */
+  private val nonFinite = collection(
+    feature(1, "5", "Ōtaki", magnitude = "\"NaN\"", depth = "\"Infinity\""),
+    feature(2, "5", "Rotorua", magnitude = "\"Infinity\"", depth = "\"-Infinity\""),
+    feature(3, "5", "Te Anau", magnitude = "\"-Infinity\"", depth = "\"NaN\""))
+
+  private val nullCoordinate = collection(
+    feature(1, "5", "Ōtaki", coordinates = "[174.2,null]"),
+    feature(2, "5", "Rotorua", coordinates = "[null,-41.5,7]"))
+
+  /** Magnitude 1.295 and depth 2.15 are just below a tie in binary, so
+    * JS `toFixed` rounds them down where the JVM formatter rounds up.
+    */
+  private val toFixedTies = collection(
+    feature(1, "5", "Ōtaki", magnitude = "1.295", depth = "2.15"))
+
+  /** Every feed of this spec with a window that keeps its features: the
+    * cases checked in each session time zone.
+    */
+  private val cases: Seq[(String, String, QuakeConfig)] = Seq(
+    ("fixture", FixtureJson, OneYear),
+    ("odd values", oddValues, QuakeConfig()),
+    ("wrong types", wrongTypes, QuakeConfig()),
+    ("null quality", nullQuality, OneYear),
+    ("short coordinates", shortCoordinates, OneYear),
+    ("control characters", controlCharacters, OneYear),
+    ("non-finite numbers", nonFinite, OneYear),
+    ("null coordinate", nullCoordinate, OneYear),
+    ("toFixed ties", toFixedTies, OneYear))
+
   test("FIXTURES.md fixture: default and one-year windows") {
     assert(count(FixtureJson, QuakeConfig()) == 3)
     assert(count(FixtureJson, QuakeConfig(maxAgeMinutes = 525600.0)) == 5)
@@ -74,45 +141,72 @@ class QuakeSnapshotSpec extends AnyFunSuite {
 
   test("non-ASCII localities, null magnitude/depth, mmi outside one or " +
     "both dictionaries") {
-    val body = collection(
-      feature(1, "-1", "5 km north of Ōtaki"),
-      feature(2, "0", "Whakatāne — \\\"offshore\\\" 🌊", magnitude = "null"),
-      feature(3, "10", "Ōamaru\\\\coast", depth = "null"),
-      feature(4, "11", "東 of Kaikōura", magnitude = "null", depth = "null"),
-      feature(5, "12", "Te Anau"),
-      feature(6, "6", "Rotorua"))
-    assert(count(body, QuakeConfig()) == 6)
+    assert(count(oddValues, QuakeConfig()) == 6)
   }
 
   test("fields of the wrong type read as null, as PERMISSIVE mode does") {
-    val body = collection(
-      feature(1, "\"x\"", "Ōtaki"),
-      feature(2, "5", "Whakatāne", depth = "\"3.2\""),
-      feature(3, "4", "Te Anau", coordinates = "\"n/a\""),
-      feature(4, "\"x\"", "Rotorua", depth = "\"3.2\"", coordinates = "\"n/a\""),
-      feature(5, "7", "Kaikōura"))
-    assert(count(body, QuakeConfig()) == 5)
+    assert(count(wrongTypes, QuakeConfig()) == 5)
   }
 
   test("a null quality keeps the feature, as JS does (`null !== 'deleted'`)") {
-    val body = collection(
-      feature(1, "5", "Ōtaki").replace(""""quality":"best"""", """"quality":null"""),
-      feature(2, "5", "Rotorua").replace(""""quality":"best"""", """"quality":"deleted""""))
-    val cfg = QuakeConfig(maxAgeMinutes = 525600.0)
-    val (json, n) = assertSameSnapshot(body, cfg)
+    val (json, n) = assertSameSnapshot(nullQuality, OneYear)
     assert(n == 1)
     assert(json.contains(""""id":"earthquake-2026p10001""""), json)
   }
 
   test("a short coordinates array reads its missing elements as null, as " +
     "JS writes `undefined` in an array") {
-    val body = collection(
-      feature(1, "5", "Ōtaki", coordinates = "[174.2]"),
-      feature(2, "5", "Rotorua", coordinates = "[]"))
-    val (json, n) = assertSameSnapshot(body, QuakeConfig(maxAgeMinutes = 525600.0))
+    val (json, n) = assertSameSnapshot(shortCoordinates, OneYear)
     assert(n == 2)
     assert(json.contains(""""coordinates":[174.2,null,-10.5]"""), json)
     assert(json.contains(""""coordinates":[null,null,-10.5]"""), json)
+  }
+
+  test("control characters in a locality are escaped as Spark's JSON writer " +
+    "escapes them") {
+    val (json, n) = assertSameSnapshot(controlCharacters, OneYear)
+    assert(n == 2)
+    assert(json.contains("\"locality\":\"Ōtaki\\u0001bell\""), json)
+    assert(json.contains("\"locality\":\"Rotorua\\tinland\\n\\u001Fend\""), json)
+  }
+
+  test("NaN and infinite magnitudes and depths are written as Spark writes " +
+    "them, and render as JS renders them") {
+    val (json, n) = assertSameSnapshot(nonFinite, OneYear)
+    assert(n == 3)
+    assert(json.contains(""""magnitude":"NaN""""), json)
+    assert(json.contains(""""coordinates":[171.25,-41.5,"-Infinity"]"""), json)
+    Seq("MNaN Ōtaki", "MInfinity Rotorua", "M-Infinity Te Anau")
+      .foreach(c => assert(json.contains(s""""callsign":"$c""""), c))
+    assert(json.contains("Depth: -Infinity km"), json)
+    val bare = intercept[RuntimeException](QuakePipeline.prepare(spark, OneYear)
+      .snapshotWithIds(spark, nonFinite.replace("\"NaN\"", "NaN"), FixtureNowMs))
+    assert(bare.getMessage.startsWith("Failed to parse data"), bare.getMessage)
+  }
+
+  test("a null coordinate element is written as null") {
+    val (json, _) = assertSameSnapshot(nullCoordinate, OneYear)
+    assert(json.contains(""""coordinates":[174.2,null,-10.5]"""), json)
+    assert(json.contains(""""coordinates":[null,-41.5,-10.5]"""), json)
+  }
+
+  test("a session with ignoreNullFields=false writes null fields as null") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.jsonGenerator.ignoreNullFields", "false")
+    val body = collection(
+      feature(1, "null", "Ōtaki", magnitude = "null", coordinates = "[174.2,null]"))
+    val (json, n) = assertSameSnapshot(body, OneYear, s = s)
+    assert(n == 1)
+    assert(json.contains(""""magnitude":null,"mmi":null,"""), json)
+  }
+
+  test("magnitude 1.295 and depth 2.15 render as JS toFixed renders them") {
+    // node: (1.295).toFixed(1) is 1.3, (1.295).toFixed(2) is 1.29 and
+    // (2.15).toFixed(1) is 2.1; the JVM's %.2f and %.1f give 1.30 and 2.2
+    val (json, _) = assertSameSnapshot(toFixedTies, OneYear)
+    assert(json.contains(""""callsign":"M1.3 Ōtaki""""), json)
+    assert(json.contains("\"remarks\":\"Magnitude: 1.29\\nMMI: 5\\n"), json)
+    assert(json.contains("\\nDepth: 2.1 km\\nInformation Quality: best\""), json)
   }
 
   test("timeAgo minute, hour and day boundaries between two run clocks") {
@@ -163,6 +257,17 @@ class QuakeSnapshotSpec extends AnyFunSuite {
     assert(e.getMessage.contains("Range"), e.getMessage)
   }
 
+  test("prepare refuses a feature struct holding a type the JSON writer " +
+    "does not write") {
+    val rows = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      GeoNetFeatureSchema.add(StructField("now", LongType, nullable = false)))
+    val query = rows.select(struct((col("now") > 0).as("late")).as("feature"),
+        col("properties.publicID").as("id"))
+      .queryExecution.optimizedPlan
+    val e = intercept[IllegalStateException](PreparedSnapshot(spark, query, Map.empty))
+    assert(e.getMessage.contains("no JSON writer for BOOLEAN"), e.getMessage)
+  }
+
   test("the prepared plan hoists one run constant, `stale`") {
     val (constants, _) =
       PreparedSnapshot.compile(QuakePipeline.snapshotQuery(spark, QuakeConfig()))
@@ -186,15 +291,20 @@ class QuakeSnapshotSpec extends AnyFunSuite {
   }
 
   test("the snapshot does not depend on the session time zone") {
-    val cfg = QuakeConfig(maxAgeMinutes = 525600.0)
-    val (utc, _) = assertSameSnapshot(FixtureJson, cfg)
+    val (utc, _) = assertSameSnapshot(FixtureJson, OneYear)
     // FIXTURES.md: stale is now + 5 min in UTC; event #1 is 11:30 NZST
     assert(utc.contains(""""stale":"2026-08-07T00:05:00.000Z""""))
     assert(utc.contains("07/08/2026, 11:30 NZST"))
-    Seq("Pacific/Auckland", "America/Los_Angeles").foreach { tz =>
+    val sessions = Seq("Pacific/Auckland", "America/Los_Angeles").map { tz =>
       val s = spark.newSession()
       s.conf.set("spark.sql.session.timeZone", tz)
-      assert(assertSameSnapshot(FixtureJson, cfg, s = s)._1 == utc, tz)
+      tz -> s
+    }
+    cases.foreach { case (name, body, cfg) =>
+      val (json, _) = assertSameSnapshot(body, cfg)
+      sessions.foreach { case (tz, s) =>
+        assert(assertSameSnapshot(body, cfg, s = s)._1 == json, s"$name in $tz")
+      }
     }
   }
 }

@@ -30,15 +30,12 @@ class StreamingRestartSpec extends AnyFunSuite {
 
   private def runDedup(ckpt: String, out: String,
       crashAtBatch: Option[Long]): Unit = {
-    val deltaPath = graft.queries.StreamingQueries.dupSpool(spark, sf)
-    val span = spark.read.parquet(deltaPath)
-      .agg(unix_millis(max(col("ts"))) - unix_millis(min(col("ts"))))
-      .head().getLong(0)
+    val spool = graft.queries.StreamingQueries.dupSpool(spark, sf)
     val q = spark.readStream
-      .schema(spark.read.parquet(deltaPath).schema)
+      .schema(spark.read.parquet(spool.dir).schema)
       .option("maxFilesPerTrigger", 1)
-      .parquet(deltaPath)
-      .withWatermark("ts", s"${span + 86400000L} milliseconds")
+      .parquet(spool.dir)
+      .withWatermark("ts", s"${spool.delayMs} milliseconds")
       .dropDuplicatesWithinWatermark("doc_id")
       .writeStream
       .option("checkpointLocation", ckpt)
