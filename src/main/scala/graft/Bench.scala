@@ -135,23 +135,15 @@ object Bench {
       "ivfpq_index_build" ->
         (() => graft.queries.SimilarityQueries.IvfPqIndexStore.ensure(spark, sfDir)),
       "posting_store_build" ->
-        (() => graft.queries.SearchQueries.PostingStore.ensure(spark, sfDir)),
-      // shared streaming spools (round-13 verdict #7): the layout is
-      // ingest-side setup shared by the streaming families — paid (or
+        (() => graft.queries.SearchQueries.PostingStore.ensure(spark, sfDir))) ++
+      // shared streaming spools: every streaming input derived from a
+      // source table is ingest-side setup — paid (or
       // fingerprint-revalidated) HERE, not inside whichever streaming
       // query happens to run first
-      "event_spool_build" ->
-        (() => graft.queries.StreamingQueries.ensureEventSpool(spark, sfDir)),
-      "late_spool_build" ->
-        (() => graft.queries.StreamingQueries.ensureLateSpool(spark, sfDir)),
-      "dup_event_spool_build" ->
-        (() => graft.queries.StreamingQueries.ensureDupEventSpool(spark, sfDir)),
-      "doc_spool_build" ->
-        (() => graft.queries.StreamingQueries.ensureDocSpool(spark, sfDir)),
-      "cdc_spool_build" ->
-        (() => graft.queries.StreamingQueries.ensureCdcSpool(spark, sfDir)),
-      "dup_spool_build" ->
-        (() => graft.queries.StreamingQueries.ensureDupSpool(spark, sfDir)))
+      graft.queries.StreamingQueries.spoolRecipes.map { r =>
+        s"${r.name}_spool_build" ->
+          (() => graft.queries.StreamingQueries.ensureSpool(spark, sfDir, r))
+      }
     val setupTimes: Seq[(String, Double, Either[String, String])] =
       setups.map { case (name, run) =>
         val t0 = System.nanoTime()

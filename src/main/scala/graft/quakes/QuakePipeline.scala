@@ -221,22 +221,24 @@ object QuakePipeline {
     val timeLocal = nzLocal(eventTs, now)
     val staleIso = toIso(timestamp_millis(now + lit(5L * 60 * 1000)))
 
+    // A template literal prints a null field as `null`
+    def orNull(x: Column): Column = coalesce(x, lit("null"))
+
     // P2/P9 numbers: JS toFixed, which rounds the exact binary value. A
     // missing number prints `null`; JS's toFixed throws on it instead,
     // which the run does not reproduce yet
-    def toFixed(x: Column, digits: Int): Column =
-      coalesce(jsToFixed(x, digits), lit("null"))
+    def toFixed(x: Column, digits: Int): Column = orNull(jsToFixed(x, digits))
 
     // P9 (task.ts:233-242): 8 formatted lines joined with '\n'
     val remarks = concat_ws("\n",
       concat(lit("Magnitude: "), toFixed(p("magnitude"), 2)),
-      concat(lit("MMI: "), p("mmi").cast("string")),
+      concat(lit("MMI: "), orNull(p("mmi").cast("string"))),
       concat(lit("Intensity: "), intensity),
-      concat(lit("Location: "), p("locality")),
+      concat(lit("Location: "), orNull(p("locality"))),
       concat(lit("Time (UTC): "), p("time")),
       concat(lit("Time (NZ): "), timeLocal),
       concat(lit("Depth: "), toFixed(p("depth"), 1), lit(" km")),
-      concat(lit("Information Quality: "), p("quality")))
+      concat(lit("Information Quality: "), orNull(p("quality"))))
 
     filtered.select(
       // P1 (task.ts:213)
@@ -245,7 +247,7 @@ object QuakePipeline {
       struct(
         // P2 (task.ts:216) — a null locality prints `null`, as in JS
         concat(lit("M"), toFixed(p("magnitude"), 1), lit(" "),
-          coalesce(p("locality"), lit("null"))).as("callsign"),
+          orNull(p("locality"))).as("callsign"),
         lit(CotType).as("type"),
         icon.as("icon"),
         p("time").as("time"),

@@ -63,21 +63,32 @@ object StreamingQueries {
 
   // ------------------------------------------------------ shared spools
 
-  /** Shared, content-addressed streaming SPOOLS (round-13 verdict #7):
-    * every events-family streaming query used to rewrite its own
-    * `_delta` copy of the events table on EVERY run — per bench
-    * warmup, per timed run, per repeat — pure harness setup measured
-    * as engine time, growing with each streaming query added. A spool
-    * is one (source table, layout recipe) directory built once per
-    * process and reused across processes via a fingerprint sidecar
-    * (the RunStore discipline in miniature: recipe version + source
-    * listing digest, output manifest verified before reuse, build
-    * race serialized on the store build lock). Checkpoints and sinks
-    * stay PER QUERY — only the immutable input layout is shared.
-    * File mtimes are stamped from a FIXED epoch, so the file-source
-    * processing order (mtime, then path) survives reuse bit-for-bit.
+  /** Shared, content-addressed streaming SPOOLS. The rule: every
+    * streaming input that is a pure function of one source table is a
+    * spool, declared as one [[SpoolRecipe]], and never a per-run
+    * `_delta` write. A spool is one (source table, layout recipe)
+    * directory, built once per process and reused across processes
+    * through a fingerprint sidecar: the recipe version plus the listing
+    * digest of the table it derives from, with the output manifest
+    * checked before reuse and the build race serialized on the store
+    * build lock (the RunStore discipline in miniature). Data files
+    * whose order matters are stamped from the fixed [[SpoolStampBase]],
+    * so the file source's processing order (mtime, then path) survives
+    * reuse bit for bit, and the span scalars consumers need ride the
+    * sidecar, so no consumer re-scans the source for them. Checkpoints
+    * and sinks stay per query ([[runDirs]]): only the immutable input
+    * layout is shared.
+    *
+    * Any change to what a recipe writes (rows, files, order, stamps or
+    * metadata) bumps its version string, so every spool the old recipe
+    * built is rebuilt on its next access instead of served.
+    *
+    * The one exception is q103: its input grows by one file per "day"
+    * between two resumed runs of one checkpoint, and that growing spool
+    * is the store lifecycle the query tests, so it stays a per-run dir.
     */
-  private final case class SpoolInfo(dir: String, meta: Map[String, String])
+  private[graft] final case class SpoolInfo(dir: String,
+      meta: Map[String, String])
 
   private val spoolMemo =
     new java.util.concurrent.ConcurrentHashMap[String, SpoolInfo]()
@@ -87,7 +98,7 @@ object StreamingQueries {
   /** Fixed stamp base (2020-09-13T12:26:40Z): deterministic across
     * builds so a reused spool replays the same micro-batch order.
     */
-  private val SpoolStampBase = 1600000000000L
+  private[graft] val SpoolStampBase = 1600000000000L
 
   private val SpoolSidecar = "_graft_spool.properties"
 
@@ -114,67 +125,82 @@ object StreamingQueries {
       .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
       .sorted.mkString(";")
 
-  /** Build-or-reuse the spool `name` for source dir `d`. `build` writes
-    * the data files into the (fresh) dir — stamping order itself where
-    * order matters — and returns metadata to persist (span scalars, so
-    * consumers never re-scan the source for them).
+  /** One spool: `name` keys its dir and memo entry, `version` is the
+    * recipe version, and `sourceFile` (under the table dir `d`) is the
+    * table whose listing the fingerprint digests. `build(s, d, dir)`
+    * writes the data files into the fresh `dir` (stamping order itself
+    * where order matters) and returns the metadata the sidecar carries.
+    * Applying the recipe builds or reuses the spool for `d`.
     */
-  private def ensureSpool(s: SparkSession, d: String, name: String,
-      version: String, sourceFile: String)(
-      build: String => Map[String, String]): SpoolInfo =
-    spoolMemo.computeIfAbsent(s"$name|$d", _ => {
-      val base = RunStore.tableName(s"graft_spool_$name", d)
-      val dir = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), base + "_delta")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val src = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(d), sourceFile)
-      val fp = s"$version|${spoolListingDigest(fs, src)}"
-      def readSidecar(): Option[SpoolInfo] =
-        try {
-          val p = new org.apache.hadoop.fs.Path(dir, SpoolSidecar)
-          if (!fs.exists(p)) None
-          else {
-            val in = fs.open(p)
-            val props = new java.util.Properties()
-            try props.load(in) finally in.close()
-            import scala.jdk.CollectionConverters._
-            val ok = Option(props.getProperty("fingerprint")).contains(fp) &&
-              Option(props.getProperty("manifest"))
-                .contains(spoolManifest(fs, dir))
-            if (!ok) None
-            else Some(SpoolInfo(dir.toString,
-              props.stringPropertyNames().asScala.toSeq
-                .filter(_.startsWith("meta."))
-                .map(k => k.stripPrefix("meta.") -> props.getProperty(k))
-                .toMap))
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
-      readSidecar().map { info =>
-        spoolModes.put(s"$name|$d", "reused"); info
-      }.getOrElse {
-        RunStore.withBuildLock(s, base) {
-          readSidecar().map { info =>
-            spoolModes.put(s"$name|$d", "reused"); info
-          }.getOrElse {
-            spoolModes.put(s"$name|$d", "built")
-            if (fs.exists(dir)) fs.delete(dir, true)
-            val meta = build(dir.toString)
-            val props = new java.util.Properties()
-            props.setProperty("fingerprint", fp)
-            props.setProperty("manifest", spoolManifest(fs, dir))
-            meta.foreach { case (k, v) => props.setProperty(s"meta.$k", v) }
-            val tmp = new org.apache.hadoop.fs.Path(dir, SpoolSidecar + ".tmp")
-            val out = fs.create(tmp, true)
-            try props.store(out, "graft spool") finally out.close()
-            org.apache.hadoop.fs.FileContext
-              .getFileContext(dir.toUri, fs.getConf)
-              .rename(tmp, new org.apache.hadoop.fs.Path(dir, SpoolSidecar),
-                org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-            SpoolInfo(dir.toString, meta)
+  private[graft] final class SpoolRecipe(val name: String, version: String,
+      sourceFile: String)(
+      build: (SparkSession, String, String) => Map[String, String]) {
+    def apply(s: SparkSession, d: String): SpoolInfo =
+      spoolMemo.computeIfAbsent(s"$name|$d", key => {
+        val base = RunStore.tableName(s"graft_spool_$name", d)
+        val dir = new org.apache.hadoop.fs.Path(
+          s.conf.get("spark.sql.warehouse.dir"), base + "_delta")
+        val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+        val src = new org.apache.hadoop.fs.Path(
+          new org.apache.hadoop.fs.Path(d), sourceFile)
+        val fp = s"$version|${spoolListingDigest(fs, src)}"
+        def readSidecar(): Option[SpoolInfo] =
+          try {
+            val p = new org.apache.hadoop.fs.Path(dir, SpoolSidecar)
+            if (!fs.exists(p)) None
+            else {
+              val in = fs.open(p)
+              val props = new java.util.Properties()
+              try props.load(in) finally in.close()
+              import scala.jdk.CollectionConverters._
+              val ok = Option(props.getProperty("fingerprint")).contains(fp) &&
+                Option(props.getProperty("manifest"))
+                  .contains(spoolManifest(fs, dir))
+              if (!ok) None
+              else Some(SpoolInfo(dir.toString,
+                props.stringPropertyNames().asScala.toSeq
+                  .filter(_.startsWith("meta."))
+                  .map(k => k.stripPrefix("meta.") -> props.getProperty(k))
+                  .toMap))
+            }
+          } catch { case scala.util.control.NonFatal(_) => None }
+        readSidecar().map { info =>
+          spoolModes.put(key, "reused"); info
+        }.getOrElse {
+          RunStore.withBuildLock(s, base) {
+            readSidecar().map { info =>
+              spoolModes.put(key, "reused"); info
+            }.getOrElse {
+              spoolModes.put(key, "built")
+              if (fs.exists(dir)) fs.delete(dir, true)
+              val meta = build(s, d, dir.toString)
+              val props = new java.util.Properties()
+              props.setProperty("fingerprint", fp)
+              props.setProperty("manifest", spoolManifest(fs, dir))
+              meta.foreach { case (k, v) => props.setProperty(s"meta.$k", v) }
+              val tmp = new org.apache.hadoop.fs.Path(dir, SpoolSidecar + ".tmp")
+              val out = fs.create(tmp, true)
+              try props.store(out, "graft spool") finally out.close()
+              org.apache.hadoop.fs.FileContext
+                .getFileContext(dir.toUri, fs.getConf)
+                .rename(tmp, new org.apache.hadoop.fs.Path(dir, SpoolSidecar),
+                  org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+              SpoolInfo(dir.toString, meta)
+            }
           }
         }
-      }
+      })
+  }
+
+  /** An order-free spool: `frame` as three round-robin files with the
+    * write's own mtimes and no metadata. Its consumers' results do not
+    * depend on the order the files arrive in.
+    */
+  private def roundRobinRecipe(name: String, version: String,
+      sourceFile: String)(frame: (SparkSession, String) => DataFrame): SpoolRecipe =
+    new SpoolRecipe(name, version, sourceFile)({ (s, d, dir) =>
+      frame(s, d).repartition(3).write.parquet(dir)
+      Map.empty
     })
 
   /** Test hook: forget the spool memo so a spec can observe a fresh
@@ -184,21 +210,25 @@ object StreamingQueries {
     spoolMemo.clear(); spoolModes.clear()
   }
 
-  /** Bench-visible spool setup (the store `ensure` discipline): build
-    * or revalidate the shared spool OUTSIDE any single query's timed
-    * run, reporting how it was satisfied.
+  /** Build or revalidate `recipe`'s spool for `d` outside any single
+    * query's timed run (the store `ensure` discipline), and say how it
+    * was satisfied: `built`, `reused` (a valid sidecar from an earlier
+    * process) or `memoized` (this process already had it).
     */
-  private[graft] def ensureEventSpool(s: SparkSession, d: String): String = {
-    val before = spoolMemo.containsKey(s"events|$d")
-    eventSpool(s, d)
-    if (before) "memoized" else spoolModes.getOrDefault(s"events|$d", "built")
+  private[graft] def ensureSpool(s: SparkSession, d: String,
+      recipe: SpoolRecipe): String = {
+    val key = s"${recipe.name}|$d"
+    val before = spoolMemo.containsKey(key)
+    recipe(s, d)
+    if (before) "memoized" else spoolModes.getOrDefault(key, "built")
   }
 
-  private[graft] def ensureDocSpool(s: SparkSession, d: String): String = {
-    val before = spoolMemo.containsKey(s"docs|$d")
-    docSpool(s, d)
-    if (before) "memoized" else spoolModes.getOrDefault(s"docs|$d", "built")
-  }
+  /** Every spool, in the order Bench's untimed setup builds them. */
+  private[graft] lazy val spoolRecipes: Seq[SpoolRecipe] = Seq(
+    EventsRecipe, LateRecipe, DupEventsRecipe, DocsRecipe, CdcRecipe,
+    DupFeedRecipe, TextDeltaRecipe, MediaDeltaRecipe, EmbDeltaRecipe,
+    OrderedDocsRecipe, DisorderedDocsRecipe, ClusterDeltaRecipe,
+    PiiRecipe, MediaFixtureRecipe, AnnQueryRecipe)
 
   private val DayMs = 24L * 3600 * 1000
 
@@ -220,39 +250,53 @@ object StreamingQueries {
     def ttlMs: Long = 2 * spanMs + 2 * DayMs
   }
 
-  private[graft] def eventSpool(s: SparkSession, d: String): EventSpool = {
-    val info = ensureSpool(s, d, "events", "v1", "events.parquet") {
-      dir =>
-        val ev = graft.core.Tables.events(s, d)
-          .select(col("user_id"), col("ts"), col("event_id"),
-            col("event_type"), col("value"))
-        ev.repartition(3).write.parquet(dir)
-        val stamped = scala.collection.mutable.Set.empty[String]
-        var epoch = SpoolStampBase
+  private[graft] val EventsRecipe =
+    new SpoolRecipe("events", "v1", "events.parquet")({ (s, d, dir) =>
+      val ev = graft.core.Tables.events(s, d)
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"), col("value"))
+      ev.repartition(3).write.parquet(dir)
+      val stamped = scala.collection.mutable.Set.empty[String]
+      var epoch = SpoolStampBase
+      stampOrder(s, dir, stamped, epoch)
+      val span = ev.agg(min(col("ts")), max(col("ts")), min(col("user_id")))
+        .head()
+      val (minTs, maxTs) =
+        (span.getTimestamp(0).getTime, span.getTimestamp(1).getTime)
+      val sentinelUid = span.getLong(2) - 1
+      val spanMs = maxTs - minTs
+      val sentinel1 = maxTs + (2 * spanMs + 2 * DayMs) +
+        (spanMs + DayMs) + DayMs
+      Seq(sentinel1, sentinel1 + DayMs).foreach { ts =>
+        s.createDataFrame(java.util.List.of(
+            org.apache.spark.sql.Row(sentinelUid,
+              new java.sql.Timestamp(ts), Long.MaxValue, "sentinel", 0.0)),
+          ev.schema)
+          .write.mode("append").parquet(dir)
+        epoch += 1000
         stampOrder(s, dir, stamped, epoch)
-        val span = ev.agg(min(col("ts")), max(col("ts")), min(col("user_id")))
-          .head()
-        val (minTs, maxTs) =
-          (span.getTimestamp(0).getTime, span.getTimestamp(1).getTime)
-        val sentinelUid = span.getLong(2) - 1
-        val spanMs = maxTs - minTs
-        val sentinel1 = maxTs + (2 * spanMs + 2 * DayMs) +
-          (spanMs + DayMs) + DayMs
-        Seq(sentinel1, sentinel1 + DayMs).foreach { ts =>
-          s.createDataFrame(java.util.List.of(
-              org.apache.spark.sql.Row(sentinelUid,
-                new java.sql.Timestamp(ts), Long.MaxValue, "sentinel", 0.0)),
-            ev.schema)
-            .write.mode("append").parquet(dir)
-          epoch += 1000
-          stampOrder(s, dir, stamped, epoch)
-        }
-        Map("min_ts" -> minTs.toString, "max_ts" -> maxTs.toString,
-          "sentinel_uid" -> sentinelUid.toString)
-    }
+      }
+      Map("min_ts" -> minTs.toString, "max_ts" -> maxTs.toString,
+        "sentinel_uid" -> sentinelUid.toString)
+    })
+
+  private[graft] def eventSpool(s: SparkSession, d: String): EventSpool = {
+    val info = EventsRecipe(s, d)
     EventSpool(info.dir, info.meta("min_ts").toLong,
       info.meta("max_ts").toLong, info.meta("sentinel_uid").toLong)
   }
+
+  /** The shared CDC change-feed spool: q175's derived
+    * `(doc_id, seq, op, new_text)` feed as three files — order-free
+    * (q180's compaction fold is a commutative, idempotent argmax
+    * monoid, so no stamping or sentinels are needed).
+    */
+  private[graft] val CdcRecipe =
+    roundRobinRecipe("cdc", "v1", "documents.parquet")(
+      (s, d) => IngestQueries.cdcFeed(s, d))
+
+  private[graft] def cdcSpool(s: SparkSession, d: String): String =
+    CdcRecipe(s, d).dir
 
   /** The shared DOCUMENTS spool: the superset projection `(doc_id,
     * lang, n_chars, text)` as three files — the order-free ingest
@@ -261,38 +305,14 @@ object StreamingQueries {
     * Consumers project the columns their machine reads, like the
     * events spool.
     */
-  /** The shared CDC change-feed spool: q175's derived
-    * `(doc_id, seq, op, new_text)` feed as three files — order-free
-    * (q180's compaction fold is a commutative, idempotent argmax
-    * monoid, so no stamping or sentinels are needed).
-    */
-  private[graft] def cdcSpool(s: SparkSession, d: String): String =
-    ensureSpool(s, d, "cdc", "v1", "documents.parquet") { dir =>
-      IngestQueries.cdcFeed(s, d)
-        .repartition(3).write.parquet(dir)
-      Map.empty
-    }.dir
-
-  private[graft] def ensureCdcSpool(s: SparkSession, d: String): String = {
-    val before = spoolMemo.containsKey(s"cdc|$d")
-    cdcSpool(s, d)
-    if (before) "memoized" else spoolModes.getOrDefault(s"cdc|$d", "built")
-  }
-
-  private[graft] def ensureDupSpool(s: SparkSession, d: String): String = {
-    val before = spoolMemo.containsKey(s"dupfeed|$d")
-    dupSpool(s, d)
-    if (before) "memoized"
-    else spoolModes.getOrDefault(s"dupfeed|$d", "built")
-  }
-
-  private[graft] def docSpool(s: SparkSession, d: String): String =
-    ensureSpool(s, d, "docs", "v2", "documents.parquet") { dir =>
+  private[graft] val DocsRecipe =
+    roundRobinRecipe("docs", "v2", "documents.parquet") { (s, d) =>
       graft.core.Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-        .repartition(3).write.parquet(dir)
-      Map.empty
-    }.dir
+    }
+
+  private[graft] def docSpool(s: SparkSession, d: String): String =
+    DocsRecipe(s, d).dir
 
   /** Stream shuffle-partition count: env-overridable for measurement
     * and deployment sizing (SPARK_GRAFT_STREAM_PARTITIONS), default 4.
@@ -444,20 +464,18 @@ object StreamingQueries {
         .start().awaitTermination()
     }
 
-  /** Spool `delta` to parquet (`nFiles` files), stream it back one file
-    * per trigger under AvailableNow, admit each micro-batch against
-    * `storeBands` via `admit`, write verdicts to a batchId-keyed
-    * parquet sink, and return the sink's contents ordered by
-    * `orderCol`.
+  /** Stream `delta`'s spool back one file per trigger under
+    * AvailableNow, admit each micro-batch against `storeBands` via
+    * `admit`, write verdicts to a batchId-keyed parquet sink, and
+    * return the sink's contents ordered by `orderCol`.
     */
   private def runAdmission(s: SparkSession, tag: String, d: String,
-      delta: DataFrame, storeBands: => DataFrame,
+      delta: SpoolRecipe, storeBands: => DataFrame,
       admit: DataFrame => DataFrame => DataFrame,
-      orderCol: String, nFiles: Int = 3): DataFrame = {
-    val Seq(deltaPath, ckpt, outPath) =
-      runDirs(s, s"graft_stream_$tag", d)("_delta", "_ckpt", "_out")
-    delta.repartition(nFiles).write.parquet(deltaPath)
-    val stream = spoolStream(s, deltaPath, 1) // spec-pinned batch count
+      orderCol: String): DataFrame = {
+    val Seq(ckpt, outPath) =
+      runDirs(s, s"graft_stream_$tag", d)("_ckpt", "_out")
+    val stream = spoolStream(s, delta(s, d).dir, 1) // spec-pinned batch count
     withFewShufflePartitions(s) {
       graft.streaming.StreamingAdmission.admissionQuery(
           stream, storeBands, ckpt,
@@ -468,6 +486,18 @@ object StreamingQueries {
     readSink(s, outPath).orderBy(orderCol)
   }
 
+  /** Every tenth document or vector: the delta side of q97-q99 and
+    * q109, the store side being the rest.
+    */
+  private def isTenth(c: Column): Column = c % 10 === 0
+
+  /** q97's delta spool: q64's delta documents as `(doc_id, text)`. */
+  private[graft] val TextDeltaRecipe =
+    roundRobinRecipe("text_delta", "v1", "documents.parquet") { (s, d) =>
+      graft.core.Tables.documents(s, d).filter(isTenth(col("doc_id")))
+        .select(col("doc_id"), col("text"))
+    }
+
   /** q97 — STREAMING text admission: q64's delta (`doc_id % 10 = 0`)
     * arrives as three parquet-file micro-batches and is admitted
     * against the corpus band store per batch
@@ -477,14 +507,17 @@ object StreamingQueries {
     * Oracle: q64's SQL verbatim — streaming through the real engine
     * must union to exactly the batch verdicts.
     */
-  val q97StreamingTextAdmission: Q = (s, d) => {
-    val isDelta = col("doc_id") % 10 === 0
-    runAdmission(s, "text", d,
-      graft.core.Tables.documents(s, d).filter(isDelta)
-        .select(col("doc_id"), col("text")),
-      BandStore.bands(s, d).filter(!isDelta),
+  val q97StreamingTextAdmission: Q = (s, d) =>
+    runAdmission(s, "text", d, TextDeltaRecipe,
+      BandStore.bands(s, d).filter(!isTenth(col("doc_id"))),
       graft.streaming.StreamingAdmission.admitBatch, "doc_id")
-  }
+
+  /** q98's delta spool: q91's asset delta as `(doc_id, mime, payload)`. */
+  private[graft] val MediaDeltaRecipe =
+    roundRobinRecipe("media_delta", "v1", "documents.parquet") { (s, d) =>
+      graft.multimodal.MediaPipeline.toMediaRows(
+        graft.core.Tables.documents(s, d).filter(isTenth(col("doc_id")))).toDF()
+    }
 
   /** q98 — STREAMING media admission: q91's asset delta streamed as
     * micro-batches of `(doc_id, mime, payload)` rows, each batch
@@ -492,15 +525,18 @@ object StreamingQueries {
     * ([[graft.streaming.StreamingAdmission.admitMediaBatch]]) against
     * the corpus profile store's bands. Oracle: q91's SQL verbatim.
     */
-  val q98StreamingMediaAdmission: Q = (s, d) => {
-    val isDelta = col("doc_id") % 10 === 0
-    runAdmission(s, "media", d,
-      graft.multimodal.MediaPipeline.toMediaRows(
-        graft.core.Tables.documents(s, d).filter(isDelta)).toDF(),
+  val q98StreamingMediaAdmission: Q = (s, d) =>
+    runAdmission(s, "media", d, MediaDeltaRecipe,
       MultimodalQueries.mediaBandFrameFromSig(
-        MediaSignatureStore.signatures(s, d).filter(!isDelta)),
+        MediaSignatureStore.signatures(s, d).filter(!isTenth(col("doc_id")))),
       graft.streaming.StreamingAdmission.admitMediaBatch, "doc_id")
-  }
+
+  /** q99's delta spool: q95's vector delta as `(doc_id, embedding)`. */
+  private[graft] val EmbDeltaRecipe =
+    roundRobinRecipe("emb_delta", "v1", "embeddings.parquet") { (s, d) =>
+      graft.core.Tables.embeddings(s, d).filter(isTenth(col("vec_id")))
+        .select(col("vec_id").as("doc_id"), col("embedding"))
+    }
 
   /** q99 — STREAMING embedding admission: q95's vector delta streamed
     * as micro-batches of `(doc_id, embedding)` rows through the
@@ -512,14 +548,10 @@ object StreamingQueries {
     * is the wide `vec_id`-bucketed hyperplane table. Oracle: q95's SQL
     * verbatim.
     */
-  val q99StreamingEmbeddingAdmission: Q = (s, d) => {
-    val isDelta = col("vec_id") % 10 === 0
-    runAdmission(s, "emb", d,
-      graft.core.Tables.embeddings(s, d).filter(isDelta)
-        .select(col("vec_id").as("doc_id"), col("embedding")),
-      SimilarityQueries.EmbBandStore.table(s, d).filter(!isDelta),
+  val q99StreamingEmbeddingAdmission: Q = (s, d) =>
+    runAdmission(s, "emb", d, EmbDeltaRecipe,
+      SimilarityQueries.EmbBandStore.table(s, d).filter(!isTenth(col("vec_id"))),
       graft.streaming.StreamingAdmission.admitEmbeddingBatch, "vec_id")
-  }
 
   /** q100 — STREAMING time-series pattern top-k: q96 run through the
     * real stateful engine. The whole events table is spooled as THREE
@@ -572,6 +604,97 @@ object StreamingQueries {
       .limit(20)
   }
 
+  /** The near-dup streams' documents: `(doc_id, text, ts)` with `ts`
+    * synthesized monotone in doc_id, so event-time order is id order.
+    */
+  private def nearDupDocs(s: SparkSession, d: String): DataFrame =
+    graft.core.Tables.documents(s, d)
+      .select(col("doc_id"), col("text"),
+        timestamp_millis(col("doc_id") + lit(NearDupEpochMs)).as("ts"))
+
+  private val NearDupEpochMs = 1700000000000L
+
+  private val HourMs = 3600L * 1000
+
+  /** A near-dup spool's dir and the doc_id span of `documents`, which
+    * ride the sidecar. `delayMs` is a watermark delay past the whole
+    * span and `ttlMs` outlives it, so nothing is late-dropped or
+    * expires mid-stream.
+    */
+  private[graft] final case class NearDupSpool(dir: String, minId: Long,
+      spanMs: Long) {
+    def delayMs: Long = spanMs + HourMs
+    def ttlMs: Long = 2 * delayMs
+  }
+
+  private def nearDupSpool(info: SpoolInfo): NearDupSpool =
+    NearDupSpool(info.dir, info.meta("min_id").toLong,
+      info.meta("span_ms").toLong)
+
+  /** q101's ORDERED spool: [[nearDupDocs]] as three doc_id-range files
+    * written in sequence, stamped `SpoolStampBase + 1000·k` for k = 1..3
+    * so the file source's processing order is id order.
+    */
+  private[graft] val OrderedDocsRecipe =
+    new SpoolRecipe("online", "v1", "documents.parquet")({ (s, d, dir) =>
+      val docs = nearDupDocs(s, d)
+      val Seq(lo, hi) = docs
+        .agg(min(col("doc_id")), max(col("doc_id")))
+        .head().toSeq.map(_.asInstanceOf[Long])
+      val (a, b) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
+      // sequential range writes with explicitly stamped, strictly
+      // increasing modification times (see stampOrder): processing order
+      // IS ownership order, so it must never fall to a path tie-break
+      val stamped = scala.collection.mutable.Set.empty[String]
+      var epoch = SpoolStampBase
+      Seq(col("doc_id") <= a,
+          col("doc_id") > a && col("doc_id") <= b,
+          col("doc_id") > b)
+        .foreach { range =>
+          docs.filter(range).coalesce(1).write.mode("append").parquet(dir)
+          epoch += 1000
+          stampOrder(s, dir, stamped, epoch)
+        }
+      Map("min_id" -> lo.toString, "span_ms" -> (hi - lo).toString)
+    })
+
+  private[graft] def orderedDocsSpool(s: SparkSession, d: String): NearDupSpool =
+    nearDupSpool(OrderedDocsRecipe(s, d))
+
+  /** q102's DISORDERED spool: [[nearDupDocs]] as three round-robin files
+    * (every file carries documents from all over the id range), stamped
+    * `SpoolStampBase`, then two far-future sentinel documents (doc_ids
+    * below every real id, unique texts so they collide with nothing) in
+    * two trailing files stamped `SpoolStampBase + 1000·k`, k = 1, 2.
+    */
+  private[graft] val DisorderedDocsRecipe =
+    new SpoolRecipe("disorder", "v1", "documents.parquet")({ (s, d, dir) =>
+      val docs = nearDupDocs(s, d)
+      val Seq(lo, hi) = docs
+        .agg(min(col("doc_id")), max(col("doc_id")))
+        .head().toSeq.map(_.asInstanceOf[Long])
+      val sp = NearDupSpool(dir, lo, hi - lo)
+      docs.repartition(3).write.parquet(dir)
+      val stamped = scala.collection.mutable.Set.empty[String]
+      var epoch = SpoolStampBase
+      stampOrder(s, dir, stamped, epoch)
+      val sentinel1 = NearDupEpochMs + hi + sp.ttlMs + sp.delayMs + HourMs
+      Seq((lo - 1, sentinel1, "graft q102 flush sentinel one"),
+          (lo - 2, sentinel1 + HourMs, "graft q102 flush sentinel two"))
+        .foreach { case (id, ts, text) =>
+          s.createDataFrame(java.util.List.of(
+              org.apache.spark.sql.Row(id, text, new java.sql.Timestamp(ts))),
+              docs.schema)
+            .write.mode("append").parquet(dir)
+          epoch += 1000
+          stampOrder(s, dir, stamped, epoch)
+        }
+      Map("min_id" -> lo.toString, "span_ms" -> (hi - lo).toString)
+    })
+
+  private[graft] def disorderedDocsSpool(s: SparkSession, d: String): NearDupSpool =
+    nearDupSpool(DisorderedDocsRecipe(s, d))
+
   /** q101 — STREAMING online near-dup (tier ONE of the two-tier dedup
     * design, driver-visible): every arriving document is checked
     * ONLINE against everything seen inside the state horizon by
@@ -581,9 +704,9 @@ object StreamingQueries {
     * within-horizon engine those tiers deliberately don't cover.
     *
     * Ownership in the online tier is ARRIVAL order, so the spool
-    * realizes the oracle's total order: documents are written as
-    * three doc_id-range files, sequentially (the file source
-    * processes files in modification-time order), with `ts`
+    * realizes the oracle's total order: [[OrderedDocsRecipe]] holds
+    * the documents as three doc_id-range files stamped in id order
+    * (the file source processes files in modification-time order), with `ts`
     * synthesized monotone in doc_id — making the online owner of
     * every bucket its minimum doc_id, which is exactly what the SQL
     * oracle computes. The horizon TTL is derived from the observed
@@ -596,39 +719,18 @@ object StreamingQueries {
     * ordered-spool requirement entirely.
     */
   val q101StreamingOnlineNeardup: Q = (s, d) => {
-    val Seq(deltaPath, ckpt, outPath) =
-      runDirs(s, "graft_stream_online", d)("_delta", "_ckpt", "_out")
-    val docs = graft.core.Tables.documents(s, d)
-      .select(col("doc_id"), col("text"),
-        timestamp_millis(col("doc_id") + lit(1700000000000L)).as("ts"))
-    val Seq(lo, hi) = docs
-      .agg(min(col("doc_id")), max(col("doc_id")))
-      .head().toSeq.map(_.asInstanceOf[Long])
-    val spanMs = hi - lo
-    val hourMs = 3600L * 1000
-    val (a, b) = (lo + spanMs / 3, lo + 2 * spanMs / 3)
-    // sequential range writes with explicitly stamped, strictly
-    // increasing modification times (see stampOrder): processing order
-    // IS ownership order, so it must never fall to a path tie-break.
-    // SpoolFilesPerTrigger=2 below is order-safe: the kernel sorts each
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_online", d)("_ckpt", "_out")
+    val sp = orderedDocsSpool(s, d)
+    // SpoolFilesPerTrigger=2 is order-safe: the kernel sorts each
     // batch's claims by (ts, doc_id) and ts is monotone in doc_id, so
     // merging ADJACENT ranges into one micro-batch replays exactly the
     // sequential ownership order (r21; oracle re-proven)
-    val stamped = scala.collection.mutable.Set.empty[String]
-    var epoch = System.currentTimeMillis()
-    Seq(col("doc_id") <= a,
-        col("doc_id") > a && col("doc_id") <= b,
-        col("doc_id") > b)
-      .foreach { range =>
-        docs.filter(range).coalesce(1).write.mode("append").parquet(deltaPath)
-        epoch += 1000
-        stampOrder(s, deltaPath, stamped, epoch)
-      }
-    val stream = spoolStream(s, deltaPath, SpoolFilesPerTrigger)
+    val stream = spoolStream(s, sp.dir, SpoolFilesPerTrigger)
     drainToSink(s, ckpt, outPath) {
       graft.streaming.StreamingNearDup
-        .collisions(stream, s"${spanMs + hourMs} milliseconds",
-          stateTtlMs = 2 * spanMs + 2 * hourMs)
+        .collisions(stream, s"${sp.delayMs} milliseconds",
+          stateTtlMs = sp.ttlMs)
     }
     readSink(s, outPath)
       .select(col("doc_id"), col("band"), col("dup_of"))
@@ -639,7 +741,8 @@ object StreamingQueries {
     * (round-9 verdict #2: q101's online tier required arrival order =
     * ownership order; this is the watermark-finality twin that
     * doesn't). The same documents-with-synthesized-`ts` frame is
-    * spooled as three ROUND-ROBIN parquet files — every micro-batch
+    * spooled ([[DisorderedDocsRecipe]]) as three ROUND-ROBIN parquet
+    * files — every micro-batch
     * carries documents from all over the id range — and ownership is
     * decided by [[graft.streaming.StreamingNearDup
     * .finalityCollisions]]: a bucket's owner is its minimum
@@ -659,44 +762,16 @@ object StreamingQueries {
     * `AvailableNow` terminates.
     */
   val q102StreamingNeardupDisordered: Q = (s, d) => {
-    val Seq(deltaPath, ckpt, outPath) =
-      runDirs(s, "graft_stream_disorder", d)("_delta", "_ckpt", "_out")
-    val epochMs = 1700000000000L
-    val docs = graft.core.Tables.documents(s, d)
-      .select(col("doc_id"), col("text"),
-        timestamp_millis(col("doc_id") + lit(epochMs)).as("ts"))
-    val Seq(lo, hi) = docs
-      .agg(min(col("doc_id")), max(col("doc_id")))
-      .head().toSeq.map(_.asInstanceOf[Long])
-    val spanMs = hi - lo
-    val hourMs = 3600L * 1000
-    val delayMs = spanMs + hourMs
-    val ttlMs = 2 * spanMs + 2 * hourMs
-    // maximally disordered: round-robin repartition scatters the id
-    // range across all three files
-    docs.repartition(3).write.parquet(deltaPath)
-    val stamped = scala.collection.mutable.Set.empty[String]
-    var epoch = System.currentTimeMillis()
-    stampOrder(s, deltaPath, stamped, epoch)
-    val maxTsMs = epochMs + hi
-    val sentinel1 = maxTsMs + ttlMs + delayMs + hourMs
-    Seq((lo - 1, sentinel1, "graft q102 flush sentinel one"),
-        (lo - 2, sentinel1 + hourMs, "graft q102 flush sentinel two"))
-      .foreach { case (id, ts, text) =>
-        s.createDataFrame(java.util.List.of(
-            org.apache.spark.sql.Row(id, text, new java.sql.Timestamp(ts))),
-            docs.schema)
-          .write.mode("append").parquet(deltaPath)
-        epoch += 1000
-        stampOrder(s, deltaPath, stamped, epoch)
-      }
-    val stream = spoolStream(s, deltaPath, 1) // spec-pinned batch count
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_disorder", d)("_ckpt", "_out")
+    val sp = disorderedDocsSpool(s, d)
+    val stream = spoolStream(s, sp.dir, 1) // spec-pinned batch count
     drainToSink(s, ckpt, outPath) {
       graft.streaming.StreamingNearDup
-        .finalityCollisions(stream, s"$delayMs milliseconds", ttlMs)
+        .finalityCollisions(stream, s"${sp.delayMs} milliseconds", sp.ttlMs)
     }
     readSink(s, outPath)
-      .filter(col("doc_id") >= lit(lo))
+      .filter(col("doc_id") >= lit(sp.minId))
       .select(col("doc_id"), col("band"), col("dup_of"))
       .orderBy(col("doc_id"), col("band"))
   }
@@ -832,10 +907,16 @@ object StreamingQueries {
         .write.mode("overwrite").parquet(s"$labelsRoot/batch_$id")
     }
 
+  /** q109's delta spool: the delta's doc ids. */
+  private[graft] val ClusterDeltaRecipe =
+    roundRobinRecipe("cluster_delta", "v1", "documents.parquet") { (s, d) =>
+      graft.core.Tables.documents(s, d).filter(isTenth(col("doc_id")))
+        .select(col("doc_id"))
+    }
+
   val q109StreamingClusterMaintenance: Q = (s, d) => {
-    val Seq(deltaPath, ckpt, edgesPath, labelsPath) =
-      runDirs(s, "graft_stream_clm", d)("_delta", "_ckpt", "_edges", "_labels")
-    val isDelta = (c: org.apache.spark.sql.Column) => c % 10 === 0
+    val Seq(ckpt, edgesPath, labelsPath) =
+      runDirs(s, "graft_stream_clm", d)("_ckpt", "_edges", "_labels")
     // ONE evaluation of the LSH pair chain feeds both the edge
     // materialization and the base-label components (dup-proportional
     // persist, released by the enclosing per-query scope)
@@ -846,14 +927,12 @@ object StreamingQueries {
     // materialize the dup-proportional artifacts ONCE: the delta's
     // incident edges (what the batches consume) and the base labels
     // (the persisted cluster store the maintenance starts from)
-    pairs.filter(isDelta(col("src")) || isDelta(col("dst")))
+    pairs.filter(isTenth(col("src")) || isTenth(col("dst")))
       .write.parquet(edgesPath)
     graft.operators.ConnectedComponents.labels(s,
-        pairs.filter(!isDelta(col("src")) && !isDelta(col("dst"))))
+        pairs.filter(!isTenth(col("src")) && !isTenth(col("dst"))))
       .write.parquet(s"$labelsPath/base")
-    graft.core.Tables.documents(s, d).filter(isDelta(col("doc_id")))
-      .select(col("doc_id")).repartition(3).write.parquet(deltaPath)
-    val stream = spoolStream(s, deltaPath, 1) // spec-pinned batch count
+    val stream = spoolStream(s, ClusterDeltaRecipe(s, d).dir, 1) // spec-pinned batch count
     var lastBatch = -1L
     withFewShufflePartitions(s) {
       val q = stream.writeStream
@@ -877,6 +956,13 @@ object StreamingQueries {
       .orderBy("doc_id")
   }
 
+  /** q114's spool: the q112 fixture, documents with synthetic contacts. */
+  private[graft] val PiiRecipe =
+    roundRobinRecipe("pii", "v1", "documents.parquet") { (s, d) =>
+      DedupTextQueries.piiAugmented(
+        graft.core.Tables.documents(s, d).select(col("doc_id"), col("text")))
+    }
+
   /** q114 — STREAMING PII scrub through the real engine (round-11
     * verdict #4): [[DedupTextQueries.piiScrub]] is stream-ready by
     * construction (a pure map-side projection —
@@ -899,12 +985,9 @@ object StreamingQueries {
     * pass — same operator, same verdicts, by the hash gate's proof.
     */
   val q114StreamingPiiScrub: Q = (s, d) => {
-    val Seq(deltaPath, ckpt, outPath) =
-      runDirs(s, "graft_stream_pii", d)("_delta", "_ckpt", "_out")
-    DedupTextQueries.piiAugmented(
-        graft.core.Tables.documents(s, d).select(col("doc_id"), col("text")))
-      .repartition(3).write.parquet(deltaPath)
-    val stream = spoolStream(s, deltaPath, 1) // spec-pinned batch count
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_pii", d)("_ckpt", "_out")
+    val stream = spoolStream(s, PiiRecipe(s, d).dir, 1) // spec-pinned batch count
     withFewShufflePartitions(s) {
       stream.writeStream
         .option("checkpointLocation", ckpt)
@@ -954,6 +1037,12 @@ object StreamingQueries {
     readSink(s, outPath).orderBy("doc_id")
   }
 
+  /** q117's spool: the mixed all-real media fixture. */
+  private[graft] val MediaFixtureRecipe =
+    roundRobinRecipe("media_fixture", "v1", "documents.parquet") { (s, d) =>
+      MultimodalQueries.mixedRealMedia(s, d).toDF()
+    }
+
   /** q117 — DECODE-ON-INGEST through the real engine: the round-12
     * content-dispatched codec path (q116) run per checkpointed
     * micro-batch. The mixed ALL-REAL media fixture
@@ -978,11 +1067,9 @@ object StreamingQueries {
     */
   val q117StreamingMediaDecode: Q = (s, d) => {
     import s.implicits._
-    val Seq(deltaPath, ckpt, outPath) =
-      runDirs(s, "graft_stream_dec", d)("_delta", "_ckpt", "_out")
-    MultimodalQueries.mixedRealMedia(s, d).toDF()
-      .repartition(3).write.parquet(deltaPath)
-    val stream = spoolStream(s, deltaPath, 1) // spec-pinned batch count
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_dec", d)("_ckpt", "_out")
+    val stream = spoolStream(s, MediaFixtureRecipe(s, d).dir, 1) // spec-pinned batch count
     withFewShufflePartitions(s) {
       stream.writeStream
         .option("checkpointLocation", ckpt)
@@ -998,6 +1085,12 @@ object StreamingQueries {
     }
     readSink(s, outPath).orderBy("doc_id")
   }
+
+  /** q123's spool: the q122 query set as `(q_id, q_emb)`. */
+  private[graft] val AnnQueryRecipe =
+    roundRobinRecipe("ann_queries", "v1", "embeddings.parquet") { (s, d) =>
+      SimilarityQueries.annQuerySet(graft.core.Tables.embeddings(s, d))
+    }
 
   /** q123 — streaming ANN SERVE: query vectors arriving on a stream,
     * answered per checkpointed micro-batch against the STORED
@@ -1023,11 +1116,9 @@ object StreamingQueries {
     * shortlist.
     */
   val q123StreamingAnnServe: Q = (s, d) => {
-    val Seq(deltaPath, ckpt, outPath) =
-      runDirs(s, "graft_stream_ann", d)("_delta", "_ckpt", "_out")
-    SimilarityQueries.annQuerySet(graft.core.Tables.embeddings(s, d))
-      .repartition(3).write.parquet(deltaPath)
-    val stream = spoolStream(s, deltaPath, 1) // spec-pinned batch count
+    val Seq(ckpt, outPath) =
+      runDirs(s, "graft_stream_ann", d)("_ckpt", "_out")
+    val stream = spoolStream(s, AnnQueryRecipe(s, d).dir, 1) // spec-pinned batch count
     withFewShufflePartitions(s) {
       stream.writeStream
         .option("checkpointLocation", ckpt)
@@ -1886,8 +1977,8 @@ object StreamingQueries {
     def delayMs: Long = spanMs + DayMs
   }
 
-  private[graft] def dupSpool(s: SparkSession, d: String): DupSpool = {
-    val info = ensureSpool(s, d, "dupfeed", "v2", "documents.parquet") { dir =>
+  private[graft] val DupFeedRecipe =
+    new SpoolRecipe("dupfeed", "v2", "documents.parquet")({ (s, d, dir) =>
       val feed = graft.core.Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"),
           timestamp_millis(lit(DupFeedEpoch0) + col("doc_id") * 1000L)
@@ -1904,7 +1995,10 @@ object StreamingQueries {
       val span = feed.agg(unix_millis(min(col("ts"))), unix_millis(max(col("ts"))))
         .head()
       Map("min_ts" -> span.getLong(0).toString, "max_ts" -> span.getLong(1).toString)
-    }
+    })
+
+  private[graft] def dupSpool(s: SparkSession, d: String): DupSpool = {
+    val info = DupFeedRecipe(s, d)
     DupSpool(info.dir, info.meta("min_ts").toLong, info.meta("max_ts").toLong)
   }
 
@@ -2188,44 +2282,40 @@ object StreamingQueries {
   private[graft] final case class LateSpool(dir: String, midDay: Long,
       maxDay: Long)
 
+  private[graft] val LateRecipe =
+    new SpoolRecipe("late", "v1", "events.parquet")({ (s, d, dir) =>
+      val ev = graft.core.Tables.events(s, d)
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"), col("value"))
+      val day = expr("unix_millis(ts) div 86400000")
+      val b = ev.agg(min(day).as("dmin"), max(day).as("dmax"),
+        min(col("user_id")).as("umin")).head()
+      val (dmin, dmax, umin) = (b.getLong(0), b.getLong(1), b.getLong(2))
+      val midDay = (dmin + dmax) / 2
+      val stamped = scala.collection.mutable.Set.empty[String]
+      var epoch = SpoolStampBase
+      def append(df: org.apache.spark.sql.DataFrame): Unit = {
+        df.repartition(1).write.mode("append").parquet(dir)
+        epoch += 1000
+        stampOrder(s, dir, stamped, epoch)
+      }
+      append(ev.filter(day >= midDay))
+      append(ev.filter(day < midDay && col("user_id") % 2 === 0))
+      append(ev.filter(day < midDay && col("user_id") % 2 === 1))
+      Seq(dmax + 10, dmax + 11).foreach { sd =>
+        append(s.createDataFrame(java.util.List.of(
+            org.apache.spark.sql.Row(umin - 1,
+              new java.sql.Timestamp(sd * DayMs), Long.MaxValue,
+              "sentinel", 0.0)),
+          ev.schema))
+      }
+      Map("mid_day" -> midDay.toString, "max_day" -> dmax.toString)
+    })
+
   private[graft] def lateSpool(s: SparkSession, d: String): LateSpool = {
-    val info = ensureSpool(s, d, "late", "v1", "events.parquet") {
-      dir =>
-        val ev = graft.core.Tables.events(s, d)
-          .select(col("user_id"), col("ts"), col("event_id"),
-            col("event_type"), col("value"))
-        val day = expr("unix_millis(ts) div 86400000")
-        val b = ev.agg(min(day).as("dmin"), max(day).as("dmax"),
-          min(col("user_id")).as("umin")).head()
-        val (dmin, dmax, umin) = (b.getLong(0), b.getLong(1), b.getLong(2))
-        val midDay = (dmin + dmax) / 2
-        val stamped = scala.collection.mutable.Set.empty[String]
-        var epoch = SpoolStampBase
-        def append(df: org.apache.spark.sql.DataFrame): Unit = {
-          df.repartition(1).write.mode("append").parquet(dir)
-          epoch += 1000
-          stampOrder(s, dir, stamped, epoch)
-        }
-        append(ev.filter(day >= midDay))
-        append(ev.filter(day < midDay && col("user_id") % 2 === 0))
-        append(ev.filter(day < midDay && col("user_id") % 2 === 1))
-        Seq(dmax + 10, dmax + 11).foreach { sd =>
-          append(s.createDataFrame(java.util.List.of(
-              org.apache.spark.sql.Row(umin - 1,
-                new java.sql.Timestamp(sd * DayMs), Long.MaxValue,
-                "sentinel", 0.0)),
-            ev.schema))
-        }
-        Map("mid_day" -> midDay.toString, "max_day" -> dmax.toString)
-    }
+    val info = LateRecipe(s, d)
     LateSpool(info.dir, info.meta("mid_day").toLong,
       info.meta("max_day").toLong)
-  }
-
-  private[graft] def ensureLateSpool(s: SparkSession, d: String): String = {
-    val before = spoolMemo.containsKey(s"late|$d")
-    lateSpool(s, d)
-    if (before) "memoized" else spoolModes.getOrDefault(s"late|$d", "built")
   }
 
   /** The at-least-once DUPLICATED events feed for q209: the events
@@ -2237,51 +2327,46 @@ object StreamingQueries {
     * sentinel's watermark-advancing row. Span scalars ride the sidecar
     * exactly like [[eventSpool]].
     */
+  private[graft] val DupEventsRecipe =
+    new SpoolRecipe("dupevents", "v1", "events.parquet")({ (s, d, dir) =>
+      val ev = graft.core.Tables.events(s, d)
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"), col("value"))
+      val k = lit(1) +
+        (mdUniform("dupe:", col("event_id")) < 0.4).cast("int") +
+        ((mdUniform("dupe:", col("event_id")) < 0.4) &&
+          (mdUniform("dupe2:", col("event_id")) < 0.5)).cast("int")
+      ev.withColumn("copy", explode(sequence(lit(1), k))).drop("copy")
+        .repartition(3).write.parquet(dir)
+      val stamped = scala.collection.mutable.Set.empty[String]
+      var epoch = SpoolStampBase
+      stampOrder(s, dir, stamped, epoch)
+      val span = ev.agg(min(col("ts")), max(col("ts")), min(col("user_id")))
+        .head()
+      val (minTs, maxTs) =
+        (span.getTimestamp(0).getTime, span.getTimestamp(1).getTime)
+      val sentinelUid = span.getLong(2) - 1
+      val spanMs = maxTs - minTs
+      val sentinel1 = maxTs + (2 * spanMs + 2 * DayMs) +
+        (spanMs + DayMs) + DayMs
+      Seq((sentinel1, Long.MaxValue), (sentinel1 + DayMs, Long.MaxValue - 1))
+        .foreach { case (ts, eid) =>
+          s.createDataFrame(java.util.List.of(
+              org.apache.spark.sql.Row(sentinelUid,
+                new java.sql.Timestamp(ts), eid, "sentinel", 0.0)),
+            ev.schema)
+            .write.mode("append").parquet(dir)
+          epoch += 1000
+          stampOrder(s, dir, stamped, epoch)
+        }
+      Map("min_ts" -> minTs.toString, "max_ts" -> maxTs.toString,
+        "sentinel_uid" -> sentinelUid.toString)
+    })
+
   private[graft] def dupEventSpool(s: SparkSession, d: String): EventSpool = {
-    val info = ensureSpool(s, d, "dupevents", "v1", "events.parquet") {
-      dir =>
-        val ev = graft.core.Tables.events(s, d)
-          .select(col("user_id"), col("ts"), col("event_id"),
-            col("event_type"), col("value"))
-        val k = lit(1) +
-          (mdUniform("dupe:", col("event_id")) < 0.4).cast("int") +
-          ((mdUniform("dupe:", col("event_id")) < 0.4) &&
-            (mdUniform("dupe2:", col("event_id")) < 0.5)).cast("int")
-        ev.withColumn("copy", explode(sequence(lit(1), k))).drop("copy")
-          .repartition(3).write.parquet(dir)
-        val stamped = scala.collection.mutable.Set.empty[String]
-        var epoch = SpoolStampBase
-        stampOrder(s, dir, stamped, epoch)
-        val span = ev.agg(min(col("ts")), max(col("ts")), min(col("user_id")))
-          .head()
-        val (minTs, maxTs) =
-          (span.getTimestamp(0).getTime, span.getTimestamp(1).getTime)
-        val sentinelUid = span.getLong(2) - 1
-        val spanMs = maxTs - minTs
-        val sentinel1 = maxTs + (2 * spanMs + 2 * DayMs) +
-          (spanMs + DayMs) + DayMs
-        Seq((sentinel1, Long.MaxValue), (sentinel1 + DayMs, Long.MaxValue - 1))
-          .foreach { case (ts, eid) =>
-            s.createDataFrame(java.util.List.of(
-                org.apache.spark.sql.Row(sentinelUid,
-                  new java.sql.Timestamp(ts), eid, "sentinel", 0.0)),
-              ev.schema)
-              .write.mode("append").parquet(dir)
-            epoch += 1000
-            stampOrder(s, dir, stamped, epoch)
-          }
-        Map("min_ts" -> minTs.toString, "max_ts" -> maxTs.toString,
-          "sentinel_uid" -> sentinelUid.toString)
-    }
+    val info = DupEventsRecipe(s, d)
     EventSpool(info.dir, info.meta("min_ts").toLong,
       info.meta("max_ts").toLong, info.meta("sentinel_uid").toLong)
-  }
-
-  private[graft] def ensureDupEventSpool(s: SparkSession, d: String): String = {
-    val before = spoolMemo.containsKey(s"dupevents|$d")
-    dupEventSpool(s, d)
-    if (before) "memoized"
-    else spoolModes.getOrDefault(s"dupevents|$d", "built")
   }
 
   /** q209 — AT-LEAST-ONCE COMPOSITION: the engine's stateful dedup

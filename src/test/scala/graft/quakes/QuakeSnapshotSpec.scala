@@ -200,6 +200,27 @@ class QuakeSnapshotSpec extends AnyFunSuite {
     assert(json.contains(""""magnitude":null,"mmi":null,"""), json)
   }
 
+  test("a null mmi, locality or quality prints null on its remarks line, as " +
+    "a JS template literal does: the remarks always have 8 lines") {
+    val base = collection(feature(1, "5", "Ōtaki"))
+    Seq(
+      (base.replace(""""mmi":5""", """"mmi":null"""), "MMI: null"),
+      (base.replace(""""locality":"Ōtaki"""", """"locality":null"""),
+        "Location: null"),
+      (base.replace(""""quality":"best"""", """"quality":null"""),
+        "Information Quality: null"))
+      .foreach { case (body, line) =>
+        assert(body != base, line)
+        val (json, n) = assertSameSnapshot(body, OneYear)
+        assert(n == 1)
+        val remarks = """"remarks":"((?:[^"\\]|\\.)*)"""".r
+          .findFirstMatchIn(json).map(_.group(1)).getOrElse(fail(json))
+          .split("""\\n""", -1).toSeq
+        assert(remarks.size == 8, json)
+        assert(remarks.contains(line), json)
+      }
+  }
+
   test("magnitude 1.295 and depth 2.15 render as JS toFixed renders them") {
     // node: (1.295).toFixed(1) is 1.3, (1.295).toFixed(2) is 1.29 and
     // (2.15).toFixed(1) is 2.1; the JVM's %.2f and %.1f give 1.30 and 2.2

@@ -166,7 +166,7 @@ class StreamingQueriesSpec extends AnyFunSuite {
     val warehouse =
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     Seq(
-      ("pii", Seq("_delta", "_ckpt", "_out"),
+      ("pii", Seq("_ckpt", "_out"),
         StreamingQueries.q114StreamingPiiScrub),
       ("funnel", Seq("_ckpt", "_state"), StreamingQueries.q144StreamingFunnel))
       .foreach { case (tag, suffixes, query) =>
@@ -253,8 +253,7 @@ class StreamingQueriesSpec extends AnyFunSuite {
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
     val labelsRoot = new org.apache.hadoop.fs.Path(warehouse,
       RunStore.tableName("graft_stream_clm", sf) + "_labels")
-    val deltaPath = new org.apache.hadoop.fs.Path(warehouse,
-      RunStore.tableName("graft_stream_clm", sf) + "_delta").toString
+    val deltaPath = StreamingQueries.ClusterDeltaRecipe(spark, sf).dir
     val stream = spark.readStream
       .schema(spark.read.parquet(deltaPath).schema)
       .option("maxFilesPerTrigger", 1)
